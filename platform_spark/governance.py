@@ -178,7 +178,8 @@ class ResultCache:
             return value
 
     def lookup(self, sql: str, now: datetime | None) -> tuple[str, object]:
-        """Three-state probe: ('rows', (rows, schema)) when materialized,
+        """Three-state probe: ('rows', value) when materialized (the
+        engine stores a LocalRelation DataFrame of the collected rows),
         ('warm', None) when this statement repeated within the TTL (caller
         should collect + put), ('cold', None) on first sight (caller returns
         the lazy plan untouched).

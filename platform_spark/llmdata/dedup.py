@@ -903,10 +903,11 @@ def build_dedup_index(
     )
     hashes = reps.select("content_hash", F.col("rep_id"))
     rep_docs = reps.select(F.col("rep_id").alias("doc_id"), "__t")
-    # ONE tokenize+shingle+hash pass for all three derived tables (r15):
+    # ONE tokenize+shingle+hash plan for all three derived tables (r15):
     # signatures, the verify shingle index, and the sizes aggregate all
-    # read the cached combined (sh, h1, h2) table instead of shingling
-    # rep_docs twice
+    # derive from the combined (sh, h1, h2) frame instead of shingling
+    # rep_docs separately. The frame is uncached (r16, see above), so
+    # each consumer re-evaluates it unless Spark reuses the exchange
     hashed = _hashed_shingles(rep_docs, "__t", "doc_id", k)
     sig = hashed.groupBy("doc_id").agg(*_sig_aggs(num_perm))
     buckets = _band_buckets(sig, num_perm, bands)

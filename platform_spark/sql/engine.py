@@ -64,10 +64,17 @@ class KafSqlEngine:
         self._now = now
 
     # ------------------------------------------------------------------
-    def collect_with_timeout(self, df: DataFrame, timeout: float | None = None):
+    def collect_with_timeout(
+        self,
+        df: DataFrame,
+        timeout: float | None = None,
+        action=None,
+    ):
         """Run an action under the engine's query timeout (the analogue of
         the reference's per-query context deadline, server.go:472-478):
-        the job group is cancelled when the deadline passes.
+        the job group is cancelled when the deadline passes. ``action``
+        (default: ``df.collect()``) is called with ``df``; the result
+        cache passes a JVM-side collect so rows never cross into Python.
 
         The canceller is a REAPER LOOP, not a one-shot timer:
         ``cancelJobGroup`` only cancels jobs that are ACTIVE when it is
@@ -81,9 +88,10 @@ class KafSqlEngine:
         import threading
         import uuid
 
+        action = action or (lambda d: d.collect())
         timeout = timeout if timeout is not None else self.opt.timeout_seconds
         if timeout is None:
-            return df.collect()
+            return action(df)
         sc = self.spark.sparkContext
         group = f"kafsql-{uuid.uuid4().hex[:8]}"
         sc.setJobGroup(group, "kafsql query", interruptOnCancel=True)
@@ -103,7 +111,7 @@ class KafSqlEngine:
         )
         reaper.start()
         try:
-            return df.collect()
+            return action(df)
         except Exception as e:  # noqa: BLE001
             # only report a timeout if OUR reaper actually cancelled the
             # job; genuine failures (analysis errors, OOM, source errors)
@@ -152,6 +160,11 @@ class KafSqlEngine:
             else:
                 self.spark.conf.unset(name)
                 value = "<unset>"
+            # memoized topic frames were analyzed under the old confs
+            # (session time zone, ANSI casts)
+            clear_frames = getattr(self.catalog, "clear_frames", None)
+            if clear_frames is not None:
+                clear_frames()
         else:
             raise GovernanceError(f"unknown setting {name!r}")
         # settings affect compiled results — cached rows are now stale
@@ -194,23 +207,33 @@ class KafSqlEngine:
             if cacheable:
                 state, hit = self.cache.lookup(statement, self._now)
                 if state == "rows":
-                    # serve materialized rows as a local relation: no Spark
-                    # job runs for a cache hit (result_cache.go:26-110)
-                    rows, schema = hit
-                    return self.spark.createDataFrame(rows, schema)
+                    # the cached frame is a JVM LocalRelation: collecting
+                    # it runs no Spark job (result_cache.go:26-110)
+                    return hit
             df = self.compiler.compile(q)
             if cacheable and state == "warm":
                 # collect-on-repeat: the statement recurred within a TTL
                 # window, so materialize ROWS now (the reference caches rows,
                 # not plans — result_cache.go); one-shot queries stay lazy
-                # and never pay a driver round-trip
-                rows = self.collect_with_timeout(df)
+                # and never pay a driver round-trip. The rows stay in the
+                # JVM: collectAsList + createDataFrame(List<Row>, schema)
+                # builds a LocalRelation without a Python round trip or
+                # the parallelize job a Python createDataFrame runs
+                jrows = self.collect_with_timeout(
+                    df, action=lambda d: d._jdf.collectAsList()
+                )
+                local = DataFrame(
+                    self.spark._jsparkSession.createDataFrame(
+                        jrows, df._jdf.schema()
+                    ),
+                    self.spark,
+                )
                 self.cache.put(
                     self.cache.key(statement, self._now),
-                    (rows, df.schema),
-                    n_rows=len(rows),
+                    local,
+                    n_rows=jrows.size(),
                 )
-                return self.spark.createDataFrame(rows, df.schema)
+                return local
             return df
 
     # -- governance -----------------------------------------------------

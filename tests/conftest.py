@@ -10,6 +10,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
+def jobs_run(spark) -> int:
+    """Spark jobs submitted so far in this session (job ids are dense)."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
 def pytest_configure(config):
     config.addinivalue_line("markers", "slow: spawns a subprocess JVM")
 

@@ -4,12 +4,14 @@ TestHandleAggregateGroupBy:1393, TestHandleSelectRejectsUnbounded:658)."""
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timedelta
 
 import pytest
 
 from platform_spark.errors import ValidationError
+from platform_spark.sql import parser
 from platform_spark.sql.engine import KafSqlEngine
+from tests.conftest import SF_DIR, jobs_run
 
 NOW = datetime(2024, 1, 31)
 
@@ -246,11 +248,7 @@ def test_result_cache_serves_rows_without_scan(engine):
     engine.sql(stmt)
     hit = engine.sql(stmt)
     plan = hit._jdf.queryExecution().executedPlan().toString()
-    assert (
-        "LocalTableScan" in plan
-        or "LocalRelation" in plan
-        or "ExistingRDD" in plan  # createDataFrame(rows) local relation
-    )
+    assert "LocalTableScan" in plan or "LocalRelation" in plan
     assert "FileScan" not in plan and "parquet" not in plan.lower()
     assert hit.count() == 10
 
@@ -432,3 +430,102 @@ def test_key_in_cap_only_when_unbounded(engine):
         engine.sql(
             f"SELECT _offset FROM events WHERE _key IN ({over}) SCAN FULL"
         )
+
+
+def test_result_cache_hit_runs_no_job_and_keeps_rows_exact(
+    catalog, spark, monkeypatch
+):
+    # raw (unrendered) projections: binary _key/_value (as .kfs topics
+    # carry them), TimestampType _ts and NULLs must survive the JVM-side
+    # collect and the LocalRelation round trip bit for bit
+    import pyspark.sql.functions as F
+
+    from platform_spark.sql.compiler import CompilerOptions
+    from platform_spark.sql.engine import EngineOptions
+
+    topic = catalog.topic
+
+    def binary_topic(name, with_schema_columns=True):
+        return topic(name, with_schema_columns).withColumns(
+            {c: F.col(c).cast("binary") for c in ("_key", "_value")}
+        )
+
+    monkeypatch.setattr(catalog, "topic", binary_topic)
+    opts = EngineOptions()
+    opts.compiler = CompilerOptions(render_text=False)
+    eng = KafSqlEngine(catalog, options=opts, now=NOW)
+    stmt = (
+        "SELECT _partition, _offset, _ts, _key, _value, _headers, amount, "
+        "flag, depth FROM events WHERE _partition = 0 LAST 30d"
+    )
+    key = lambda r: (r["_partition"], r["_offset"])  # noqa: E731
+    cold = sorted(eng.sql(stmt).collect(), key=key)
+    # the whole partition fits under the default LIMIT: a fixed row set
+    assert 50 < len(cold) < eng.opt.compiler.default_limit
+    assert any(r["amount"] is None for r in cold)
+    assert any(r["_key"] is None for r in cold)
+    assert all(isinstance(r["_value"], (bytes, bytearray)) for r in cold)
+    assert isinstance(cold[0]["_ts"], datetime)
+    # collect-on-repeat: the rows are collected inside sql(), and the
+    # frame it returns is already local
+    warm_df = eng.sql(stmt)
+    j0 = jobs_run(spark)
+    warm = warm_df.collect()
+    assert jobs_run(spark) == j0
+    j0 = jobs_run(spark)
+    hit = eng.sql(stmt)
+    rows = hit.collect()
+    assert jobs_run(spark) == j0
+    assert sorted(warm, key=key) == cold
+    assert sorted(rows, key=key) == cold
+    assert hit.schema == eng.compiler.compile(parser.parse(stmt)).schema
+
+
+def test_result_cache_warm_collect_honours_timeout(catalog, spark, monkeypatch):
+    # the JVM-side warm-path collect runs under the same reaper: a slow
+    # repeat is cancelled with GovernanceError and nothing is cached
+    import pyspark.sql.functions as F
+
+    from platform_spark.errors import GovernanceError
+
+    eng = KafSqlEngine(catalog, now=NOW)
+    eng.opt.timeout_seconds = 1.0
+    stmt = "SELECT _offset FROM events LAST 7d LIMIT 3"
+    eng.sql(stmt)  # cold: lazy, marks the statement warm
+    slow = (
+        spark.range(2_000_000)
+        .crossJoin(spark.range(40_000).withColumnRenamed("id", "id2"))
+        .agg(F.sum(F.col("id") * F.col("id2")))
+    )
+    monkeypatch.setattr(eng.compiler, "compile", lambda q: slow)
+    with pytest.raises(GovernanceError, match="timeout"):
+        eng.sql(stmt)
+    assert not eng.cache._data
+
+
+def test_dotted_set_drops_memoized_topic_frames(spark, tmp_path):
+    # topic frames are analyzed under the session time zone: after a
+    # dotted SET the memo must rebuild them, so a date-typed schema
+    # column parses in the new zone
+    from platform_spark.topics import TopicCatalog
+
+    cat = TopicCatalog(spark, SF_DIR)
+    cat.materialize("lineitem", str(tmp_path / "c"))
+    eng = KafSqlEngine(cat, now=NOW)
+
+    def first_ship(frame):
+        return frame.orderBy("_partition", "_offset").first()["l_shipdate"]
+
+    before = cat.topic("lineitem")
+    utc_ship = first_ship(before)
+    try:
+        eng.sql("SET spark.sql.session.timeZone = America/New_York")
+        after = cat.topic("lineitem")
+        assert after is not before
+        # local midnight in New York is 4-5 h after UTC midnight
+        assert first_ship(after) - utc_ship in (
+            timedelta(hours=4), timedelta(hours=5)
+        )
+    finally:
+        eng.sql("SET spark.sql.session.timeZone = UTC")
+    assert cat.topic("lineitem") is not after

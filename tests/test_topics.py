@@ -15,7 +15,7 @@ from platform_spark.topics import (
     assign_partition_offsets,
     materialize_envelope,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_run
 
 
 @pytest.fixture(scope="module")
@@ -148,3 +148,124 @@ def test_assign_offsets_null_chunk_key_fails_loudly(spark):
     )
     with pytest.raises(ValueError, match="NULL for 5 of 10 rows"):
         assign_partition_offsets(df, "CAST(_key AS BIGINT)", ("_key",), 4)
+
+
+def test_byte_string_as_bytes_matches_spark_suffixes():
+    """Byte-size confs parse every suffix Spark's byteStringAs takes,
+    `t` and `p` included; anything else raises."""
+    from platform_spark.topics import byte_string_as_bytes
+
+    cases = {
+        "4096": 4096,
+        "128b": 128,
+        "64k": 64 << 10,
+        "64KB": 64 << 10,
+        "128m": 128 << 20,
+        " 128MB ": 128 << 20,
+        "1G": 1 << 30,
+        "1g": 1 << 30,
+        "2t": 2 << 40,
+        "2TB": 2 << 40,
+        "1p": 1 << 50,
+        "1pb": 1 << 50,
+    }
+    for text, n in cases.items():
+        assert byte_string_as_bytes(text) == n, text
+    for bad in ("", "m", "1.5g", "12x", "-1m", "128 m", "1 gigabyte"):
+        with pytest.raises(ValueError):
+            byte_string_as_bytes(bad)
+
+
+def test_assign_offsets_rejects_bool_partition(spark):
+    """bool is an int subclass: a boolean `_partition` must fail the
+    exact-int guard instead of rendering `True` into the VALUES list."""
+    from pyspark.sql import functions as F
+
+    df = spark.range(10).select(
+        F.col("id").alias("k"), (F.col("id") % 2 == 0).alias("_partition")
+    )
+    with pytest.raises(ValueError, match="non-int chunk/partition/base"):
+        assign_partition_offsets(df, "k", ("k",), 2)
+
+
+@pytest.fixture(scope="module")
+def mat_catalog(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("topic_memo"))
+    cat = TopicCatalog(spark, SF_DIR)
+    cat.materialize("events", root)
+    return cat
+
+
+def test_materialized_topic_frame_is_memoized(spark, mat_catalog):
+    """A repeated topic() on a materialized topic reuses the finished
+    frame: no schema-inference job, and the same rows as a fresh read."""
+    import os
+
+    first = mat_catalog.topic("events")
+    path = mat_catalog._materialized["events"]
+    os.utime(path, (0, 0))
+    j0 = jobs_run(spark)
+    again = mat_catalog.topic("events")
+    assert jobs_run(spark) == j0
+    assert again is first
+    # the memo hit still marks the version dir as in use (prune grace)
+    assert os.stat(path).st_mtime > 0
+    # the schema-less frame is a separate entry
+    bare = mat_catalog.topic("events", with_schema_columns=False)
+    assert bare.columns == list(IMPLICIT_COLUMNS)
+    fresh = TopicCatalog(spark, SF_DIR)
+    fresh._materialized["events"] = path
+    key = lambda r: (r["_partition"], r["_offset"])  # noqa: E731
+    assert sorted(again.collect(), key=key) == sorted(
+        fresh.topic("events").collect(), key=key
+    )
+
+
+def test_materialize_into_new_root_drops_topic_memo(spark, mat_catalog, tmp_path):
+    old = mat_catalog.topic("events")
+    new_root = str(tmp_path / "moved")
+    out = mat_catalog.materialize("events", new_root)
+    assert not any(k[0] == "events" and k[1] != out for k in mat_catalog._frames)
+    moved = mat_catalog.topic("events")
+    assert moved is not old
+    assert moved.inputFiles() and all(
+        new_root in f for f in moved.inputFiles()
+    )
+
+
+def test_topic_memo_survives_concurrent_clears(mat_catalog):
+    """Threads racing topic() against clear_frames() always get a frame,
+    and afterwards the memo holds at most one frame per key."""
+    import sys
+    import threading
+
+    errors, frames = [], []
+
+    def worker(i):
+        try:
+            for j in range(6):
+                if (i + j) % 3 == 0:
+                    mat_catalog.clear_frames("events")
+                frames.append(
+                    mat_catalog.topic("events", with_schema_columns=j % 2 == 0)
+                )
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(frames) == 48
+    path = mat_catalog._materialized["events"]
+    cfg = mat_catalog.configs["events"]
+    assert set(mat_catalog._frames) <= {("events", path, w, cfg) for w in (True, False)}
+    assert mat_catalog.topic("events") is mat_catalog.topic("events")
