@@ -659,7 +659,7 @@ def main() -> None:
         # accumulated cache blocks that squeezed execution memory for
         # late-suite legs (the r16 baseline measured dsp 4.6 s in-suite
         # vs 1.0 s isolated). Cached legs step UP vs r15's ledger by
-        # construction — see OPTIMIZATION_r16.md.
+        # construction — see OPTIMIZATION_r17.md ("Before r17").
         spark.catalog.clearCache()
         t0 = time.time()
         fn()

@@ -28,6 +28,18 @@ def bytea_text(col: Column) -> Column:
     )
 
 
+def ts_text_sql(expr: str) -> str:
+    """SQL form of ts_text for a SQL expression."""
+    return f"date_format({expr}, '{TS_TEXT_FORMAT}')"
+
+
+def bytea_text_sql(expr: str) -> str:
+    """SQL form of bytea_text for a SQL expression (concat is NULL on a
+    NULL input; chr(92) is the backslash, whatever the session's string
+    escape rules)."""
+    return f"concat(chr(92), 'x', lower(hex(CAST({expr} AS BINARY))))"
+
+
 def duck_ts_text(expr: str) -> str:
     return f"strftime({expr}, '{TS_TEXT_FORMAT_DUCK}')"
 

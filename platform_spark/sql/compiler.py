@@ -1,12 +1,13 @@
-"""KAFSQL compiler: Query IR → PySpark DataFrame.
+"""KAFSQL compiler: Query IR → one parameterized Spark SQL plan.
 
 This replaces the reference's hand-rolled execution pipeline
 (server.go:1308-1484 handleSelect → project/sort/tail/limit,
 server.go:1762-2010 handleAggregateSelect, server.go:2281-2464
-handleJoinSelect) with a declarative DataFrame expression; Catalyst then
-provides segment pruning, predicate pushdown, column pruning, spillable
-aggregation and size-aware join strategies — everything §4 of SURVEY.md
-shows the reference hard-codes or lacks.
+handleJoinSelect) with one declarative SQL statement over named topic
+relations, analyzed once by a single JVM call (statement.py); Catalyst
+then provides segment pruning, predicate pushdown, column pruning,
+spillable aggregation and size-aware join strategies — everything §4 of
+SURVEY.md shows the reference hard-codes or lacks.
 
 Semantics parity notes (the "watch list" of SURVEY.md §7):
 - numeric coercion: SUM/AVG/MIN/MAX over JSON paths parse numeric strings
@@ -24,22 +25,23 @@ Semantics parity notes (the "watch list" of SURVEY.md §7):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, replace
+from typing import NamedTuple
 from datetime import datetime, timedelta
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from platform_spark.errors import ValidationError
 from platform_spark.functions import render
 from platform_spark.sql.ast import (
     ColumnKind,
-    JoinExpr,
     JoinExprKind,
     Query,
     SelectColumn,
 )
 from platform_spark.sql.parser import MAX_KEY_IN
+from platform_spark.sql.statement import SqlStatement, quote
 from platform_spark.topics import IMPLICIT_COLUMNS, TopicCatalog
 
 GROUP_KEY_SEP = "\x1f"
@@ -121,28 +123,36 @@ class Compiler:
         self.catalog = catalog
         self.opt = options or CompilerOptions()
         self.now = now  # pinned clock for LAST; None = wall clock
+        #: the wall clock a compile pins when `now` is None, per thread
+        self._compile_clock = threading.local()
 
     # ------------------------------------------------------------------
-    def compile(self, q: Query) -> DataFrame:
+    def compile(self, q: Query, materialize: bool = True) -> DataFrame:
+        """The statement's analyzed plan. ``materialize=False`` (EXPLAIN)
+        reads a not-yet-materialized topic through its envelope view
+        instead of writing it."""
         self._validate(q)
         # Pin the clock for the WHOLE compile: metadata pruning
-        # (_topic_frame), the row filters (_apply_time_bounds) and a
-        # join's widened right-side frame each call time_bounds(), and
-        # for LAST windows every call would otherwise take its own
-        # wall-clock `now` — pruning and filtering would disagree about
-        # rows stamped between the two instants (a row in a pruned-out
-        # file could pass the filter bound yet never be read).
-        pinned = self.now
-        if pinned is None:
-            self.now = datetime.utcnow()
+        # (_topic_frame), the row filters (_ts_conds) and a join's
+        # widened right-side frame each call time_bounds(), and for LAST
+        # windows every call would otherwise take its own wall-clock
+        # `now` — pruning and filtering would disagree about rows stamped
+        # between the two instants (a row in a pruned-out file could pass
+        # the filter bound yet never be read).
+        self._compile_clock.now = self.now or datetime.utcnow()
         try:
-            if q.is_join():
-                return self._compile_join(q)
-            if q.has_aggregates():
-                return self._compile_aggregate(q)
-            return self._compile_select(q)
+            frame_view = getattr(self.catalog, "frame_view", None)
+            with SqlStatement(self.catalog.spark, frame_view) as st:
+                src = self._scan(st, q, materialize)
+                if q.is_join():
+                    text = self._join_sql(st, q, src, materialize)
+                elif q.has_aggregates():
+                    text = self._aggregate_sql(st, q, src)
+                else:
+                    text = self._select_sql(st, q, src)
+                return st.sql(text)
         finally:
-            self.now = pinned
+            self._compile_clock.now = None
 
     # -- validation (server.go:1312-1352, 1888-1911, 2285-2299) --------
     def _validate(self, q: Query) -> None:
@@ -231,7 +241,7 @@ class Compiler:
         try:
             return bool(plans(q.topic))
         except FileNotFoundError:
-            return False  # unknown topic: scan() raises its own error
+            return False  # unknown topic: _scan() raises its own error
 
     # -- effective limit (server.go:1321-1346) --------------------------
     def effective_limit(self, q: Query) -> int:
@@ -242,36 +252,38 @@ class Compiler:
         return limit
 
     def _now(self) -> datetime:
-        return self.now if self.now is not None else datetime.utcnow()
+        pinned = getattr(self._compile_clock, "now", None) or self.now
+        return pinned or datetime.utcnow()
 
     # -- scan + row filters (P4-P7) -------------------------------------
-    def scan(self, topic: str, q: Query, apply_time: bool = True) -> DataFrame:
-        ts_min, ts_max = self.time_bounds(q) if apply_time else (None, None)
+    def _scan(self, st: SqlStatement, q: Query, materialize: bool = True) -> _Source:
+        """The query topic's relation and its exact row conditions."""
+        ts_min, ts_max = self.time_bounds(q)
         # key_eq and key_in share the catalog's bucket-planning hook: a
         # single key rides as a scalar, an IN list as a tuple (the
         # catalog plans the union of the keys' buckets)
         key_sel = q.key_eq if q.key_eq is not None else q.key_in
         df = self._topic_frame(
-            topic, q.partition, ts_min, ts_max, q.offset_min, q.offset_max,
+            q.topic, q.partition, ts_min, ts_max, q.offset_min, q.offset_max,
             key_eq=key_sel, as_of=q.as_of, version_of=q.version_of,
-            version_ref=q.version_ref,
+            version_ref=q.version_ref, materialize=materialize,
         )
+        conds = []
         if q.partition is not None:
-            df = df.filter(F.col("_partition") == q.partition)
+            conds.append(f"`_partition` = {st.value(q.partition)}")
         if q.offset_min is not None:
-            df = df.filter(F.col("_offset") >= q.offset_min)
+            conds.append(f"`_offset` >= {st.value(q.offset_min)}")
         if q.offset_max is not None:
-            df = df.filter(F.col("_offset") <= q.offset_max)
+            conds.append(f"`_offset` <= {st.value(q.offset_max)}")
+        # exact row filter on top of any bucket prune: the record key is
+        # binary; a text literal compares against its UTF-8 decode (same
+        # convention the join ON `_key` path uses)
         if q.key_eq is not None:
-            # exact row filter on top of any bucket prune: the record
-            # key is binary; a text literal compares against its UTF-8
-            # decode (same convention the join ON `_key` path uses)
-            df = df.filter(F.col("_key").cast("string") == q.key_eq)
+            conds.append(f"CAST(`_key` AS STRING) = {st.value(q.key_eq)}")
         if q.key_in is not None:
-            df = df.filter(F.col("_key").cast("string").isin(*q.key_in))
-        if apply_time:
-            df = self._apply_time_bounds(df, q)
-        return df
+            keys = ", ".join(st.value(k) for k in q.key_in)
+            conds.append(f"CAST(`_key` AS STRING) IN ({keys})")
+        return _Source(st.relation(df), conds + self._ts_conds(st, q), df)
 
     def _topic_frame(
         self,
@@ -285,6 +297,7 @@ class Compiler:
         as_of=None,
         version_of=None,
         version_ref=None,
+        materialize: bool = True,
     ) -> DataFrame:
         """Catalogs with their own metadata layer (Iceberg) expose
         ``topic_scan``: a read whose planned FILE LIST already honors the
@@ -292,7 +305,7 @@ class Compiler:
         files without stats survive), so a LAST-window query over a
         years-deep table never plans the other years' files and a
         `WHERE _offset >=` fetch never plans below the watermark. The
-        exact row filters in scan()/_apply_time_bounds still apply on
+        exact row conditions of _scan() still apply on
         top; catalogs without the hook return the full topic frame and
         rely on Spark-side pruning.
 
@@ -335,15 +348,21 @@ class Compiler:
             if version_ref is not None:
                 kwargs["ref"] = version_ref
             return fn(topic, **kwargs)
+        if not materialize and getattr(self.catalog, "cache_root", None):
+            return self.catalog.topic(topic, materialize=False)
         return self.catalog.topic(topic)
 
-    def _apply_time_bounds(self, df: DataFrame, q: Query) -> DataFrame:
+    def _ts_conds(
+        self, st: SqlStatement, q: Query, widen: timedelta = timedelta(0)
+    ) -> list[str]:
+        """`_ts` bound conditions, each bound widened by `widen`."""
         ts_min, ts_max = self.time_bounds(q)
+        conds = []
         if ts_min is not None:
-            df = df.filter(F.col("_ts") >= F.lit(ts_min))
+            conds.append(f"`_ts` >= {st.value(ts_min - widen)}")
         if ts_max is not None:
-            df = df.filter(F.col("_ts") <= F.lit(ts_max))
-        return df
+            conds.append(f"`_ts` <= {st.value(ts_max + widen)}")
+        return conds
 
     def time_bounds(self, q: Query) -> tuple[datetime | None, datetime | None]:
         ts_min, ts_max = q.ts_min, q.ts_max
@@ -355,129 +374,128 @@ class Compiler:
         return ts_min, ts_max
 
     # -- plain SELECT pipeline (server.go:1400-1484) --------------------
-    def _compile_select(self, q: Query) -> DataFrame:
-        df = self.scan(q.topic, q)
+    def _select_sql(self, st: SqlStatement, q: Query, src: _Source) -> str:
+        rows = f"SELECT * {_from(src)}"
         if q.tail is not None:
             # last n in scan order = top-n by (partition, offset) descending
             # (ring buffer server.go:1600-1610); re-emitted in scan order.
-            df = df.orderBy(F.desc("_partition"), F.desc("_offset")).limit(q.tail)
-            df = df.orderBy("_partition", "_offset")
-        elif q.order_by:
-            df = df.orderBy(
-                F.desc("_ts") if q.order_desc else F.asc("_ts"),
+            rows = (
+                f"SELECT * FROM ({rows} ORDER BY `_partition` DESC, "
+                f"`_offset` DESC LIMIT {st.value(q.tail)}) "
+                "ORDER BY `_partition`, `_offset`"
             )
-        if q.tail is None:
-            df = df.limit(self.effective_limit(q))
-        return df.select(*self._projection(q, df))
+        else:
+            if q.order_by:
+                rows += f" ORDER BY `_ts` {'DESC' if q.order_desc else 'ASC'}"
+            rows += f" LIMIT {st.value(self.effective_limit(q))}"
+        return f"SELECT {', '.join(self._projection(st, q))} FROM ({rows})"
 
     # -- projection (P1-P3, F1-F5) --------------------------------------
-    def _projection(self, q: Query, df: DataFrame) -> list[Column]:
-        cols: list[Column] = []
+    def _projection(self, st: SqlStatement, q: Query) -> list[str]:
+        cols: list[str] = []
         for item in q.select:
             if item.kind == ColumnKind.STAR:
                 cols.extend(self._star_columns(q))
             else:
-                cols.append(self._item_column(q, item))
+                cols.append(self._item_sql(st, item))
         return cols
 
-    def _star_columns(self, q: Query) -> list[Column]:
-        out = [self._implicit_column(name).alias(name) for name in IMPLICIT_COLUMNS]
+    def _star_columns(self, q: Query) -> list[str]:
+        out = [
+            f"{self._column_sql(name)} AS {quote(name)}"
+            for name in IMPLICIT_COLUMNS
+        ]
         cfg = self.catalog.configs.get(q.topic)
         if cfg:
-            out.extend(F.col(c.name) for c in cfg.columns)
+            out.extend(quote(c.name) for c in cfg.columns)
         return out
 
-    def _implicit_column(self, name: str, qualifier: str = "") -> Column:
-        col = F.col(f"{qualifier}{name}" if qualifier else name)
+    def _column_sql(self, name: str, prefix: str = "") -> str:
+        """A column; `_ts`/`_key`/`_value` as reference text (F4/F5)."""
+        col = _ref(name, prefix)
         if not self.opt.render_text:
             return col
         if name == "_ts":
-            return render.ts_text(col)
+            return render.ts_text_sql(col)
         if name in ("_key", "_value"):
-            return render.bytea_text(col)
+            return render.bytea_text_sql(col)
         return col
 
-    def _item_column(self, q: Query, item: SelectColumn) -> Column:
-        name = item.output_name()
+    def _item_sql(self, st: SqlStatement, item: SelectColumn, prefix: str = "") -> str:
+        """One non-star select item, its columns under `prefix`."""
+        col, path = item.column, item.json_path
         if item.kind == ColumnKind.FIELD:
-            base = (
-                self._implicit_column(item.column)
-                if item.column in IMPLICIT_COLUMNS
-                else F.col(item.column)
-            )
-            return base.alias(name)
-        if item.kind in (ColumnKind.JSON_VALUE, ColumnKind.JSON_QUERY):
-            return self._json_extract(item.column, item.json_path).alias(name)
-        if item.kind == ColumnKind.JSON_EXISTS:
-            return self._json_exists(item.column, item.json_path).alias(name)
-        raise ValidationError(f"cannot project {item.raw!r}")
+            expr = self._column_sql(col, prefix)
+        elif item.kind in (ColumnKind.JSON_VALUE, ColumnKind.JSON_QUERY):
+            expr = self._json_sql(st, col, path, prefix)
+        elif item.kind == ColumnKind.JSON_EXISTS:
+            expr = self._json_exists_sql(st, col, path, prefix)
+        else:
+            raise ValidationError(f"cannot project {item.raw!r}")
+        return f"{expr} AS {quote(item.output_name())}"
 
-    def _json_extract(self, column: str, path: str, qualifier: str = "") -> Column:
-        src = F.col(f"{qualifier}{column}" if qualifier else column).cast("string")
-        return F.get_json_object(src, path)
+    def _json_sql(self, st: SqlStatement, column: str, path: str, prefix: str = "") -> str:
+        src = f"CAST({_ref(column, prefix)} AS STRING)"
+        return f"get_json_object({src}, {st.value(path)})"
 
-    def _json_exists(self, column: str, path: str) -> Column:
+    def _json_exists_sql(
+        self, st: SqlStatement, column: str, path: str, prefix: str = ""
+    ) -> str:
         """Tri-state (server.go:1719-1729): true/false when `_value` is valid
         JSON, NULL when it is not."""
-        src = F.col(column).cast("string")
+        src = f"CAST({_ref(column, prefix)} AS STRING)"
         # `get_json_object(src, '$')` is NULL iff src is not valid JSON
-        valid = F.get_json_object(src, "$").isNotNull()
-        return F.when(~valid, F.lit(None).cast("boolean")).otherwise(
-            F.get_json_object(src, path).isNotNull()
+        return (
+            f"CASE WHEN get_json_object({src}, '$') IS NULL "
+            f"THEN CAST(NULL AS BOOLEAN) "
+            f"ELSE get_json_object({src}, {st.value(path)}) IS NOT NULL END"
         )
 
     # -- aggregates (server.go:1762-2010) -------------------------------
-    def _agg_arg(self, q: Query, item: SelectColumn) -> Column:
-        if item.agg_json_path:
-            return self._json_extract(item.agg_column, item.agg_json_path)
-        return F.col(item.agg_column)
-
-    def _agg_column(self, q: Query, item: SelectColumn) -> Column:
+    def _agg_sql(
+        self, st: SqlStatement, q: Query, src: _Source, item: SelectColumn
+    ) -> str:
         fn = item.agg_func
-        name = item.output_name()
+        if item.agg_star:
+            arg = "1"
+        elif item.agg_json_path:
+            arg = self._json_sql(st, item.agg_column, item.agg_json_path)
+        else:
+            arg = quote(item.agg_column)
         if fn == "count":
-            if item.agg_star:
-                return F.count(F.lit(1)).alias(name)
-            return F.count(self._agg_arg(q, item)).alias(name)
-        arg = self._agg_arg(q, item)
+            return f"count({arg})"
         if fn in ("sum", "avg"):
             # numeric coercion: strings parse, junk → NULL → skipped
-            dec = arg.cast("decimal(38,9)")
+            dec = f"CAST({arg} AS DECIMAL(38,9))"
             if fn == "sum":
-                return F.sum(dec).cast("double").alias(name)
+                return f"CAST(sum({dec}) AS DOUBLE)"
             # avg = exact decimal sum cast to double, / count — bit-exact
             # on any engine (IEEE division of deterministic operands)
-            return (
-                F.sum(dec).cast("double") / F.count(dec)
-            ).alias(name)
+            return f"CAST(sum({dec}) AS DOUBLE) / count({dec})"
         if fn in ("min", "max"):
             kind = self._minmax_kind(q, item)
             if item.agg_json_path and self.opt.first_kind_wins:
-                kind = self._peek_kind(q, item)
-            typed = arg.cast(kind) if kind else arg
+                kind = self._peek_kind(st, src, arg)
+            typed = f"CAST({arg} AS {kind})" if kind else arg
             if kind == "string" and item.agg_json_path and self.opt.first_kind_wins:
                 # string kind: number-valued extractions are a kind
                 # mismatch and are ignored (server.go:2132-2182)
-                typed = F.when(arg.cast("double").isNull(), arg)
-            col = F.min(typed) if fn == "min" else F.max(typed)
+                typed = f"CASE WHEN CAST({arg} AS DOUBLE) IS NULL THEN {arg} END"
+            col = f"{fn}({typed})"
             if self.opt.render_text and kind == "timestamp":
-                col = render.ts_text(col)
-            return col.alias(name)
+                col = render.ts_text_sql(col)
+            return col
         raise ValidationError(f"unknown aggregate {fn!r}")
 
-    def _peek_kind(self, q: Query, item: SelectColumn) -> str:
+    def _peek_kind(self, st: SqlStatement, src: _Source, arg: str) -> str:
         """First-seen-kind emulation: look at the first non-null extraction
         in scan order ((partition, offset)); number-parseable → double kind,
         else string."""
-        arg = self._json_extract(item.agg_column, item.agg_json_path)
-        rows = (
-            self.scan(q.topic, q)
-            .filter(arg.isNotNull())
-            .orderBy("_partition", "_offset")
-            .select(arg.alias("v"))
-            .limit(1)
-            .collect()
-        )
+        present = src._replace(conds=src.conds + [f"{arg} IS NOT NULL"])
+        rows = st.sql(
+            f"SELECT {arg} AS v {_from(present)} "
+            "ORDER BY `_partition`, `_offset` LIMIT 1"
+        ).collect()
         if not rows:
             return "string"
         try:
@@ -506,53 +524,39 @@ class Compiler:
                         if c.type in ("int", "long", "double")
                         else ("timestamp" if c.type == "timestamp" else "string")
                     )
-        if item.agg_json_path:
-            return "string"
         return "string"
 
-    def group_key_string(self, group_cols: list[Column]) -> Column:
-        """The reference's group key: values cast to string, NULL → `<nil>`,
-        joined with 0x1f (server.go:1968-1981)."""
-        parts = [
-            F.coalesce(c.cast("string"), F.lit(GROUP_KEY_NULL)) for c in group_cols
-        ]
-        return F.concat_ws(GROUP_KEY_SEP, *parts)
-
-    def _compile_aggregate(self, q: Query) -> DataFrame:
-        df = self.scan(q.topic, q)
+    def _aggregate_sql(self, st: SqlStatement, q: Query, src: _Source) -> str:
         aggs = [
-            self._agg_column(q, c)
+            f"{self._agg_sql(st, q, src, c)} AS {quote(c.output_name())}"
             for c in q.select
             if c.kind == ColumnKind.AGGREGATE
         ]
         if not q.group_by:
-            out = df.agg(*aggs)
-            return out.select(*[c.output_name() for c in q.select])
-        group_cols = [F.col(g) for g in q.group_by]
-        out = df.groupBy(*group_cols).agg(*aggs)
-        # deterministic emit order: group-key string ascending (A8)
-        out = out.orderBy(self.group_key_string([F.col(g) for g in q.group_by]))
-        out = out.limit(self.effective_limit(q))
+            return f"SELECT {', '.join(aggs)} {_from(src)}"
+        groups = [quote(g) for g in q.group_by]
+        # deterministic emit order: the reference's group key string —
+        # values cast to string, NULL → `<nil>`, joined with 0x1f
+        # (server.go:1829-1833, 1968-1981; A8)
+        key = ", ".join(
+            f"coalesce(CAST({g} AS STRING), '{GROUP_KEY_NULL}')" for g in groups
+        )
+        grouped = (
+            f"SELECT {', '.join(groups + aggs)} {_from(src)} "
+            f"GROUP BY {', '.join(groups)} "
+            f"ORDER BY concat_ws(chr({ord(GROUP_KEY_SEP)}), {key}) "
+            f"LIMIT {st.value(self.effective_limit(q))}"
+        )
         # project in select-list order, rendering group cols as needed
-        final: list[Column] = []
-        for item in q.select:
-            if item.kind == ColumnKind.FIELD:
-                base = (
-                    self._implicit_column(item.column)
-                    if item.column in IMPLICIT_COLUMNS
-                    else F.col(item.column)
-                )
-                final.append(base.alias(item.output_name()))
-            else:
-                final.append(F.col(item.output_name()))
-        return out.select(*final)
+        final = [
+            self._item_sql(st, item)
+            if item.kind == ColumnKind.FIELD
+            else quote(item.output_name())
+            for item in q.select
+        ]
+        return f"SELECT {', '.join(final)} FROM ({grouped})"
 
     # -- joins (server.go:2281-2464) ------------------------------------
-    def _join_key_expr(self, expr: JoinExpr, prefix: str) -> Column:
-        if expr.kind == JoinExprKind.KEY:
-            return F.col(f"{prefix}_key").cast("string")
-        return self._json_extract("_value", expr.json_path, qualifier=prefix)
-
     def _join_names(self, q: Query) -> tuple[set[str], set[str]]:
         """Accepted qualifiers per side: the alias AND the topic name
         (reference resolveJoinSide accepts both even when an alias is
@@ -561,16 +565,14 @@ class Compiler:
         right = {q.join_topic} | ({q.join_alias} if q.join_alias else set())
         return left, right
 
-    def _compile_join(self, q: Query) -> DataFrame:
-        left_alias = q.topic_alias or q.topic
-        right_alias = q.join_alias or q.join_topic
-
+    def _join_sql(
+        self, st: SqlStatement, q: Query, src: _Source, materialize: bool
+    ) -> str:
         # Left rows are LAST-window-filtered (server.go:2407-2408). The
         # reference scans the right side unfiltered (server.go:2384); the
         # WITHIN band then implies right._ts ∈ [window ± within] — we push
         # that derived bound so the right scan prunes too (same semantics,
         # bounded scan at any scale).
-        left = self.scan(q.topic, q)
         ts_min, ts_max = self.time_bounds(q)
         w = timedelta(seconds=q.within_seconds)
         # the right side's metadata pruning must use the WIDENED bounds
@@ -583,127 +585,121 @@ class Compiler:
             as_of=q.join_as_of,
             version_of=q.join_version_of,
             version_ref=q.join_version_ref,
+            materialize=materialize,
         )
-        if ts_min is not None:
-            right = right.filter(F.col("_ts") >= F.lit(ts_min - w))
-        if ts_max is not None:
-            right = right.filter(F.col("_ts") <= F.lit(ts_max + w))
+        right_src = _Source(st.relation(right), self._ts_conds(st, q, widen=w), right)
 
-        lcols = [F.col(c).alias(f"__l_{c}") for c in left.columns]
-        rcols = [F.col(c).alias(f"__r_{c}") for c in right.columns]
-        left = left.select(*lcols)
-        right = right.select(*rcols)
-
-        on = q.join_on
-        lk = self._join_side_expr(q, on.left, on.right, "left")
-        rk = self._join_side_expr(q, on.left, on.right, "right")
-        cond = lk == rk
+        lk, rk = self._join_key(st, q, "left"), self._join_key(st, q, "right")
         # WITHIN band: |l._ts - r._ts| <= d (server.go:2644-2650)
         band = (
-            F.abs(
-                F.unix_micros(F.col("__l__ts")) - F.unix_micros(F.col("__r__ts"))
-            )
-            <= int(q.within_seconds * 1_000_000)
+            f"abs(unix_micros({_ref('_ts', LEFT)}) - unix_micros({_ref('_ts', RIGHT)}))"
+            f" <= {st.value(int(q.within_seconds * 1_000_000))}"
         )
-        how = "left" if q.join_type == "left" else "inner"
-        joined = left.join(right, cond & band, how)
+        how = "LEFT OUTER" if q.join_type == "left" else "INNER"
+        joined = (
+            f"SELECT * FROM {_side(src, LEFT)} AS l "
+            f"{how} JOIN {_side(right_src, RIGHT)} AS r ON {lk} = {rk} AND {band}"
+        )
         # LIMIT applies to joins too (reference stops at sent >= limit,
         # limit = user LIMIT or DefaultLimit, server.go handleJoinSelect).
         # Deterministic survivor set for a binding limit: emit order is left
         # scan order then right scan order. Limits up to
         # topKSortFallbackThreshold (10k) compile to a distributed top-k
-        # heap (TakeOrderedAndProject), not a global sort. The sort applies
+        # heap (TakeOrderedAndProject, which renders the projection for
+        # the survivors only), not a global sort. The sort applies
         # whenever the user set a LIMIT explicitly (even one equal to or
         # capped at max_rows — it can still bind and must pick a
         # deterministic survivor set); only the purely-implicit guardrail
         # cap skips it.
         limit = self.effective_limit(q)
         if q.limit is not None or limit < self.opt.max_rows:
-            joined = joined.orderBy(
-                "__l__partition", "__l__offset", "__r__partition", "__r__offset"
-            )
-        joined = joined.limit(limit)
-        return joined.select(*self._join_projection(q, left_alias, right_alias))
+            order = (_ref(c, p) for p in (LEFT, RIGHT) for c in ("_partition", "_offset"))
+            joined += f" ORDER BY {', '.join(order)}"
+        joined += f" LIMIT {st.value(limit)}"
+        return f"SELECT {', '.join(self._join_projection(st, q))} FROM ({joined})"
 
-    def _join_side_expr(
-        self,
-        q: Query,
-        left_expr: JoinExpr,
-        right_expr: JoinExpr,
-        want: str,
-    ) -> Column:
-        """Resolve which ON side belongs to which topic: by qualifier (alias
-        OR topic name both accepted, parser.go:639-693), positionally
-        otherwise."""
+    def _join_key(self, st: SqlStatement, q: Query, want: str) -> str:
+        """The ON expression of side `want`. Which ON side belongs to which
+        topic: by qualifier (alias OR topic name both accepted,
+        parser.go:639-693), positionally otherwise."""
         left_names, right_names = self._join_names(q)
-        for i, e in enumerate((left_expr, right_expr)):
+        for i, e in enumerate((q.join_on.left, q.join_on.right)):
             side = (
                 "left"
                 if e.side in left_names
                 else ("right" if e.side in right_names else ("left", "right")[i])
             )
             if side == want:
-                prefix = "__l_" if want == "left" else "__r_"
-                return self._join_key_expr(e, prefix)
+                prefix = LEFT if want == "left" else RIGHT
+                if e.kind == JoinExprKind.KEY:
+                    return f"CAST({_ref('_key', prefix)} AS STRING)"
+                return self._json_sql(st, "_value", e.json_path, prefix)
         raise ValidationError("cannot resolve join expression sides")
 
-    def _join_projection(
-        self, q: Query, left_alias: str, right_alias: str
-    ) -> list[Column]:
-        cols: list[Column] = []
-        for item in q.select:
-            if item.kind == ColumnKind.STAR:
-                # left implicit columns under their own names, right under
-                # `_right_*` (server.go:2581-2589)
-                for name in IMPLICIT_COLUMNS:
-                    cols.append(
-                        self._implicit_column(name, "__l_").alias(name)
-                    )
-                for name in IMPLICIT_COLUMNS:
-                    cols.append(
-                        self._implicit_column(name, "__r_").alias(f"_right{name}")
-                    )
-                continue
-            cols.append(self._join_item(q, item, left_alias, right_alias))
-        return cols
-
-    def _join_item(
-        self, q: Query, item: SelectColumn, left_alias: str, right_alias: str
-    ) -> Column:
+    def _join_projection(self, st: SqlStatement, q: Query) -> list[str]:
         left_names, right_names = self._join_names(q)
 
         def prefix_for(source: str, column: str) -> str:
             # alias OR topic name resolve to their side; unknown qualifiers
             # fall back to left (reference joinSideFromSource behavior)
             if source in left_names:
-                return "__l_"
+                return LEFT
             if source in right_names:
-                return "__r_"
+                return RIGHT
             if not source and column.startswith("_right_"):
-                return "__r_"
-            return "__l_"
+                return RIGHT
+            return LEFT
 
-        name = item.output_name()
-        if item.kind == ColumnKind.FIELD:
-            col_name = item.column
-            prefix = prefix_for(item.source, col_name)
-            if col_name.startswith("_right_"):
-                col_name = "_" + col_name[len("_right_") :]
-            if col_name in IMPLICIT_COLUMNS:
-                return self._implicit_column(col_name, prefix).alias(name)
-            return F.col(f"{prefix}{col_name}").alias(name)
-        if item.kind in (ColumnKind.JSON_VALUE, ColumnKind.JSON_QUERY):
+        cols: list[str] = []
+        for item in q.select:
+            if item.kind == ColumnKind.STAR:
+                # left implicit columns under their own names, right under
+                # `_right_*` (server.go:2581-2589)
+                cols.extend(
+                    f"{self._column_sql(name, LEFT)} AS {quote(name)}"
+                    for name in IMPLICIT_COLUMNS
+                )
+                cols.extend(
+                    f"{self._column_sql(name, RIGHT)} AS {quote('_right' + name)}"
+                    for name in IMPLICIT_COLUMNS
+                )
+                continue
             prefix = prefix_for(item.source, item.column)
-            return self._json_extract(
-                item.column, item.json_path, qualifier=prefix
-            ).alias(name)
-        if item.kind == ColumnKind.JSON_EXISTS:
-            prefix = prefix_for(item.source, item.column)
-            src = F.col(f"{prefix}{item.column}").cast("string")
-            valid = F.get_json_object(src, "$").isNotNull()
-            return (
-                F.when(~valid, F.lit(None).cast("boolean"))
-                .otherwise(F.get_json_object(src, item.json_path).isNotNull())
-                .alias(name)
-            )
-        raise ValidationError(f"cannot project {item.raw!r} in join")
+            if item.kind == ColumnKind.FIELD and item.column.startswith("_right_"):
+                item = replace(
+                    item,
+                    column="_" + item.column[len("_right_") :],
+                    alias=item.output_name(),
+                )
+            cols.append(self._item_sql(st, item, prefix))
+        return cols
+
+
+#: column-name prefixes of a join's left and right side
+LEFT, RIGHT = "__l_", "__r_"
+
+
+class _Source(NamedTuple):
+    """A statement's topic relation, its row conditions and its frame."""
+
+    rel: str
+    conds: list[str]
+    frame: DataFrame
+
+
+def _ref(column: str, prefix: str = "") -> str:
+    """A column reference, under a join side's prefix if given."""
+    return quote(prefix + column)
+
+
+def _from(src: _Source) -> str:
+    """`FROM rel [WHERE c1 AND c2 ...]`."""
+    where = f" WHERE {' AND '.join(src.conds)}" if src.conds else ""
+    return f"FROM {src.rel}{where}"
+
+
+def _side(src: _Source, prefix: str) -> str:
+    """A join side: every column of its frame renamed under `prefix`, so
+    the joined rows can be ordered and limited before the projection."""
+    cols = ", ".join(f"{quote(c)} AS {_ref(c, prefix)}" for c in src.frame.columns)
+    return f"(SELECT {cols} {_from(src)})"

@@ -1,8 +1,10 @@
 """KafSqlEngine: the KAFSQL front door.
 
 parse → validate → govern (admission, scan budget, cache) → compile →
-DataFrame. The introspection statements (SHOW TOPICS / SHOW PARTITIONS /
-DESCRIBE / EXPLAIN — server.go:758-962) return small DataFrames.
+DataFrame. The introspection statements (SHOW TOPICS / DESCRIBE /
+EXPLAIN — server.go:758-962) and the SET/RESET status row return JVM
+LocalRelations, whose collect runs no Spark job; SHOW PARTITIONS and
+SHOW SNAPSHOTS are real queries.
 """
 
 from __future__ import annotations
@@ -26,6 +28,7 @@ from platform_spark.sql.compiler import (
     CompilerOptions,
     scan_capabilities,
 )
+from platform_spark.sql.statement import SqlStatement, local_rows
 from platform_spark.topics import TopicCatalog
 
 
@@ -169,9 +172,7 @@ class KafSqlEngine:
             raise GovernanceError(f"unknown setting {name!r}")
         # settings affect compiled results — cached rows are now stale
         self.cache.clear()
-        return self.spark.createDataFrame(
-            [(name, value)], "name: string, value: string"
-        )
+        return local_rows(self.spark, ("name", "value"), [(name, value)])
 
     def sql(self, statement: str) -> DataFrame:
         """Execute a KAFSQL statement, returning a DataFrame."""
@@ -322,11 +323,17 @@ class KafSqlEngine:
     # -- introspection (C1-C4) ------------------------------------------
     def _show_topics(self) -> DataFrame:
         rows = [(t,) for t in self.catalog.topic_names()]
-        return self.spark.createDataFrame(rows, "topic: string")
+        return local_rows(self.spark, ("topic",), rows)
 
     def _show_partitions(self, topic: str) -> DataFrame:
         df = self.catalog.topic(topic, with_schema_columns=False)
-        return df.select("_partition").distinct().orderBy("_partition")
+        with SqlStatement(
+            self.spark, getattr(self.catalog, "frame_view", None)
+        ) as st:
+            return st.sql(
+                f"SELECT DISTINCT `_partition` FROM {st.relation(df)} "
+                "ORDER BY `_partition`"
+            )
 
     def _show_snapshots(self, topic: str) -> DataFrame:
         """SHOW SNAPSHOTS FROM t — the discovery half of time travel:
@@ -365,9 +372,7 @@ class KafSqlEngine:
 
     def _describe(self, topic: str) -> DataFrame:
         rows = self.catalog.describe(topic)
-        return self.spark.createDataFrame(
-            rows, "column: string, type: string, source: string"
-        )
+        return local_rows(self.spark, ("column", "type", "source"), rows)
 
     def _explain(self, q: Query) -> DataFrame:
         """Plan summary: candidate files + byte/row estimates from parquet
@@ -453,12 +458,7 @@ class KafSqlEngine:
         # compile WITHOUT lazy materialization: EXPLAIN is introspection and
         # must never run a write job (an unmaterialized topic explains over
         # its envelope view — same logical plan, no side effects)
-        prev_root = self.catalog.cache_root
-        self.catalog.cache_root = None
-        try:
-            df = self.compiler.compile(q)
-        finally:
-            self.catalog.cache_root = prev_root
+        df = self.compiler.compile(q, materialize=False)
         physical = df._jdf.queryExecution().simpleString()
         lines.extend(physical.splitlines()[:8])
-        return self.spark.createDataFrame([(l,) for l in lines], "plan: string")
+        return local_rows(self.spark, ("plan",), [(l,) for l in lines])

@@ -16,6 +16,8 @@ from __future__ import annotations
 import os
 import re
 import threading
+import uuid
+import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -390,6 +392,14 @@ for _t, (_pk, _cols) in env.PASSTHROUGH_TABLES.items():
     )
 
 
+def _drop_frame_views(spark: SparkSession, frames: dict) -> None:
+    try:
+        for _frame, view in list(frames.values()):
+            spark.catalog.dropTempView(view)
+    except Exception:  # noqa: BLE001 - a stopped session holds no views
+        pass
+
+
 class TopicCatalog:
     """Resolves topic names to DataFrames with the implicit + schema columns.
 
@@ -418,10 +428,15 @@ class TopicCatalog:
         self.sf_dir = sf_dir
         self.configs = dict(configs or DEFAULT_TOPIC_CONFIGS)
         self._materialized: dict[str, str] = {}
-        #: finished topic frames over materialized version dirs, keyed on
-        #: (name, path, with_schema_columns, TopicConfig) — see topic()
-        self._frames: dict[tuple, DataFrame] = {}
+        #: finished topic frames over materialized version dirs and the
+        #: session temp view naming each, keyed on (name, path,
+        #: with_schema_columns, TopicConfig) — see topic()
+        self._frames: dict[tuple, tuple[DataFrame, str]] = {}
         self._frames_lock = threading.Lock()
+        # a catalog that is let go without clear_frames() must not leave
+        # its views (and the plans they pin) in a long-lived session
+        release = weakref.finalize(self, _drop_frame_views, self.spark, self._frames)
+        release.atexit = False
         #: lazy materialization root: on first access each topic is written
         #: as `_partition`-partitioned parquet (version-keyed by envelope
         #: SQL), so every later query scans real files with partition
@@ -476,20 +491,26 @@ class TopicCatalog:
     def topic_names(self) -> list[str]:
         return sorted(self.configs)
 
-    def topic(self, name: str, with_schema_columns: bool = True) -> DataFrame:
+    def topic(
+        self, name: str, with_schema_columns: bool = True, materialize: bool = True
+    ) -> DataFrame:
         """Topic DataFrame: 8 implicit columns (+ declared schema columns).
 
         A materialized topic's frame is memoized: its `v=<hash>` version
         dir is immutable, and `spark.read.parquet` runs a schema-inference
         job on every call (~90 ms on a 4-vCPU host, most of a KAFSQL
-        compile). The memo is dropped per topic by materialize() and
-        wholesale by clear_frames() — the engine calls it on a dotted
-        SET/RESET, since confs such as the session time zone and ANSI mode
-        are captured when the frame is analyzed. Envelope views are
-        rebuilt per call."""
+        compile). Each memoized frame is also registered as a session
+        temp view with a unique name (frame_view), so compiled SQL can
+        name it. The memo and its views are dropped per topic by
+        materialize() and wholesale by clear_frames() — the engine calls
+        it on a dotted SET/RESET, since confs such as the session time
+        zone and ANSI mode are captured when the frame is analyzed.
+        Envelope views are rebuilt per call. ``materialize=False`` never
+        writes a topic that is not materialized yet (EXPLAIN): such a
+        topic is served from its envelope view."""
         if name not in env.ENVELOPE_BUILDERS:
             raise KeyError(f"unknown topic {name!r}")
-        if name not in self._materialized and self.cache_root:
+        if name not in self._materialized and self.cache_root and materialize:
             self.materialize(name, self.cache_root)
         path = self._materialized.get(name)
         if path is None:
@@ -505,20 +526,35 @@ class TopicCatalog:
             pass
         key = (name, path, with_schema_columns, self.configs.get(name))
         with self._frames_lock:
-            df = self._frames.get(key)
-        if df is None:
+            entry = self._frames.get(key)
+        if entry is None:
             # built outside the lock: concurrent misses may both read, and
             # the first frame stored wins
             df = self._shape(name, self.spark.read.parquet(path), with_schema_columns)
             with self._frames_lock:
-                df = self._frames.setdefault(key, df)
-        return df
+                entry = self._frames.get(key)
+                if entry is None:
+                    view = f"__kafsql_topic_{name}_{uuid.uuid4().hex[:12]}"
+                    df.createOrReplaceTempView(view)
+                    entry = self._frames[key] = (df, view)
+        return entry[0]
+
+    def frame_view(self, df: DataFrame) -> str | None:
+        """The session view naming `df` if it is a memoized topic frame."""
+        with self._frames_lock:
+            for frame, view in self._frames.values():
+                if frame is df:
+                    return view
+        return None
 
     def clear_frames(self, name: str | None = None) -> None:
-        """Forget memoized topic frames: one topic's, or all of them."""
+        """Forget memoized topic frames, one topic's or all of them, and
+        drop their views. The views are dropped under the memo lock, so a
+        frame that frame_view() no longer names has no view left."""
         with self._frames_lock:
             for key in [k for k in self._frames if name is None or k[0] == name]:
-                del self._frames[key]
+                _frame, view = self._frames.pop(key)
+                self.spark.catalog.dropTempView(view)
 
     def _shape(self, name: str, df: DataFrame, with_schema_columns: bool) -> DataFrame:
         df = df.select(*IMPLICIT_COLUMNS)

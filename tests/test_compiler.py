@@ -374,6 +374,61 @@ def test_compile_pins_clock_for_last_windows(catalog, monkeypatch):
     assert comp.now is None  # the pin does not outlive the compile
 
 
+def test_concurrent_compiles_pin_their_own_clocks(catalog, monkeypatch):
+    # the pin belongs to one compile: overlapping compiles on a
+    # wall-clock Compiler each keep one window, and neither un-pins nor
+    # freezes the other's clock
+    import threading
+
+    import platform_spark.sql.compiler as compiler_mod
+    from platform_spark.sql.compiler import Compiler
+
+    ticks = iter(range(10_000))
+    lock = threading.Lock()
+
+    class SteppingDatetime(datetime):
+        @classmethod
+        def utcnow(cls):
+            with lock:
+                return NOW + timedelta(seconds=next(ticks))
+
+    monkeypatch.setattr(compiler_mod, "datetime", SteppingDatetime)
+    comp = Compiler(catalog)
+    both_in = threading.Barrier(2, timeout=60)
+    seen: dict[int, list] = {}
+    time_bounds, scan = Compiler.time_bounds, Compiler._scan
+
+    def spy(self, q):
+        out = time_bounds(self, q)
+        seen.setdefault(threading.get_ident(), []).append(out)
+        return out
+
+    def held(self, st, q, materialize=True):
+        both_in.wait()  # both compiles started before either reads bounds
+        return scan(self, st, q, materialize)
+
+    monkeypatch.setattr(Compiler, "time_bounds", spy)
+    monkeypatch.setattr(Compiler, "_scan", held)
+    errors = []
+
+    def run():
+        try:
+            comp.compile(parser.parse("SELECT _offset FROM events LAST 1h"))
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not errors, errors
+    assert len(seen) == 2
+    assert all(len(v) >= 2 and len(set(v)) == 1 for v in seen.values())
+    assert comp.now is None
+    assert comp._now() != comp._now()  # back on the wall clock
+
+
 def test_budget_prices_join_right_side_with_widened_frame(catalog, monkeypatch):
     # ADVICE r10: the compiled WITHIN join scans the RIGHT topic without
     # the partition filter and with bounds widened by ±within; the budget
@@ -529,3 +584,347 @@ def test_dotted_set_drops_memoized_topic_frames(spark, tmp_path):
     finally:
         eng.sql("SET spark.sql.session.timeZone = UTC")
     assert cat.topic("lineitem") is not after
+
+
+# -- one parameterized SQL plan per statement ---------------------------
+
+#: record keys and JSON text carrying SQL and parameter-marker syntax
+ODD_KEYS = (
+    "back\\slash", ":name", "what?", "{}", "a--b", "semi;colon",
+    "$dollar", "naïve 漢字", "plain",
+)
+ODD_PATHS = ("$.k", "$.a:b", "$.q?", "$.$x", "$.é漢", "$.br{}", "$.d--d", "$.s;s", "$.b\\s")
+
+
+@pytest.fixture(scope="module")
+def odd_topic(spark, tmp_path_factory):
+    """A materialized `events` topic whose keys and JSON values hold the
+    ODD_KEYS texts, so every literal the compiler binds is exercised."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from platform_spark.topics import TopicCatalog
+
+    path = str(tmp_path_factory.mktemp("odd") / "v=odd")
+    for part in (0, 1):
+        rows = [
+            (i, k) for i, k in enumerate(ODD_KEYS) if i % 2 == part
+        ]
+        values = [
+            json.dumps({
+                "k": k, "a:b": i, "q?": f"{k}?", "$x": i * 2, "é漢": k,
+                "br{}": i, "d--d": k, "s;s": i, "b\\s": k,
+            }, ensure_ascii=False)
+            for i, k in rows
+        ]
+        table = pa.table({
+            "_topic": ["events"] * len(rows),
+            "_offset": pa.array([i for i, _ in rows], pa.int64()),
+            "_ts": pa.array(
+                [NOW - timedelta(hours=i + 1) for i, _ in rows], pa.timestamp("us")
+            ),
+            "_key": [k for _, k in rows],
+            "_value": values,
+            "_headers": ["{}"] * len(rows),
+            "_segment": ["s"] * len(rows),
+        })
+        os.makedirs(f"{path}/_partition={part}")
+        pq.write_table(table, f"{path}/_partition={part}/part-0.parquet")
+    cat = TopicCatalog(spark, SF_DIR)
+    cat._materialized["events"] = path
+    return cat, path
+
+
+def _duck(path: str, where: str, params: list, select: str = "_offset") -> list:
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        return con.execute(
+            f"SELECT {select} FROM read_parquet('{path}/*/*.parquet', "
+            f"hive_partitioning = true) WHERE {where} ORDER BY _offset",
+            params,
+        ).fetchall()
+    finally:
+        con.close()
+
+
+def test_bound_literals_match_duckdb(odd_topic):
+    # keys, IN lists and JSON paths are bound, never spliced: text with
+    # backslashes, parameter markers, comment/statement syntax and
+    # non-ASCII characters selects the same rows as the DuckDB twin
+    from platform_spark.sql.engine import EngineOptions
+
+    cat, path = odd_topic
+    opts = EngineOptions()
+    opts.enable_cache = False
+    eng = KafSqlEngine(cat, options=opts, now=NOW)
+
+    def offsets(stmt):
+        return sorted(tuple(r) for r in eng.sql(stmt).collect())
+
+    for key in ODD_KEYS:
+        got = offsets(f"SELECT _offset FROM events WHERE _key = '{key}' LAST 30d")
+        assert got == _duck(path, "_key = ?", [key]), key
+        assert len(got) == 1
+    some = ODD_KEYS[:5]
+    in_list = ", ".join(f"'{k}'" for k in some)
+    got = offsets(f"SELECT _offset FROM events WHERE _key IN ({in_list}) LAST 30d")
+    assert got == _duck(path, "list_contains(?, _key)", [list(some)])
+    assert len(got) == len(some)
+    for p in ODD_PATHS:
+        got = offsets(
+            f"SELECT _offset, json_value(_value, '{p}') AS v FROM events LAST 30d"
+        )
+        want = _duck(
+            path, "true", [p], select="_offset, json_extract_string(_value, ?)"
+        )
+        assert got == want, p
+        assert all(v is not None for _, v in got)
+
+
+def test_aliases_needing_backquotes_round_trip(odd_topic):
+    from platform_spark.sql.statement import SqlStatement, quote
+
+    cat, _ = odd_topic
+    eng = KafSqlEngine(cat, now=NOW)
+    df = eng.sql(
+        "SELECT _offset AS order, json_value(_value, '$.k') AS table, "
+        "_partition AS select FROM events WHERE _key = 'plain' LAST 30d"
+    )
+    assert df.columns == ["order", "table", "select"]
+    assert df.collect()[0]["table"] == "plain"
+    with SqlStatement(cat.spark) as st:
+        odd = st.sql(f"SELECT 1 AS {quote('we`ird')}")
+    assert odd.columns == ["we`ird"]
+
+
+def _views(spark, prefix: str) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.name.startswith(prefix)}
+
+
+@pytest.fixture(scope="module")
+def mat_topics(spark, tmp_path_factory):
+    """A catalog with events/orders/payments materialized and memoized."""
+    from platform_spark.topics import TopicCatalog
+
+    root = str(tmp_path_factory.mktemp("plan_topics"))
+    cat = TopicCatalog(spark, SF_DIR)
+    for t in ("events", "orders", "payments"):
+        cat.materialize(t, root)
+        cat.topic(t)
+        cat.topic(t, with_schema_columns=False)
+    return cat
+
+
+def test_statements_build_no_dataframe_chain(spark, mat_topics, monkeypatch):
+    # every statement kind is one SQL text analyzed by one JVM call: no
+    # per-operator DataFrame call builds any part of its plan
+    from platform_spark.sql.engine import EngineOptions
+
+    opts = EngineOptions()
+    opts.enable_cache = False
+    eng = KafSqlEngine(mat_topics, options=opts, now=NOW)
+    stmts = [
+        "SELECT _partition, _offset, _ts, _key FROM events WHERE _partition = 1 "
+        "AND _offset >= 3 AND _offset <= 40 LAST 30d LIMIT 100000",
+        "SELECT _partition, count(*) AS n, sum(json_value(_value, '$.amount')) AS t "
+        "FROM events LAST 9d GROUP BY _partition",
+        "SELECT _offset, _partition, _ts FROM events "
+        "WHERE _ts <= '2024-01-20 00:00:00' ORDER BY _ts DESC LIMIT 17",
+        "SELECT _partition, _offset, _key FROM events TAIL 11",
+        "SELECT o._key AS okey, json_value(p._value, '$.method') AS method "
+        "FROM orders o JOIN payments p ON o._key = p._key WITHIN 5m "
+        "LAST 15000d LIMIT 100000",
+        "SELECT * FROM events LAST 2d LIMIT 20",
+        "SELECT _offset FROM events WHERE _key IN ('5', '7') LAST 30d",
+        "EXPLAIN SELECT _partition, _offset FROM events LAST 3d",
+        "SHOW TOPICS",
+        "DESCRIBE orders",
+        "SET default_limit = 1000",
+    ]
+    want = [eng.sql(s).collect() for s in stmts]
+    cls = type(spark.range(1))
+
+    def banned(name):
+        def fail(*_a, **_k):
+            raise AssertionError(f"DataFrame.{name} called while compiling")
+        return fail
+
+    for name in ("filter", "where", "select", "limit", "orderBy", "join", "withColumn"):
+        monkeypatch.setattr(cls, name, banned(name))
+    monkeypatch.setattr(type(spark), "createDataFrame", banned("createDataFrame"))
+    for s, rows in zip(stmts, want):
+        got = eng.sql(s).collect()
+        if s.startswith("EXPLAIN"):
+            assert len(got) == len(rows)
+        else:
+            assert got == rows, s
+
+
+def test_introspection_collects_without_jobs(spark, mat_topics):
+    eng = KafSqlEngine(mat_topics, now=NOW)
+    cases = [
+        ("SHOW TOPICS", [(t,) for t in mat_topics.topic_names()]),
+        ("DESCRIBE events", mat_topics.describe("events")),
+        ("SET default_limit = 1000", [("default_limit", "1000")]),
+        ("RESET default_limit", [("default_limit", "1000")]),
+        ("EXPLAIN SELECT _offset FROM events LAST 3d", None),
+    ]
+    for stmt, rows in cases:
+        df = eng.sql(stmt)
+        j0 = jobs_run(spark)
+        got = df.collect()
+        assert jobs_run(spark) == j0, stmt
+        if rows is not None:
+            assert [tuple(r) for r in got] == [tuple(r) for r in rows], stmt
+        else:
+            lines = [r["plan"] for r in got]
+            assert lines[0] == "scan topic=events"
+            assert any("candidate_files=" in l for l in lines)
+    # a catalog without topics lists none
+    from platform_spark.sql.statement import local_rows
+
+    empty = local_rows(spark, ("topic",), [])
+    j0 = jobs_run(spark)
+    assert empty.collect() == [] and empty.columns == ["topic"]
+    assert jobs_run(spark) == j0
+
+
+def test_statement_views_never_outlive_the_statement(spark, catalog, monkeypatch):
+    # per-call frames (envelope views) are read through views named for
+    # one statement; none survives success, a ValidationError raised
+    # after the first relation was named, or a timed-out collect
+    from platform_spark.errors import GovernanceError
+    from platform_spark.sql.statement import STATEMENT_VIEW_PREFIX
+
+    eng = KafSqlEngine(catalog, now=NOW)
+    before = _views(spark, STATEMENT_VIEW_PREFIX)
+    assert eng.sql("SELECT _offset FROM events LAST 8d LIMIT 3").count() == 3
+    assert eng.sql("SHOW PARTITIONS FROM events").count() == 4
+    assert _views(spark, STATEMENT_VIEW_PREFIX) == before
+    with pytest.raises(ValidationError, match="SYSTEM_TIME"):
+        eng.sql(
+            "SELECT o._key FROM orders o JOIN payments p FOR SYSTEM_TIME AS OF "
+            "'2024-01-01 00:00:00' ON o._key = p._key WITHIN 5m LAST 1d"
+        )
+    assert _views(spark, STATEMENT_VIEW_PREFIX) == before
+
+    def timed_out(self, df, timeout=None, action=None):
+        # the compile's views are gone before the timed action starts
+        assert _views(spark, STATEMENT_VIEW_PREFIX) == before
+        raise GovernanceError("query cancelled (timeout 0.001s)")
+
+    stmt = "SELECT _offset FROM events LAST 9d LIMIT 4"
+    eng.sql(stmt)  # cold: marks the statement warm
+    monkeypatch.setattr(KafSqlEngine, "collect_with_timeout", timed_out)
+    with pytest.raises(GovernanceError, match="timeout"):
+        eng.sql(stmt)
+    assert _views(spark, STATEMENT_VIEW_PREFIX) == before
+
+
+def test_statement_reads_memo_frame_cleared_after_naming(spark, mat_topics):
+    # a concurrent clear_frames() may drop a memo view between naming it
+    # and analysis: the statement still reads the frame it named, and
+    # leaves no view behind
+    from platform_spark.sql.statement import STATEMENT_VIEW_PREFIX, SqlStatement
+
+    frame = mat_topics.topic("events")
+    view = mat_topics.frame_view(frame)
+    n = frame.count()
+    before = _views(spark, STATEMENT_VIEW_PREFIX)
+    with SqlStatement(spark, mat_topics.frame_view) as st:
+        rel = st.relation(frame)
+        mat_topics.clear_frames("events")
+        assert mat_topics.frame_view(frame) is None
+        got = st.sql(f"SELECT count(*) AS n FROM {rel}").collect()[0]["n"]
+    assert got == n
+    assert view not in _views(spark, view)
+    assert _views(spark, STATEMENT_VIEW_PREFIX) == before
+    mat_topics.topic("events")
+    mat_topics.topic("events", with_schema_columns=False)
+
+
+def test_overlapping_explains_keep_cache_root(spark, tmp_path, monkeypatch):
+    # EXPLAIN compiles without materializing by passing that into the
+    # compile, never by clearing the shared cache_root: two EXPLAINs held
+    # inside compile at the same time leave cache_root as it was
+    import threading
+
+    from platform_spark.sql.compiler import Compiler
+    from platform_spark.topics import TopicCatalog
+
+    root = str(tmp_path / "c")
+    cat = TopicCatalog(spark, SF_DIR, cache_root=root)
+    eng = KafSqlEngine(cat, now=NOW)
+    both_in = threading.Barrier(2, timeout=60)
+    compile_ = Compiler.compile
+
+    def held(self, q, materialize=True):
+        both_in.wait()
+        return compile_(self, q, materialize)
+
+    monkeypatch.setattr(Compiler, "compile", held)
+    errors = []
+
+    def explain():
+        try:
+            eng.sql("EXPLAIN SELECT _offset FROM events LAST 5d").collect()
+        except Exception as e:  # noqa: BLE001 - reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=explain) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not errors, errors
+    assert cat.cache_root == root
+    assert cat._materialized == {}  # introspection ran no write job
+
+
+def test_bound_timestamps_are_the_instants_flit_makes(spark):
+    # a bound datetime is the instant F.lit gives it: naive and aware,
+    # with micros, and before 1900 (where it binds as a datetime)
+    from datetime import timezone
+
+    import pyspark.sql.functions as F
+
+    from platform_spark.sql.statement import SqlStatement
+
+    stamps = [
+        datetime(2024, 1, 31), datetime(1992, 3, 4, 5, 6, 7, 890123),
+        datetime(2024, 1, 1, 12, tzinfo=timezone(timedelta(hours=5))),
+        datetime(1970, 1, 1), datetime(1899, 12, 31, 23, 59, 59, 1),
+        datetime(1500, 6, 1),
+    ]
+    for dt in stamps:
+        st = SqlStatement(spark)
+        got = st.sql(f"SELECT unix_micros({st.value(dt)}) AS m").collect()[0]["m"]
+        want = spark.range(1).select(F.unix_micros(F.lit(dt)).alias("m")).first()["m"]
+        assert got == want, dt
+
+
+def test_render_sql_forms_match_column_forms(spark):
+    # compiled SQL renders _ts/_key/_value through the SQL forms; the
+    # gates' DataFrame code through the Column forms: they must agree
+    import pyspark.sql.functions as F
+
+    from platform_spark.functions import render
+
+    df = spark.createDataFrame(
+        [("a\\b", b"\x00\xff", datetime(2024, 1, 2, 3, 4, 5, 678901)),
+         (None, None, None), ("漢字", b"", datetime(1992, 1, 1))],
+        "s string, b binary, t timestamp",
+    )
+    rows = df.select(
+        render.bytea_text(F.col("s")), F.expr(render.bytea_text_sql("s")),
+        render.bytea_text(F.col("b")), F.expr(render.bytea_text_sql("b")),
+        render.ts_text(F.col("t")), F.expr(render.ts_text_sql("t")),
+    ).collect()
+    for r in rows:
+        assert r[0] == r[1] and r[2] == r[3] and r[4] == r[5], r
+    assert rows[0][0] == "\\x615c62" and rows[1][0] is None

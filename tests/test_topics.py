@@ -269,3 +269,41 @@ def test_topic_memo_survives_concurrent_clears(mat_catalog):
     cfg = mat_catalog.configs["events"]
     assert set(mat_catalog._frames) <= {("events", path, w, cfg) for w in (True, False)}
     assert mat_catalog.topic("events") is mat_catalog.topic("events")
+
+
+def _memo_views(spark, name: str) -> set[str]:
+    prefix = f"__kafsql_topic_{name}_"
+    return {t.name for t in spark.catalog.listTables() if t.name.startswith(prefix)}
+
+
+def test_memo_views_dropped_with_their_frames(spark, tmp_path):
+    """Each memoized frame is named by one session view, which
+    clear_frames() and materialize() drop together with the memo entry."""
+    cat = TopicCatalog(spark, SF_DIR)
+    cat.materialize("events", str(tmp_path / "a"))
+    frames = [cat.topic("events"), cat.topic("events", with_schema_columns=False)]
+    views = {cat.frame_view(f) for f in frames}
+    assert None not in views and len(views) == 2
+    assert views <= _memo_views(spark, "events")
+    assert cat.frame_view(spark.range(1)) is None
+    cat.clear_frames()
+    assert views.isdisjoint(_memo_views(spark, "events"))
+    again = cat.topic("events")
+    view = cat.frame_view(again)
+    assert view not in views
+    assert spark.table(view).count() == again.count()
+    cat.materialize("events", str(tmp_path / "b"))
+    assert cat.frame_view(again) is None
+    assert view not in _memo_views(spark, "events")
+
+
+def test_released_catalog_drops_its_memo_views(spark, tmp_path):
+    import gc
+
+    cat = TopicCatalog(spark, SF_DIR)
+    cat.materialize("events", str(tmp_path / "a"))
+    view = cat.frame_view(cat.topic("events"))
+    assert view in _memo_views(spark, "events")
+    del cat
+    gc.collect()
+    assert view not in _memo_views(spark, "events")
