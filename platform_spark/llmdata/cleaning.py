@@ -17,6 +17,9 @@ production.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -94,6 +97,31 @@ MIN_DISTINCT_RATIO = 0.45
 MAX_TOP_WORD_RATIO = 0.10
 
 
+#: the metric columns every quality entry point emits after the id, in order
+_METRICS = ("n_words", "mean_word_len", "distinct_ratio", "top_word_ratio")
+#: the rule booleans, in output order (``passes_all`` is their AND)
+QUALITY_RULES = ("word_count_ok", "mean_word_len_ok", "repetition_ok", "top_word_ok")
+
+
+def _rule_flags(n_words, mean_len, distinct_ratio, top_ratio) -> list[Column]:
+    """The QUALITY_RULES booleans over the four metrics, unnamed."""
+    return [
+        (n_words >= MIN_WORDS) & (n_words <= MAX_WORDS),
+        (mean_len >= MIN_MEAN_WORD_LEN) & (mean_len <= MAX_MEAN_WORD_LEN),
+        distinct_ratio >= MIN_DISTINCT_RATIO,
+        top_ratio <= MAX_TOP_WORD_RATIO,
+    ]
+
+
+def _with_rule_flags(metrics: DataFrame) -> DataFrame:
+    """`metrics` (the id column, then _METRICS) plus QUALITY_RULES and
+    passes_all."""
+    flags = _rule_flags(*[F.col(c) for c in _METRICS])
+    return metrics.select(
+        "*", *[f.alias(name) for f, name in zip(flags, QUALITY_RULES)]
+    ).withColumn("passes_all", reduce(and_, [F.col(n) for n in QUALITY_RULES]))
+
+
 def quality_rules(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -145,34 +173,7 @@ def quality_rules(
         )
     )
     m = base.join(top, id_col)
-    return m.select(
-        id_col,
-        "n_words",
-        "mean_word_len",
-        "distinct_ratio",
-        "top_word_ratio",
-        (F.col("n_words") >= MIN_WORDS) & (F.col("n_words") <= MAX_WORDS),
-        (F.col("mean_word_len") >= MIN_MEAN_WORD_LEN)
-        & (F.col("mean_word_len") <= MAX_MEAN_WORD_LEN),
-        (F.col("distinct_ratio") >= MIN_DISTINCT_RATIO),
-        (F.col("top_word_ratio") <= MAX_TOP_WORD_RATIO),
-    ).toDF(
-        id_col,
-        "n_words",
-        "mean_word_len",
-        "distinct_ratio",
-        "top_word_ratio",
-        "word_count_ok",
-        "mean_word_len_ok",
-        "repetition_ok",
-        "top_word_ok",
-    ).withColumn(
-        "passes_all",
-        F.col("word_count_ok")
-        & F.col("mean_word_len_ok")
-        & F.col("repetition_ok")
-        & F.col("top_word_ok"),
-    )
+    return _with_rule_flags(m.select(id_col, *_METRICS))
 
 
 # -- line-level corpus operators -------------------------------------------
@@ -405,75 +406,12 @@ def repetition_metrics(
     return per_n.groupBy("doc_id").agg(*aggs)
 
 
-def quality_rules_rowwise(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """`quality_rules` as pure per-row expressions — IDENTICAL output
-    columns/values (equality pytest-pinned), zero shuffle.
-
-    The one aggregate-looking metric, top-word ratio, becomes the longest
-    run of equal tokens in the SORTED token array (a single O(n log n)
-    fold per row). Use this twin on unbounded streams (continuous
-    curation) or wherever an extra exchange is unwanted; the batch
-    version's explode+agg shape remains better when the plan already
-    shuffles on doc_id.
-    """
-    words = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
-    n_words = F.size(words)
-    mean_len = F.round(
-        F.aggregate(words, F.lit(0.0), lambda acc, w: acc + F.length(w)) / n_words,
-        6,
-    )
-    distinct_ratio = F.round(F.size(F.array_distinct(words)) / n_words, 6)
-    run = F.aggregate(
-        F.array_sort(words),
-        F.struct(
-            F.lit("").alias("prev"), F.lit(0).alias("run"), F.lit(0).alias("best")
-        ),
-        lambda acc, w: F.struct(
-            w.alias("prev"),
-            F.when(w == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)).alias("run"),
-            F.greatest(
-                acc["best"],
-                F.when(w == acc["prev"], acc["run"] + 1).otherwise(F.lit(1)),
-            ).alias("best"),
-        ),
-        lambda acc: acc["best"],
-    )
-    top_ratio = F.round(run / n_words, 6)
-    out = df.select(
-        F.col(id_col).alias(id_col),
-        n_words.alias("n_words"),
-        mean_len.alias("mean_word_len"),
-        distinct_ratio.alias("distinct_ratio"),
-        top_ratio.alias("top_word_ratio"),
-    )
-    return out.select(
-        "*",
-        ((F.col("n_words") >= MIN_WORDS) & (F.col("n_words") <= MAX_WORDS)).alias(
-            "word_count_ok"
-        ),
-        (
-            (F.col("mean_word_len") >= MIN_MEAN_WORD_LEN)
-            & (F.col("mean_word_len") <= MAX_MEAN_WORD_LEN)
-        ).alias("mean_word_len_ok"),
-        (F.col("distinct_ratio") >= MIN_DISTINCT_RATIO).alias("repetition_ok"),
-        (F.col("top_word_ratio") <= MAX_TOP_WORD_RATIO).alias("top_word_ok"),
-    ).withColumn(
-        "passes_all",
-        F.col("word_count_ok")
-        & F.col("mean_word_len_ok")
-        & F.col("repetition_ok")
-        & F.col("top_word_ok"),
-    )
-
-
-def quality_passes_expr(text: Column) -> Column:
-    """`passes_all` as ONE column expression (same rounded metrics as
-    quality_rules / quality_rules_rowwise — equality pytest-pinned).
-    For streams and filters where a separate metrics frame is unwanted.
-    NULL text behaves as '' (fails the word-count rule → false, not NULL),
-    matching both quality_rules twins."""
+def _rowwise_metrics(text: Column) -> list[Column]:
+    """(n_words, mean_word_len, distinct_ratio, top_word_ratio) of `text`
+    as per-row expressions, rounded like quality_rules; NULL text behaves
+    as ''. The one aggregate-looking metric, top-word ratio, is the
+    longest run of equal tokens in the SORTED token array (a single
+    O(n log n) fold per row)."""
     words = F.split(F.trim(F.coalesce(text, F.lit(""))), r"\s+")
     n_words = F.size(words)
     mean_len = F.round(
@@ -496,15 +434,35 @@ def quality_passes_expr(text: Column) -> Column:
         ),
         lambda acc: acc["best"],
     )
-    top_ratio = F.round(run / n_words, 6)
-    return (
-        (n_words >= MIN_WORDS)
-        & (n_words <= MAX_WORDS)
-        & (mean_len >= MIN_MEAN_WORD_LEN)
-        & (mean_len <= MAX_MEAN_WORD_LEN)
-        & (distinct_ratio >= MIN_DISTINCT_RATIO)
-        & (top_ratio <= MAX_TOP_WORD_RATIO)
+    return [n_words, mean_len, distinct_ratio, F.round(run / n_words, 6)]
+
+
+def quality_rules_rowwise(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """`quality_rules` as pure per-row expressions — IDENTICAL output
+    columns/values (equality pytest-pinned), zero shuffle.
+
+    Use this twin on unbounded streams (continuous curation) or wherever
+    an extra exchange is unwanted; the batch version's explode+agg shape
+    remains better when the plan already shuffles on doc_id.
+    """
+    metrics = _rowwise_metrics(F.col(text_col))
+    return _with_rule_flags(
+        df.select(
+            F.col(id_col).alias(id_col),
+            *[m.alias(name) for m, name in zip(metrics, _METRICS)],
+        )
     )
+
+
+def quality_passes_expr(text: Column) -> Column:
+    """`passes_all` as ONE column expression (same rounded metrics as
+    quality_rules / quality_rules_rowwise — equality pytest-pinned).
+    For streams and filters where a separate metrics frame is unwanted.
+    NULL text behaves as '' (fails the word-count rule → false, not NULL),
+    matching both quality_rules twins."""
+    return reduce(and_, _rule_flags(*_rowwise_metrics(text)))
 
 
 # -- HTML → text extraction (C4-style) --------------------------------------

@@ -1,10 +1,12 @@
 """End-to-end corpus curation: the composition a training-data team runs.
 
-Chains the individually-gated operators into one lazy DataFrame program —
-clean → redact → quality-gate → dedup (exact-collapse fast path) →
-decontaminate → split → pack — so a user gets the whole curation flow with
-one call, and Catalyst sees a single plan per output (filters push down
-through the stages; nothing materializes until the caller acts).
+Chains the individually-gated operators — clean → redact → quality-gate →
+dedup (exact-collapse fast path) → decontaminate → split → pack — so a
+user gets the whole curation flow with one call. The outputs are lazy
+frames, but building them is not free of jobs: with ``persist=True`` the
+quality-passing documents are materialized once (an eager local
+checkpoint), and the near-dup cluster step checkpoints its pair graph and
+runs its component resolution while the frames are built (clusters.py).
 
 Every stage is the already-oracle-verified operator; this module only
 wires contracts together (doc_id/text in, curated table + per-stage
@@ -30,7 +32,7 @@ def curate_corpus(
     persist: bool = True,
 ) -> dict[str, DataFrame]:
     """Run the full curation flow; returns every intermediate stage keyed
-    by name (all lazy):
+    by name:
 
     - ``cleaned``      boilerplate-filtered + PII-redacted text
     - ``quality``      per-doc metrics with ``passes_all``
@@ -40,17 +42,32 @@ def curate_corpus(
     - ``curated``      deduped minus contaminated, with split assignment
     - ``packed``       (doc_id, bin) sequence-packing of the train split
 
-    ``persist=True`` (default) persists the stage-boundary frames
-    (cleaned / deduped / curated) with MEMORY_AND_DISK: each boundary is
-    consumed by several downstream branches, and without a persist every
-    output action re-executes the whole upstream chain — at 100 TB a real
-    pipeline checkpoints these boundaries to tables for exactly this
-    reason. Pass False to keep the program fully lazy (single-output use).
+    The quality gate is row-wise (`quality_rules_rowwise`: the rows of
+    `quality_rules` without its doc-keyed shuffles), and the passing set
+    is ``cleaned`` filtered by `quality_passes_expr`.
+
+    ``persist=True`` (default) materializes the stage boundaries, each
+    read by several downstream branches that would otherwise re-run the
+    whole upstream chain. The passing set, which the near-dup graph alone
+    reads about nine times, is materialized ONCE by an eager
+    ``localCheckpoint`` during this call, so the cluster, dedup, curation
+    and drop-report plans read a small truncated relation instead of
+    re-running scan → clean → quality; cleaned / deduped / curated are
+    persisted MEMORY_AND_DISK, filled by the first action that reads
+    them. Scale trade-off, the stance of the checkpoints in clusters.py:
+    a local checkpoint has no lineage to recompute a lost block from, so
+    losing an executor fails the job; at 100 TB a real pipeline writes
+    these boundaries to tables instead.
+
+    ``persist=False`` keeps every boundary lazy: the wiring here runs no
+    job (the cluster step still runs its own to resolve components), and
+    each output action re-runs its whole lineage — single-output use.
     """
     from pyspark import StorageLevel
     from platform_spark.llmdata.cleaning import (
         filter_boilerplate_lines,
-        quality_rules,
+        quality_passes_expr,
+        quality_rules_rowwise,
         redact_pii,
     )
     from platform_spark.llmdata.clusters import dedup_clusters_fast
@@ -69,10 +86,10 @@ def curate_corpus(
     )
     if persist:
         cleaned = cleaned.persist(StorageLevel.MEMORY_AND_DISK)
-    quality = quality_rules(cleaned)
-    passing = cleaned.join(
-        quality.filter("passes_all").select("doc_id"), "doc_id", "left_semi"
-    )
+    quality = quality_rules_rowwise(cleaned)
+    passing = cleaned.filter(quality_passes_expr(F.col("text")))
+    if persist:
+        passing = passing.localCheckpoint(eager=True)
 
     clusters = dedup_clusters_fast(passing, threshold=ngram_threshold)
     keepers = clusters.filter("is_keeper").select("doc_id")
@@ -114,14 +131,6 @@ def curate_corpus(
     }
 
 
-_QUALITY_RULES = (
-    "word_count_ok",
-    "mean_word_len_ok",
-    "repetition_ok",
-    "top_word_ok",
-)
-
-
 def drop_report(stages: dict[str, DataFrame]) -> DataFrame:
     """Per-document curation provenance: WHY each input doc is absent
     from the curated output — the audit table every corpus release needs
@@ -136,10 +145,12 @@ def drop_report(stages: dict[str, DataFrame]) -> DataFrame:
     from the lazy stage frames `curate_corpus` already returns — no
     recomputation beyond the persisted boundaries.
     """
+    from platform_spark.llmdata.cleaning import QUALITY_RULES
+
     quality = stages["quality"]
     fails = F.concat_ws(
         ",",
-        *[F.when(~F.col(r), F.lit(r)) for r in _QUALITY_RULES],
+        *[F.when(~F.col(r), F.lit(r)) for r in QUALITY_RULES],
     )
     q_drops = quality.filter(~F.col("passes_all")).select(
         "doc_id", F.lit("quality").alias("stage"), fails.alias("detail")

@@ -3,8 +3,9 @@
 parse → validate → govern (admission, scan budget, cache) → compile →
 DataFrame. The introspection statements (SHOW TOPICS / DESCRIBE /
 EXPLAIN — server.go:758-962) and the SET/RESET status row return JVM
-LocalRelations, whose collect runs no Spark job; SHOW PARTITIONS and
-SHOW SNAPSHOTS are real queries.
+LocalRelations, whose collect runs no Spark job, and so does SHOW
+PARTITIONS on a materialized topic; SHOW PARTITIONS on any other topic
+and SHOW SNAPSHOTS are real queries.
 """
 
 from __future__ import annotations
@@ -327,6 +328,13 @@ class KafSqlEngine:
 
     def _show_partitions(self, topic: str) -> DataFrame:
         df = self.catalog.topic(topic, with_schema_columns=False)
+        # a materialized topic lists its partitions from the file index
+        # its frame already holds; envelope, Iceberg and .kfs frames run
+        # the DISTINCT query
+        listed = getattr(self.catalog, "listed_partitions", None)
+        parts = listed(df) if listed is not None else None
+        if parts:
+            return local_rows(self.spark, ("_partition",), [(p,) for p in parts])
         with SqlStatement(
             self.spark, getattr(self.catalog, "frame_view", None)
         ) as st:

@@ -83,6 +83,28 @@ def _split_top(text: str, sep: str = ",") -> list[str]:
     return [p for p in parts if p]
 
 
+def _mask_quoted(text: str) -> str:
+    """`text` with every character inside a single-quoted literal replaced
+    by NUL: the same length, so a regex match on the mask gives the span
+    of the original text, and no keyword or separator matches inside a
+    literal. A doubled quote (the `''` escape) closes and reopens the
+    literal, so its content stays masked."""
+    out: list[str] = []
+    in_q = False
+    for ch in text:
+        if ch == "'":
+            in_q = not in_q
+            out.append(ch)
+        else:
+            out.append("\0" if in_q else ch)
+    return "".join(out)
+
+
+def _unquote(lit: str) -> str:
+    """The value of a `'...'` literal (a doubled quote is one quote)."""
+    return lit[1:-1].replace("''", "'")
+
+
 def _find_kw(text: str, kw: str) -> int:
     """Index of a top-level keyword (outside quotes/parens), or -1."""
     pat = re.compile(rf"(?i)\b{kw}\b")
@@ -159,13 +181,17 @@ def parse(statement: str) -> Query:
 
 
 def _extract_keyword_clauses(q: Query, tail: str) -> str:
+    masked = _mask_quoted(tail)
+
     def take(pattern: str) -> str | None:
-        nonlocal tail
-        m = re.search(pattern, tail, flags=re.IGNORECASE)
+        nonlocal tail, masked
+        m = re.search(pattern, masked, flags=re.IGNORECASE)
         if not m:
             return None
-        tail = (tail[: m.start()] + " " + tail[m.end() :]).strip()
-        return m.group(1) if m.groups() else ""
+        value = tail[m.start(1) : m.end(1)] if m.groups() else ""
+        tail = tail[: m.start()] + " " + tail[m.end() :]
+        masked = masked[: m.start()] + " " + masked[m.end() :]
+        return value
 
     v = take(r"\bLAST\s+([0-9][0-9a-zA-Zµ.]*)")
     if v is not None:
@@ -178,7 +204,7 @@ def _extract_keyword_clauses(q: Query, tail: str) -> str:
         q.within_seconds = parse_duration(v)
     if take(r"\bSCAN\s+FULL\b") is not None:
         q.scan_full = True
-    return tail
+    return tail.strip()
 
 
 def _parse_time_travel(tail: str):
@@ -283,6 +309,8 @@ def _parse_join_condition(text: str) -> JoinCondition:
 
 
 _TS_LIT = r"(?:'[^']*'|\d+)"
+#: a single-quoted string literal, `''` being an escaped quote
+_STR_LIT = r"'(?:[^']|'')*'"
 
 
 def _parse_where(q: Query, tail: str) -> str:
@@ -298,21 +326,32 @@ def _parse_where(q: Query, tail: str) -> str:
     clause = tail[:end].strip()
     tail = tail[end:]
 
-    # BETWEEN first (its AND would confuse the conjunct split)
+    # BETWEEN first (its AND would confuse the conjunct split). Keywords
+    # and separators are matched on the quote mask, never inside literals
+    masked = _mask_quoted(clause)
     bm = re.search(
-        rf"(?i)\b_ts\s+BETWEEN\s+({_TS_LIT})\s+AND\s+({_TS_LIT})", clause
+        rf"(?i)\b_ts\s+BETWEEN\s+({_TS_LIT})\s+AND\s+({_TS_LIT})", masked
     )
     if bm:
-        q.ts_min = parse_ts_literal(bm.group(1))
-        q.ts_max = parse_ts_literal(bm.group(2))
-        clause = (clause[: bm.start()] + clause[bm.end() :]).strip()
-        # excising a mid-clause BETWEEN leaves "... AND AND ..." — collapse
-        # it, then strip any dangling leading/trailing AND
-        clause = re.sub(r"(?i)\s*\bAND\s+AND\b\s*", " AND ", clause)
-        clause = re.sub(r"(?i)^\s*AND\s+|\s+AND\s*$", "", clause)
+        q.ts_min = parse_ts_literal(clause[bm.start(1) : bm.end(1)])
+        q.ts_max = parse_ts_literal(clause[bm.start(2) : bm.end(2)])
+        # excise the conjunct with one adjoining AND, the one before it if
+        # there is one, so no "... AND AND ..." is left behind
+        lo, hi = bm.span()
+        before = re.search(r"(?i)\s+AND\s*$", masked[:lo])
+        after = re.match(r"(?i)\s*AND\s+", masked[hi:])
+        if before:
+            lo = before.start()
+        elif after:
+            hi += after.end()
+        clause = clause[:lo] + " " + clause[hi:]
+        masked = masked[:lo] + " " + masked[hi:]
 
-    for pred in re.split(r"(?i)\s+AND\s+", clause):
-        pred = pred.strip()
+    cuts = [m.span() for m in re.finditer(r"(?i)\s+AND\s+", masked)]
+    starts = [0] + [e for _, e in cuts]
+    ends = [b for b, _ in cuts] + [len(clause)]
+    for lo, hi in zip(starts, ends):
+        pred = clause[lo:hi].strip()
         if not pred:
             continue
         pm = re.match(r"(?i)^_partition\s*=\s*(\d+)$", pred)
@@ -333,19 +372,21 @@ def _parse_where(q: Query, tail: str) -> str:
             else:
                 q.ts_max = parse_ts_literal(tm.group(2))
             continue
-        km = re.match(r"(?i)^_key\s*=\s*'([^']*)'$", pred)
+        km = re.match(rf"(?i)^_key\s*=\s*({_STR_LIT})$", pred)
         if km:
             # extension (the reference rejects _key predicates,
             # parser.go:259-261): point lookup by record key — over a
             # _key-bucketed Iceberg topic the catalog plans only the
             # key's spec bucket (1/N of the files)
-            q.key_eq = km.group(1)
+            q.key_eq = _unquote(km.group(1))
             continue
-        kin = re.match(r"(?i)^_key\s+IN\s*\((\s*'[^']*'(?:\s*,\s*'[^']*')*\s*)\)$", pred)
+        kin = re.match(
+            rf"(?i)^_key\s+IN\s*\((\s*{_STR_LIT}(?:\s*,\s*{_STR_LIT})*\s*)\)$", pred
+        )
         if kin:
             # batch fetch: the IN-list twin (union of the keys' buckets)
             q.key_in = tuple(
-                m.group(1) for m in re.finditer(r"'([^']*)'", kin.group(1))
+                _unquote(m.group(0)) for m in re.finditer(_STR_LIT, kin.group(1))
             )
             # cap enforcement moved to Compiler._validate (r14 ADVICE):
             # only TIME-UNBOUNDED large lists are rejected there — the

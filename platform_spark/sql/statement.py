@@ -116,14 +116,15 @@ class SqlStatement:
 
 
 def local_rows(spark: SparkSession, names: tuple[str, ...], rows) -> DataFrame:
-    """String rows as an inline VALUES table: a JVM LocalRelation built in
-    one call, whose collect runs no Spark job."""
+    """Rows as an inline VALUES table: a JVM LocalRelation built in one
+    call, whose collect runs no Spark job. A column of exact ints is INT,
+    a column of strings STRING; an empty table has STRING columns."""
     st = SqlStatement(spark)
     if not rows:
         cols = ", ".join(f"CAST(NULL AS STRING) AS {quote(n)}" for n in names)
         return st.sql(f"SELECT {cols} WHERE false")
     values = ", ".join(
-        "(" + ", ".join(st.value(str(v)) for v in row) + ")" for row in rows
+        "(" + ", ".join(st.value(v) for v in row) + ")" for row in rows
     )
     cols = ", ".join(quote(n) for n in names)
     return st.sql(f"SELECT * FROM VALUES {values} AS t({cols})")

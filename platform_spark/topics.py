@@ -392,6 +392,10 @@ for _t, (_pk, _cols) in env.PASSTHROUGH_TABLES.items():
     )
 
 
+#: the `_partition=N` directory of a materialized topic's data file
+_PARTITION_DIR = re.compile(r"/_partition=(\d+)/")
+
+
 def _drop_frame_views(spark: SparkSession, frames: dict) -> None:
     try:
         for _frame, view in list(frames.values()):
@@ -546,6 +550,22 @@ class TopicCatalog:
                 if frame is df:
                     return view
         return None
+
+    def listed_partitions(self, df: DataFrame) -> list[int] | None:
+        """The sorted `_partition` values of `df` if it is a memoized
+        materialized topic frame, read from the `_partition=N` directories
+        of the file index the frame already holds (no Spark job); None
+        for any other frame. The partitioned write makes a directory only
+        for a partition that has rows, so this is the DISTINCT list."""
+        if self.frame_view(df) is None:
+            return None
+        parts = set()
+        for path in df.inputFiles():
+            m = _PARTITION_DIR.search(path)
+            if m is None:
+                return None
+            parts.add(int(m.group(1)))
+        return sorted(parts)
 
     def clear_frames(self, name: str | None = None) -> None:
         """Forget memoized topic frames, one topic's or all of them, and

@@ -794,6 +794,27 @@ def test_introspection_collects_without_jobs(spark, mat_topics):
     assert jobs_run(spark) == j0
 
 
+def test_show_partitions_of_materialized_topic_runs_no_job(spark, mat_topics, catalog):
+    # a materialized topic lists its partitions from its frame's file
+    # index: the same rows and type as the DISTINCT query, no job
+    eng = KafSqlEngine(mat_topics, now=NOW)
+    for topic in ("events", "orders", "payments"):
+        j0 = jobs_run(spark)
+        df = eng.sql(f"SHOW PARTITIONS FROM {topic}")
+        got = df.collect()
+        assert jobs_run(spark) == j0, topic
+        frame = mat_topics.topic(topic, with_schema_columns=False)
+        want = frame.select("_partition").distinct().orderBy("_partition")
+        assert got == want.collect() and got, topic
+        assert df.dtypes == want.dtypes == [("_partition", "int")]
+    # an envelope-served topic still runs the DISTINCT query
+    df = KafSqlEngine(catalog, now=NOW).sql("SHOW PARTITIONS FROM events")
+    j0 = jobs_run(spark)
+    assert [r[0] for r in df.collect()] == [0, 1, 2, 3]
+    assert jobs_run(spark) > j0
+    assert catalog.listed_partitions(catalog.topic("events")) is None
+
+
 def test_statement_views_never_outlive_the_statement(spark, catalog, monkeypatch):
     # per-call frames (envelope views) are read through views named for
     # one statement; none survives success, a ValidationError raised

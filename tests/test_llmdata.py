@@ -682,6 +682,65 @@ def test_curate_corpus_end_to_end(spark, docs):
             assert r["detail"]  # at least one named failing rule
 
 
+def _pipeline_corpus(spark, docs):
+    """60 fixture docs (a file scan) plus a NULL-text and an empty-text doc."""
+    extra = spark.createDataFrame(
+        [(1_000_001, None), (1_000_002, "")], "doc_id: long, text: string"
+    )
+    return docs.select("doc_id", "text").filter("doc_id < 60").unionByName(extra)
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_curate_corpus_stages_read_the_passing_checkpoint(spark, docs):
+    """The quality-passing set is materialized once while curate_corpus
+    runs: the cluster and dedup plans read that checkpoint, not the
+    source scan, and the row-wise quality frame equals the batch rules."""
+    from platform_spark.llmdata.cleaning import quality_rules
+    from platform_spark.llmdata.pipeline import curate_corpus
+
+    out = curate_corpus(_pipeline_corpus(spark, docs), bench=None)
+    assert "FileScan" in _executed_plan(out["cleaned"])
+    for name in ("clusters", "deduped"):
+        plan = _executed_plan(out[name])
+        assert "FileScan" not in plan, name
+        assert "ExistingRDD" in plan, name
+    got = {tuple(r) for r in out["quality"].collect()}
+    want = {tuple(r) for r in quality_rules(out["cleaned"]).collect()}
+    assert got == want
+    assert {r[0] for r in got} >= {1_000_001, 1_000_002}
+    assert out["quality"].columns == quality_rules(out["cleaned"]).columns
+
+
+def test_curate_corpus_unpersisted_build_runs_no_job(spark, docs, monkeypatch):
+    """persist=False wires every stage lazily: with the cluster step (which
+    resolves its components eagerly) stubbed out, building the outputs
+    runs no Spark job, and the stages keep their whole lineage."""
+    from platform_spark.llmdata import clusters
+    from platform_spark.llmdata.pipeline import curate_corpus
+    from tests.conftest import jobs_run
+
+    def lazy_clusters(df, threshold):
+        return df.select(
+            "doc_id",
+            F.col("doc_id").alias("cluster_id"),
+            F.lit(True).alias("is_keeper"),
+        )
+
+    monkeypatch.setattr(clusters, "dedup_clusters_fast", lazy_clusters)
+    corpus = _pipeline_corpus(spark, docs)
+    j0 = jobs_run(spark)
+    out = curate_corpus(corpus, bench=None, persist=False)
+    assert jobs_run(spark) == j0
+    assert "FileScan" in _executed_plan(out["deduped"])
+    # the default persists: the passing checkpoint runs while building
+    j0 = jobs_run(spark)
+    curate_corpus(corpus, bench=None)
+    assert jobs_run(spark) > j0
+
+
 def test_repetition_metrics_known_values(spark):
     """Hand-computed Gopher fractions: counts multiply overlaps, capped at
     1.0; docs shorter than n get zero rows, not missing rows."""

@@ -268,3 +268,46 @@ def test_key_in_predicate():
         f"SELECT _offset FROM events WHERE _key IN ({over}) LAST 1h"
     )
     assert len(q.key_in) == parser.MAX_KEY_IN + 1
+
+
+def test_keywords_inside_quoted_literals_are_data():
+    # a clause keyword inside a literal is part of the value: it must not
+    # be lifted out of the statement, nor split the WHERE conjuncts
+    q = parser.parse("SELECT _offset FROM events WHERE _key = 'TAIL 5' LAST 1d")
+    assert q.key_eq == "TAIL 5" and q.tail is None and q.last_seconds == 86400.0
+    q = parser.parse("SELECT _offset FROM events WHERE _key = 'x AND y' LAST 1d")
+    assert q.key_eq == "x AND y"
+    q = parser.parse(
+        "SELECT _offset FROM events WHERE _key = 'LAST 2d' AND _partition = 1 TAIL 3"
+    )
+    assert q.key_eq == "LAST 2d" and q.last_seconds is None
+    assert q.partition == 1 and q.tail == 3
+    q = parser.parse(
+        "SELECT _offset FROM events WHERE _key IN ('WITHIN 5m', 'SCAN FULL') LAST 1h"
+    )
+    assert q.key_in == ("WITHIN 5m", "SCAN FULL")
+    assert q.within_seconds is None and not q.scan_full
+    # the same keywords outside the literal still count
+    q = parser.parse("SELECT _offset FROM events WHERE _key = 'k' SCAN FULL")
+    assert q.key_eq == "k" and q.scan_full
+    # a BETWEEN next to a quoted AND keeps both conjuncts whole
+    q = parser.parse(
+        "SELECT _offset FROM events WHERE _key = 'a AND b' "
+        "AND _ts BETWEEN '2024-01-02 00:00:00' AND '2024-01-03 00:00:00'"
+    )
+    assert q.key_eq == "a AND b" and q.ts_min.day == 2 and q.ts_max.day == 3
+
+
+def test_doubled_quote_escape_in_literals():
+    # '' is one quote inside a literal, and the text after it is still
+    # inside the literal
+    q = parser.parse(
+        "SELECT _offset FROM events WHERE _key = 'it''s TAIL 9' LAST 1d"
+    )
+    assert q.key_eq == "it's TAIL 9" and q.tail is None
+    q = parser.parse(
+        "SELECT _offset FROM events WHERE _key IN ('o''k', 'a AND ''b''') LAST 1d"
+    )
+    assert q.key_in == ("o'k", "a AND 'b'")
+    with pytest.raises(ParseError):
+        parser.parse("SELECT _offset FROM events WHERE _key = 'it's' LAST 1d")
