@@ -17,9 +17,11 @@ Phases:
    are reported separately under "queries_cold" for transparency; "value"
    sums ingest + steady-state runs. The engine's row-level result cache is
    disabled for the whole bench so every run executes the full plan, and
-   (r16) `spark.catalog.clearCache()` runs before EVERY timed run so a
-   repeat can never read the previous run's intermediate `.cache()`
-   tables — min-of-runs measures the recompute, per r15 verdict #3.
+   `spark.catalog.clearCache()` runs before EVERY timed run so a repeat
+   can never read a cache left by a previous run — min-of-runs measures
+   the recompute. The package's own intra-query reuse is
+   `localCheckpoint`, which makes no CacheManager entry and is released
+   with its frames; the clear guards caches a caller makes.
 
 Repeat policy (noise control): this host's run-to-run wall variance
 (±15% observed on identical code, r8→r9, re-confirmed r10) exceeds any
@@ -647,19 +649,16 @@ def main() -> None:
     SLOW_MAX_RUNS = 4
 
     def timed(name: str, fn) -> None:
-        # r16 (measurement integrity, r15 verdict #3): Spark's CacheManager
-        # matches ANALYZED PLANS, so a leg's warm repeats would otherwise
-        # read the intermediate `.cache()` tables materialized by the
-        # PREVIOUS run of the same plan — min-of-runs then partially times
-        # cache reads, not the recompute. Clearing before every run (cold
-        # included, so a prior leg's residue never leaks in) keeps each
-        # timed run computing from the parquet inputs; the caches still
-        # pay off WITHIN a run wherever one plan references a subtree
-        # 2-4x, which is the legitimate §5 win. Also drops the
-        # accumulated cache blocks that squeezed execution memory for
-        # late-suite legs (the r16 baseline measured dsp 4.6 s in-suite
-        # vs 1.0 s isolated). Cached legs step UP vs r15's ledger by
-        # construction — see OPTIMIZATION_r17.md ("Before r17").
+        # measurement integrity: Spark's CacheManager matches ANALYZED
+        # PLANS, so if anything a leg runs caches a frame, its warm
+        # repeats would read the table materialized by the PREVIOUS run
+        # of the same plan — min-of-runs would then time cache reads,
+        # not the recompute. The package's operators cache nothing (their
+        # intra-query reuse is localCheckpoint, released with its
+        # frames), so the clear guards caches a caller makes; clearing
+        # before every run (cold included, so a prior leg's residue never
+        # leaks in) keeps each timed run computing from the parquet
+        # inputs.
         spark.catalog.clearCache()
         t0 = time.time()
         fn()

@@ -70,9 +70,10 @@ def contamination(
     )
     if broadcast_bench:
         b_sh = F.broadcast(b_sh)
-    # cached (r15): the shingle+probe pass feeds BOTH the per-pair and
-    # the per-doc branches — one execution instead of two
-    hits = d_sh.join(b_sh, "sh").cache()
+    # checkpointed: the shingle+probe pass feeds BOTH the per-pair and
+    # the per-doc branches through different exchanges — one execution
+    # instead of two
+    hits = d_sh.join(b_sh, "sh").localCheckpoint(eager=False)
     per_pair = hits.groupBy("doc_id", "bench_id").agg(
         F.count("*").alias("pair_common")
     )

@@ -148,14 +148,12 @@ class RepGraph(NamedTuple):
 def _collapse(df: DataFrame, content_hash: Column, id_col: str) -> tuple[DataFrame, DataFrame]:
     """(membership, counts) for exact-duplicate groups under content_hash.
 
-    Deliberately UNcached (r16): the r15 round cached both outputs for
-    their 2-4 plan references, but the honest-methodology A/B (caches
-    cleared between runs, interleaved on/off in one session) measured the
-    cache barrier + materialization COSTING more than the repeated
-    references save — mh_p med 4.33 -> 3.77 s with the caches dropped,
-    ddj/dcf/ctn equal or slightly better. The references stay cheap
-    without a cache because the collapse aggregate is one exchange that
-    Spark's exchange reuse dedups within the plan."""
+    Deliberately no reuse barrier: the outputs have 2-4 plan references,
+    but materializing them costs more than the repeated references save
+    (interleaved A/B with caches cleared between runs: mh_p med 4.33 s
+    with a barrier vs 3.77 s without, ddj/dcf/ctn equal or slightly
+    better). The references stay cheap because the collapse aggregate is
+    one exchange that Spark's exchange reuse dedups within the plan."""
     hashes = df.select(F.col(id_col).alias("doc_id"), content_hash.alias("__ch"))
     reps = hashes.groupBy("__ch").agg(
         F.min("doc_id").alias("rep_id"), F.count("*").alias("n_copies")
@@ -294,12 +292,12 @@ def _ngram_rep_common(
     rep_docs = df.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")
     ).join(counts.select(F.col("rep_id").alias("doc_id"), "n_copies"), "doc_id")
-    # the cached shingle table CARRIES n_copies (r15): n_copies is a pure
-    # function of doc_id, so folding it into the explode costs one int
-    # column — and the copy-weighted hot cutoff below becomes a plain
-    # aggregate over this cache instead of a SortMergeJoin of the whole
-    # shingle table back against rep_docs (2 exchanges + a sort, and the
-    # hot subtree used to execute once per self-join side)
+    # the shingle table CARRIES n_copies: n_copies is a pure function of
+    # doc_id, so folding it into the explode costs one int column — and
+    # the copy-weighted hot cutoff below becomes a plain aggregate over
+    # this table instead of a SortMergeJoin of the whole shingle table
+    # back against rep_docs (2 exchanges + a sort, and the hot subtree
+    # used to execute once per self-join side)
     # UNwidened (r16): the r15 round widened this tokenize input, but the
     # honest-methodology interleaved A/B (caches cleared between runs)
     # reads the widen as a small consistent LOSS on every consumer leg —
@@ -318,7 +316,10 @@ def _ngram_rep_common(
             F.explode(shingles_from_tokens(F.col("toks"), k)).alias("shingle"),
         )
         .select("doc_id", "n_copies", md5_int(F.col("shingle")).alias("sh"))
-        .cache()
+        # checkpointed: sizes, the hot cutoff and the index each read the
+        # table through a different exchange, so exchange reuse cannot
+        # share the tokenize+explode+md5 pass (the dominant per-row cost)
+        .localCheckpoint(eager=False)
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     # doc count computed IN-PLAN (1-row aggregate broadcast into the
@@ -623,14 +624,13 @@ def minhash_rep_graph(
     ).join(counts.select(F.col("rep_id").alias("doc_id")), "doc_id")
     # ONE combined (sh, h1, h2) projection feeds the signature
     # aggregate, the sizes aggregate, and both sides of the candidate
-    # verify. UNcached (r16): the r15 caches (hashed + sig) were measured
-    # under the honest clear-cache methodology and LOST — interleaved
-    # on/off A/B reads mh_p med 3.84 (both cached) vs 3.30 (none) and
-    # mh_rp 4.20 vs 3.61. The docs source scans as one split at bench
-    # scale, so a cache build serializes the whole tokenize+hash pass
-    # into one task and every consumer waits on that barrier; uncached,
-    # the consumers' independent 1-task map stages run CONCURRENTLY and
-    # the band self-join still shares its aggregate via exchange reuse.
+    # verify. No reuse barrier on hashed or sig: interleaved A/B reads
+    # mh_p med 3.84 with both materialized vs 3.30 without, mh_rp 4.20 vs
+    # 3.61. The docs source scans as one split at bench scale, so a
+    # barrier serializes the whole tokenize+hash pass into one task and
+    # every consumer waits on it; without one, the consumers' independent
+    # 1-task map stages run CONCURRENTLY and the band self-join still
+    # shares its aggregate via exchange reuse.
     hashed = _hashed_shingles(rep_docs, "__text", "doc_id", k)
     sig = hashed.groupBy("doc_id").agg(*_sig_aggs(num_perm))
     cand = minhash_lsh_candidates(sig, num_perm, bands)
@@ -756,14 +756,12 @@ def minhash_join(
     """
     l_docs = left.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
     r_docs = right.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
-    # ONE combined (sh, h1, h2) projection per side (r16, the
+    # ONE combined (sh, h1, h2) projection per side (the
     # minhash_rep_graph recipe) feeds that side's signature aggregate AND
-    # the verify shingle index — the r15 form ran `minhash_signatures`
-    # and `_shingle_table` separately per side and cached both. Uncached
-    # and unwidened like minhash_rep_graph: the honest-methodology A/B
-    # (clear-cache repeats, interleaved) reads cache as a wash (med 2.48
-    # cached vs 2.29 plain) and the widen as a small loss; the plain form
-    # keeps no executor-memory state at any scale.
+    # the verify shingle index. No reuse barrier and unwidened like
+    # minhash_rep_graph: interleaved A/B reads a barrier as a wash (med
+    # 2.48 with vs 2.29 without) and the widen as a small loss; the plain
+    # form keeps no executor-memory state at any scale.
     hashed_l = _hashed_shingles(l_docs, "__t", "doc_id", k)
     hashed_r = _hashed_shingles(r_docs, "__t", "doc_id", k)
     sig_l = hashed_l.groupBy("doc_id").agg(*_sig_aggs(num_perm))
@@ -886,11 +884,11 @@ def build_dedup_index(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t")
     )
     # exact-collapse: one rep (smallest id) per distinct content.
-    # Deliberately uncached (r16): the r15 caches on reps/hashed (and the
-    # batch-side nreps/hashed_n) measured as a 22% LOSS under the honest
-    # clear-cache methodology (ddi med 5.01 cached vs 3.90 plain,
-    # interleaved) — the barrier serializes the one-split builds while
-    # the uncached references run concurrently and share exchanges.
+    # Deliberately no reuse barrier on reps/hashed (or the batch-side
+    # nreps/hashed_n): one measured as a 22% LOSS (ddi med 5.01 with vs
+    # 3.90 without, interleaved) — the barrier serializes the one-split
+    # builds while the plain references run concurrently and share
+    # exchanges.
     reps = (
         c.filter(F.col("__t").isNotNull())
         .groupBy(F.md5(F.col("__t")).alias("content_hash"))
@@ -906,7 +904,7 @@ def build_dedup_index(
     # ONE tokenize+shingle+hash plan for all three derived tables (r15):
     # signatures, the verify shingle index, and the sizes aggregate all
     # derive from the combined (sh, h1, h2) frame instead of shingling
-    # rep_docs separately. The frame is uncached (r16, see above), so
+    # rep_docs separately. The frame has no reuse barrier (see above), so
     # each consumer re-evaluates it unless Spark reuses the exchange
     hashed = _hashed_shingles(rep_docs, "__t", "doc_id", k)
     sig = hashed.groupBy("doc_id").agg(*_sig_aggs(num_perm))
@@ -984,8 +982,8 @@ def dedup_incremental_report(
             F.col("__m.__t").alias("__t"),
         )
     )
-    # one combined-hash projection for the batch side too (r15 recipe,
-    # r16 uncached — see build_dedup_index)
+    # one combined-hash projection for the batch side too (no reuse
+    # barrier — see build_dedup_index)
     hashed_n = _hashed_shingles(nreps, "__t", "doc_id", k)
     sig_n = hashed_n.groupBy("doc_id").agg(*_sig_aggs(num_perm))
     bn = _band_buckets(sig_n, num_perm, bands).withColumnRenamed(
@@ -1184,7 +1182,6 @@ def simhash_rep_graph(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bands: int = 4,
-    cache_fps: bool = True,
 ) -> RepGraph:
     """Content-collapsed SimHash Hamming graph; the core behind
     simhash_dedup_pairs.
@@ -1207,9 +1204,7 @@ def simhash_rep_graph(
     rep_docs = df.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")
     ).join(counts.select(F.col("rep_id").alias("doc_id")), "doc_id")
-    cross = _simhash_banded_pairs(
-        rep_docs, "__text", max_hamming, bands, cache_fps=cache_fps
-    ).select(
+    cross = _simhash_banded_pairs(rep_docs, "__text", max_hamming, bands).select(
         F.col("doc_a").alias("rep_a"), F.col("doc_b").alias("rep_b"), "hamming"
     )
     selfs = counts.filter(F.col("n_copies") >= 2).select(
@@ -1257,9 +1252,7 @@ def simhash_dedup_pairs(
     full-pair oracle gate): fingerprinting and the banded join run once
     per DISTINCT content; only the output is quadratic in copy counts.
     """
-    g = simhash_rep_graph(
-        df, text_col, id_col, max_hamming, bands, cache_fps=False
-    )
+    g = simhash_rep_graph(df, text_col, id_col, max_hamming, bands)
     return expand_pairs(
         g.pairs.drop("n_copies_a", "n_copies_b"), g.membership
     ).select("doc_a", "doc_b", "hamming")
@@ -1270,22 +1263,17 @@ def _simhash_banded_pairs(
     text_col: str,
     max_hamming: int,
     bands: int,
-    cache_fps: bool = True,
 ) -> DataFrame:
     """Banded Hamming join over one row per doc (callers pre-collapse).
 
-    ``cache_fps`` caches the (doc_id, sh) fingerprint table so the
-    self-join's two aliases share one majority-vote execution. The r16
-    honest-methodology A/B split by caller: the rep-pairs deliverable is
-    ~25% faster WITH the cache (med 1.80 vs 2.24), while the expanding
-    doc-level path is ~25% faster WITHOUT it (med 2.35 vs 3.04) — its
-    bigger plan overlaps the duplicate branches concurrently, and the
-    cache barrier serializes them. Callers pass what measured best."""
+    No reuse barrier on the fingerprint table: both aliases of the band
+    self-join read the per-bit partial sums through the same exchange,
+    which exchange reuse shares (only the per-doc merge runs twice), and
+    a checkpoint measured slower for both callers (OPTIMIZATION_r17.md,
+    intra-query reuse)."""
     bits = 60
     per = bits // bands
     sh = simhash_table(df, text_col, "doc_id")
-    if cache_fps:
-        sh = sh.cache()
     band_cols = [
         F.struct(
             F.lit(b).alias("band"),
@@ -1466,18 +1454,18 @@ def _lsh_cosine_pairs(
     # O(candidate pairs). Same expression tree on the same doubles ⇒
     # bit-identical cosines (the 6-dp rounding the oracles hash is
     # untouched); measured 1.9x on the ecf verify stage.
-    # cached (r15): `base` feeds both aliases of the band self-join AND
+    # checkpointed: `base` feeds both aliases of the band self-join AND
     # both per-side vector re-joins of the verify — four references, each
-    # of which would otherwise recompute the n_hyperplanes×dim sketch
-    # fold (the dominant per-vector cost) plus the norm.
-    # Arrow-vectorized staging (r15, guide §4.2): the interpreted
+    # of which would otherwise re-run the Python sketch kernel (the
+    # dominant per-vector cost) plus the norm.
+    # Arrow-vectorized staging (guide §4.2): the interpreted
     # transform/aggregate sketch fold cost ~1 ms per VECTOR (16×64
     # scalar expression evaluations); `_sketch_norm_arrow` runs the same
     # per-dimension IEEE left folds batch-wide in numpy — bit-identical
     # sketches and norms (pinned by pytest against the expression form).
     base = _sketch_norm_arrow(
         staged, [plane(p) for p in range(n_hyperplanes)]
-    ).cache()
+    ).localCheckpoint(eager=False)
     band_cols = [
         F.struct(
             F.lit(b).alias("band"),
@@ -1708,11 +1696,11 @@ def duplicate_spans(
     exactly this per-doc summary.
     """
     toked, spans = _positional_spans(df, k, text_col, id_col)
-    # cached: the positional-span table feeds the occurrence count AND
-    # the join back — uncached, the k-token concat+md5 window pass (the
-    # dominant per-row cost) executes twice. RE-VERIFIED r16 under the
-    # honest clear-cache methodology: dsp med 2.43 cached vs 3.67 plain.
-    spans = spans.cache()
+    # checkpointed: the positional-span table feeds the occurrence count
+    # AND the join back through different exchanges — without it the
+    # k-token concat+md5 window pass (the dominant per-row cost) executes
+    # twice
+    spans = spans.localCheckpoint(eager=False)
     n = F.size("__toks")
     occ = spans.groupBy("h").agg(
         F.count("*").alias("n_occ"),
@@ -1769,9 +1757,8 @@ def remove_duplicate_spans(
     if scope not in ("corpus", "cross"):
         raise ValueError(f"scope must be 'corpus' or 'cross', got {scope!r}")
     toked, spans = _positional_spans(df, k, text_col, id_col)
-    # same double-reference as duplicate_spans; cache re-verified r16
-    # (rm_sp med 2.03 cached vs 3.31 plain)
-    spans = spans.cache()
+    # same double-reference as duplicate_spans
+    spans = spans.localCheckpoint(eager=False)
     occ = spans.groupBy("h").agg(
         F.count("*").alias("n_occ"),
         F.count_distinct("doc_id").alias("n_docs"),

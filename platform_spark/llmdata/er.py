@@ -65,18 +65,16 @@ def edit_distance_rep_pairs(
     if not 1 <= max_dist <= 5:
         raise ValueError("max_dist must be in 1..5")
     d = max_dist
-    # cached (r16, guide §5 bounded intra-query reuse): the rep table is
+    # checkpointed (guide §5 bounded intra-query reuse): the rep table is
     # referenced from FOUR plan branches (segment index, probe
-    # enumeration, and both per-side copy-count joins), and each branch
-    # re-executed the distinct-value aggregate — and its full input scan —
-    # without the cache. One row per distinct value, the module's usual
-    # bounded-intermediate budget.
+    # enumeration, and both per-side copy-count joins). One row per
+    # distinct value, the module's usual bounded-intermediate budget.
     reps = (
         df.filter(F.col(value_col).isNotNull())
         .filter(F.length(value_col) > d)
         .groupBy(F.col(value_col).alias("v"))
         .agg(F.count("*").alias("n_copies"))
-        .cache()
+        .localCheckpoint(eager=False)
     )
 
     # Index side: the d+1 segments of each value, keyed by (own length,

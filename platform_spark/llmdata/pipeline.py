@@ -3,10 +3,10 @@
 Chains the individually-gated operators — clean → redact → quality-gate →
 dedup (exact-collapse fast path) → decontaminate → split → pack — so a
 user gets the whole curation flow with one call. The outputs are lazy
-frames, but building them is not free of jobs: with ``persist=True`` the
-quality-passing documents are materialized once (an eager local
-checkpoint), and the near-dup cluster step checkpoints its pair graph and
-runs its component resolution while the frames are built (clusters.py).
+frames, but building them is not free of jobs: the quality-passing
+documents are materialized once (an eager local checkpoint), and the
+near-dup cluster step checkpoints its pair graph and runs its component
+resolution while the frames are built (clusters.py).
 
 Every stage is the already-oracle-verified operator; this module only
 wires contracts together (doc_id/text in, curated table + per-stage
@@ -29,7 +29,6 @@ def curate_corpus(
     ngram_threshold: float = 0.2,
     decontam_k: int = 8,
     pack_budget: int = 256,
-    persist: bool = True,
 ) -> dict[str, DataFrame]:
     """Run the full curation flow; returns every intermediate stage keyed
     by name:
@@ -46,24 +45,21 @@ def curate_corpus(
     `quality_rules` without its doc-keyed shuffles), and the passing set
     is ``cleaned`` filtered by `quality_passes_expr`.
 
-    ``persist=True`` (default) materializes the stage boundaries, each
-    read by several downstream branches that would otherwise re-run the
-    whole upstream chain. The passing set, which the near-dup graph alone
-    reads about nine times, is materialized ONCE by an eager
-    ``localCheckpoint`` during this call, so the cluster, dedup, curation
-    and drop-report plans read a small truncated relation instead of
-    re-running scan → clean → quality; cleaned / deduped / curated are
-    persisted MEMORY_AND_DISK, filled by the first action that reads
-    them. Scale trade-off, the stance of the checkpoints in clusters.py:
-    a local checkpoint has no lineage to recompute a lost block from, so
-    losing an executor fails the job; at 100 TB a real pipeline writes
-    these boundaries to tables instead.
-
-    ``persist=False`` keeps every boundary lazy: the wiring here runs no
-    job (the cluster step still runs its own to resolve components), and
-    each output action re-runs its whole lineage — single-output use.
+    The stage boundaries are local checkpoints, each read by several
+    downstream branches that would otherwise re-run the whole upstream
+    chain. The passing set, which the near-dup graph alone reads about
+    nine times, is checkpointed eagerly during this call, so the cluster,
+    dedup, curation and drop-report plans read a small truncated relation
+    instead of re-running scan → clean → quality; cleaned / deduped /
+    curated are checkpointed lazily, filled by the first action that
+    reads them (a boundary whose plan holds a shuffle runs its map stages
+    while it is built). Every checkpoint is released with the last frame
+    that reads it, so repeated calls in one session pin no blocks. Scale
+    trade-off, the stance of the checkpoints in clusters.py: a local
+    checkpoint has no lineage to recompute a lost block from, so losing
+    an executor fails the job; at 100 TB a real pipeline writes these
+    boundaries to tables instead.
     """
-    from pyspark import StorageLevel
     from platform_spark.llmdata.cleaning import (
         filter_boilerplate_lines,
         quality_passes_expr,
@@ -83,13 +79,12 @@ def curate_corpus(
         .select("doc_id", F.col("clean_text").alias("text"))
         .transform(lambda d: redact_pii(d))
         .select("doc_id", F.col("text_redacted").alias("text"))
+        .localCheckpoint(eager=False)
     )
-    if persist:
-        cleaned = cleaned.persist(StorageLevel.MEMORY_AND_DISK)
     quality = quality_rules_rowwise(cleaned)
-    passing = cleaned.filter(quality_passes_expr(F.col("text")))
-    if persist:
-        passing = passing.localCheckpoint(eager=True)
+    passing = cleaned.filter(quality_passes_expr(F.col("text"))).localCheckpoint(
+        eager=True
+    )
 
     clusters = dedup_clusters_fast(passing, threshold=ngram_threshold)
     keepers = clusters.filter("is_keeper").select("doc_id")
@@ -97,9 +92,7 @@ def curate_corpus(
     # cluster row: they are trivially unique, keep them
     deduped = passing.join(
         clusters.filter(~F.col("is_keeper")).select("doc_id"), "doc_id", "left_anti"
-    )
-    if persist:
-        deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
 
     if bench is not None:
         contaminated = contamination(deduped, bench, k=decontam_k, min_common=1)
@@ -112,9 +105,9 @@ def curate_corpus(
         )
         curated_docs = deduped
 
-    curated = curated_docs.join(assign_splits(curated_docs.select("doc_id")), "doc_id")
-    if persist:
-        curated = curated.persist(StorageLevel.MEMORY_AND_DISK)
+    curated = curated_docs.join(
+        assign_splits(curated_docs.select("doc_id")), "doc_id"
+    ).localCheckpoint(eager=False)
     train = curated.filter(F.col("split") == "train").select(
         "doc_id", "text", token_count(F.col("text")).alias("n_tokens")
     )
@@ -143,7 +136,7 @@ def drop_report(stages: dict[str, DataFrame]) -> DataFrame:
     disjoint by construction (each runs on the previous stage's
     survivors), so the union IS the first-dropping stage. Built entirely
     from the lazy stage frames `curate_corpus` already returns — no
-    recomputation beyond the persisted boundaries.
+    recomputation beyond the checkpointed boundaries.
     """
     from platform_spark.llmdata.cleaning import QUALITY_RULES
 

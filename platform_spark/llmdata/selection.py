@@ -78,21 +78,27 @@ def dsir_scores(
     # per-(doc, bucket) occurrence count is the partial aggregate BOTH
     # consumers need — the per-bucket distribution sums it and the
     # per-doc scorer weights __w by it — so the corpus no longer pays a
-    # second full pass (once for the cached bucket counts, once for the
-    # scoring join). The cache holds ≤ min(n_features, n_docs*n_buckets)
+    # second full pass (once for the bucket counts, once for the scoring
+    # join). The checkpoint holds ≤ min(n_features, n_docs*n_buckets)
     # rows, smaller than the exploded feature table by the per-doc
     # bucket-repeat factor; guide §2.3: aggregate before you shuffle.
     doc_buckets = (
         raw_feats.groupBy("doc_id", "bucket")
         .agg(F.count("*").alias("__cnt"))
-        .cache()
+        .localCheckpoint(eager=False)
     )
-    # per-bucket count tables are ≤ n_buckets rows — cached (r15) so the
+    # per-bucket count tables are ≤ n_buckets rows — checkpointed so the
     # weight join and the totals below share the one pass per side
     raw_counts = (
-        doc_buckets.groupBy("bucket").agg(F.sum("__cnt").alias("cr")).cache()
+        doc_buckets.groupBy("bucket")
+        .agg(F.sum("__cnt").alias("cr"))
+        .localCheckpoint(eager=False)
     )
-    tgt_counts = tgt_feats.groupBy("bucket").agg(F.count("*").alias("ct")).cache()
+    tgt_counts = (
+        tgt_feats.groupBy("bucket")
+        .agg(F.count("*").alias("ct"))
+        .localCheckpoint(eager=False)
+    )
     # totals derived from the per-bucket counts (r15): sum(cr) over the
     # ≤ n_buckets count rows IS count(*) over the feature table — same
     # bigint, exactly — so neither side pays an extra full

@@ -419,11 +419,13 @@ def semantic_dedup(
     w = Window.partitionBy("bucket").orderBy(
         F.desc("centroid_cosine"), F.asc("vec_id")
     )
-    # cached (r15): the ranked-with-norm table feeds BOTH sides of the
+    # checkpointed: the ranked-with-norm table feeds BOTH sides of the
     # within-bucket upper-triangle join plus the final keeper join — three
     # references that would each re-run the interpreted centroid
     # assignment (n_clusters dot folds per vector) and the rank window
-    with_norm = c.withColumn("rank", F.row_number().over(w)).cache()
+    with_norm = c.withColumn("rank", F.row_number().over(w)).localCheckpoint(
+        eager=False
+    )
     left = with_norm.select(
         "bucket", F.col("vec_id").alias("id_a"),
         F.col("v").alias("va"), F.col("nrm").alias("na"),
@@ -450,7 +452,7 @@ def semantic_dedup(
         .distinct()
     )
     return (
-        # join from the cached with_norm (same rows as `ranked` plus the
+        # join from the checkpointed with_norm (same rows as `ranked` plus the
         # norm column, projected away below) so the assignment+window
         # subtree is not executed a third time
         with_norm.join(

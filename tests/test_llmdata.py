@@ -696,17 +696,17 @@ def _executed_plan(df) -> str:
 
 def test_curate_corpus_stages_read_the_passing_checkpoint(spark, docs):
     """The quality-passing set is materialized once while curate_corpus
-    runs: the cluster and dedup plans read that checkpoint, not the
-    source scan, and the row-wise quality frame equals the batch rules."""
+    runs: no stage from ``cleaned`` on re-reads the source scan, the
+    cluster and dedup plans read the passing checkpoint, and the row-wise
+    quality frame equals the batch rules."""
     from platform_spark.llmdata.cleaning import quality_rules
     from platform_spark.llmdata.pipeline import curate_corpus
 
     out = curate_corpus(_pipeline_corpus(spark, docs), bench=None)
-    assert "FileScan" in _executed_plan(out["cleaned"])
+    for name in ("cleaned", "quality", "clusters", "deduped", "curated", "packed"):
+        assert "FileScan" not in _executed_plan(out[name]), name
     for name in ("clusters", "deduped"):
-        plan = _executed_plan(out[name])
-        assert "FileScan" not in plan, name
-        assert "ExistingRDD" in plan, name
+        assert "ExistingRDD" in _executed_plan(out[name]), name
     got = {tuple(r) for r in out["quality"].collect()}
     want = {tuple(r) for r in quality_rules(out["cleaned"]).collect()}
     assert got == want
@@ -714,10 +714,10 @@ def test_curate_corpus_stages_read_the_passing_checkpoint(spark, docs):
     assert out["quality"].columns == quality_rules(out["cleaned"]).columns
 
 
-def test_curate_corpus_unpersisted_build_runs_no_job(spark, docs, monkeypatch):
-    """persist=False wires every stage lazily: with the cluster step (which
-    resolves its components eagerly) stubbed out, building the outputs
-    runs no Spark job, and the stages keep their whole lineage."""
+def test_curate_corpus_build_runs_the_passing_checkpoint(spark, docs, monkeypatch):
+    """Building the outputs materializes the passing set: with the cluster
+    step (which resolves its components eagerly) stubbed out, the build
+    still runs a Spark job."""
     from platform_spark.llmdata import clusters
     from platform_spark.llmdata.pipeline import curate_corpus
     from tests.conftest import jobs_run
@@ -730,15 +730,49 @@ def test_curate_corpus_unpersisted_build_runs_no_job(spark, docs, monkeypatch):
         )
 
     monkeypatch.setattr(clusters, "dedup_clusters_fast", lazy_clusters)
-    corpus = _pipeline_corpus(spark, docs)
     j0 = jobs_run(spark)
-    out = curate_corpus(corpus, bench=None, persist=False)
-    assert jobs_run(spark) == j0
-    assert "FileScan" in _executed_plan(out["deduped"])
-    # the default persists: the passing checkpoint runs while building
-    j0 = jobs_run(spark)
-    curate_corpus(corpus, bench=None)
+    curate_corpus(_pipeline_corpus(spark, docs), bench=None)
     assert jobs_run(spark) > j0
+
+
+def test_curate_corpus_passes_pin_no_blocks(spark, docs):
+    """Repeated curate_corpus passes in one long-lived session leave no
+    blocks behind: the CacheManager stays empty, and once a pass's
+    outputs are consumed and dropped, Spark's ContextCleaner releases its
+    local checkpoints, so the persistent-RDD count returns to its
+    pre-pass value."""
+    import gc
+    import time
+
+    from platform_spark.llmdata.pipeline import curate_corpus, drop_report
+
+    sc = spark.sparkContext
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    # isolate from any cache an earlier test in this session left behind
+    spark.catalog.clearCache()
+    corpus = _pipeline_corpus(spark, docs)
+    for _ in range(2):
+        before = sc._jsc.sc().getPersistentRDDs().size()
+        out = curate_corpus(corpus, bench=None)
+        for name in ("curated", "packed", "contaminated"):
+            out[name].count()
+        drop_report(out).count()
+        assert cache_manager.isEmpty()
+        del out
+        deadline = time.monotonic() + 10
+        while True:
+            gc.collect()
+            # each listener queue holds the last event it dispatched until
+            # the next one arrives, and the last query's execution-end
+            # event carries its plan; a one-task job posts that next event,
+            # as the next call in a long-lived session would
+            sc.parallelize([0], 1).count()
+            sc._jvm.System.gc()
+            held = sc._jsc.sc().getPersistentRDDs().size()
+            if held <= before or time.monotonic() > deadline:
+                break
+            time.sleep(0.5)
+        assert held <= before
 
 
 def test_repetition_metrics_known_values(spark):

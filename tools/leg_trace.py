@@ -34,8 +34,10 @@ def main() -> None:
     fn, _oracle = GATE[name]
     times = []
     for i in range(runs):
-        # match the r16 bench methodology: a repeat must recompute the
-        # intermediate .cache() tables, not read the previous run's
+        # match the bench methodology: a repeat must recompute, never read
+        # a cache a previous run left (the package's own reuse is
+        # localCheckpoint, released with its frames; this guards caches a
+        # caller makes)
         spark.catalog.clearCache()
         t0 = time.time()
         force(fn(spark, sf_dir))
