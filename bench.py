@@ -389,6 +389,67 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+REPEAT3_S = 0.8  # legs under this get at least three steady runs
+# Adaptive warm-down (r12): multi-stage plans (e.g. TPC-H q2's
+# correlated subquery = ~15 codegen stages) keep improving for 4-7
+# runs as C2 tiers up — an 8-run isolated trace of the four r11-
+# flagged partsupp legs showed q2 1.38 -> 0.80 s, converging on the
+# r10 values on IDENTICAL code, so the r11 "regression" was warmup
+# depth, not plan cost. Legs under WARM_CAP_S therefore keep running
+# while a run still improves the best by >2%, up to WARM_MAX_RUNS;
+# multi-second legs stay best-of-2 (their warmup fraction is small
+# and repeats are expensive).
+WARM_CAP_S = 2.0
+WARM_MAX_RUNS = 6
+# r13: the INVERSE signature on multi-second legs. r12's ledger
+# caught llm_embedding_clusters_fast drifting 7.17 -> 8.11 s across
+# bench invocations on identical code — monotonically SLOWER, the
+# opposite of JIT warm-up, i.e. suite-position noise (GC/heap state
+# accumulated by the 100+ legs that ran before it), which best-of-2
+# samples too thinly. A multi-second leg whose later run is >10%
+# slower than its first gets extra runs (up to SLOW_MAX_RUNS) so the
+# reported best is sampled from more than one heap state.
+SLOW_MAX_RUNS = 4
+
+
+def steady_runs(run, min_runs: int = 2) -> list[float]:
+    """Warm runs of one leg under the bench's per-leg stopping rule:
+    `run()` executes the leg once and returns its wall seconds; the
+    leg's reported steady time is min() of the returned list. At least
+    `min_runs` runs (best-of-2 by default: single-run numbers are noise),
+    three under REPEAT3_S, JIT warm-down below WARM_CAP_S, heap-state
+    resampling above it."""
+    runs: list[float] = []
+    no_improve = 0
+    while True:
+        r = run()
+        if runs and r < min(runs) * 0.98:
+            no_improve = 0
+        elif runs:
+            no_improve += 1
+        runs.append(r)
+        if len(runs) < min_runs:
+            continue
+        if len(runs) == 2 and min(runs) < REPEAT3_S:
+            continue  # cheap legs: noise dominates, take a third
+        if (
+            len(runs) < WARM_MAX_RUNS
+            and min(runs) < WARM_CAP_S
+            and no_improve < 2
+        ):
+            continue  # still tiering up: two flat runs end the leg
+        if (
+            len(runs) < SLOW_MAX_RUNS
+            and min(runs) >= WARM_CAP_S
+            and (max(runs) - min(runs)) > min(runs) * 0.15
+        ):
+            # wide spread on an expensive leg (either direction —
+            # r13's ecf sampled [12.6, 10.3] and stopped at 2 runs
+            # under the one-sided rule): resample the heap state
+            continue
+        return runs
+
+
 def _sentinel_kernel(block):
     """FROZEN numpy workload for the host-speed sentinel (r14 verdict
     #1): a murmur3_x86_32-shaped pass over an (N, 24) uint8 block.
@@ -626,28 +687,6 @@ def main() -> None:
     spread: dict[str, float] = {}
     n_runs: dict[str, int] = {}
 
-    REPEAT3_S = 0.8  # legs under this get at least three steady runs
-    # Adaptive warm-down (r12): multi-stage plans (e.g. TPC-H q2's
-    # correlated subquery = ~15 codegen stages) keep improving for 4-7
-    # runs as C2 tiers up — an 8-run isolated trace of the four r11-
-    # flagged partsupp legs showed q2 1.38 -> 0.80 s, converging on the
-    # r10 values on IDENTICAL code, so the r11 "regression" was warmup
-    # depth, not plan cost. Legs under WARM_CAP_S therefore keep running
-    # while a run still improves the best by >2%, up to WARM_MAX_RUNS;
-    # multi-second legs stay best-of-2 (their warmup fraction is small
-    # and repeats are expensive).
-    WARM_CAP_S = 2.0
-    WARM_MAX_RUNS = 6
-    # r13: the INVERSE signature on multi-second legs. r12's ledger
-    # caught llm_embedding_clusters_fast drifting 7.17 -> 8.11 s across
-    # bench invocations on identical code — monotonically SLOWER, the
-    # opposite of JIT warm-up, i.e. suite-position noise (GC/heap state
-    # accumulated by the 100+ legs that ran before it), which best-of-2
-    # samples too thinly. A multi-second leg whose later run is >10%
-    # slower than its first gets extra runs (up to SLOW_MAX_RUNS) so the
-    # reported best is sampled from more than one heap state.
-    SLOW_MAX_RUNS = 4
-
     def timed(name: str, fn) -> None:
         # measurement integrity: Spark's CacheManager matches ANALYZED
         # PLANS, so if anything a leg runs caches a frame, its warm
@@ -659,42 +698,14 @@ def main() -> None:
         # before every run (cold included, so a prior leg's residue never
         # leaks in) keeps each timed run computing from the parquet
         # inputs.
-        spark.catalog.clearCache()
-        t0 = time.time()
-        fn()
-        cold[name] = round(time.time() - t0, 3)
-        runs: list[float] = []
-        no_improve = 0
-        while True:
+        def run() -> float:
             spark.catalog.clearCache()
             t1 = time.time()
             fn()
-            r = time.time() - t1
-            if runs and r < min(runs) * 0.98:
-                no_improve = 0
-            elif runs:
-                no_improve += 1
-            runs.append(r)
-            if len(runs) == 1:
-                continue  # every leg gets best-of-2: single-run numbers
-            if len(runs) == 2 and min(runs) < REPEAT3_S:
-                continue  # cheap legs: noise dominates, take a third
-            if (
-                len(runs) < WARM_MAX_RUNS
-                and min(runs) < WARM_CAP_S
-                and no_improve < 2
-            ):
-                continue  # still tiering up: two flat runs end the leg
-            if (
-                len(runs) < SLOW_MAX_RUNS
-                and min(runs) >= WARM_CAP_S
-                and (max(runs) - min(runs)) > min(runs) * 0.15
-            ):
-                # wide spread on an expensive leg (either direction —
-                # r13's ecf sampled [12.6, 10.3] and stopped at 2 runs
-                # under the one-sided rule): resample the heap state
-                continue
-            break
+            return time.time() - t1
+
+        cold[name] = round(run(), 3)
+        runs = steady_runs(run)
         timings[name] = round(min(runs), 3)
         n_runs[name] = len(runs)
         spread[name] = round(max(runs) - min(runs), 3)

@@ -24,7 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from platform_spark.iceberg.table import IcebergTable, append_dataframe
-from platform_spark.topics import IMPLICIT_COLUMNS
+from platform_spark.topics import IMPLICIT_COLUMNS, _describe_rows
 
 
 def materialize_topic_to_iceberg(
@@ -130,20 +130,7 @@ class IcebergTopicCatalog:
         return df
 
     def describe(self, name: str) -> list[tuple[str, str, str]]:
-        rows = [
-            ("_topic", "text", "implicit"),
-            ("_partition", "integer", "implicit"),
-            ("_offset", "bigint", "implicit"),
-            ("_ts", "timestamp", "implicit"),
-            ("_key", "bytea", "implicit"),
-            ("_value", "bytea", "implicit"),
-            ("_headers", "jsonb", "implicit"),
-            ("_segment", "text", "implicit"),
-        ]
-        cfg = self.configs.get(name)
-        if cfg:
-            rows += [(c.name, c.type, c.path) for c in cfg.columns]
-        return rows
+        return _describe_rows(self.configs, name)
 
     def raw_source_path(self, name: str) -> str | None:
         return None  # EXPLAIN prices scans via estimate_topic_scan instead

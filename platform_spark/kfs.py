@@ -75,6 +75,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from platform_spark.topics import _describe_rows
+
 SEGMENT_MAGIC = b"KAFS"
 FOOTER_MAGIC = b"END!"
 INDEX_MAGIC = b"IDX\x00"
@@ -730,20 +732,7 @@ class KfsTopicCatalog:
         return df
 
     def describe(self, name: str) -> list[tuple[str, str, str]]:
-        rows = [
-            ("_topic", "text", "implicit"),
-            ("_partition", "integer", "implicit"),
-            ("_offset", "bigint", "implicit"),
-            ("_ts", "timestamp", "implicit"),
-            ("_key", "bytea", "implicit"),
-            ("_value", "bytea", "implicit"),
-            ("_headers", "jsonb", "implicit"),
-            ("_segment", "text", "implicit"),
-        ]
-        cfg = self.configs.get(name)
-        if cfg:
-            rows += [(c.name, c.type, c.path) for c in cfg.columns]
-        return rows
+        return _describe_rows(self.configs, name)
 
     def raw_source_path(self, name: str) -> str | None:
         return None  # EXPLAIN estimates come from estimate_kfs_scan instead

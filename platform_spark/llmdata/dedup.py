@@ -62,7 +62,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     """Exact dedup on raw text md5: one row per distinct content with the
     minimum id as keeper and the duplicate count."""
     return (
-        df.select(F.md5(F.col(text_col).cast("binary")).alias("content_hash"), id_col)
+        df.select(_text_hash(text_col).alias("content_hash"), id_col)
         .groupBy("content_hash")
         .agg(F.min(id_col).alias("keeper"), F.count("*").alias("n_copies"))
     )
@@ -80,6 +80,25 @@ def normalized_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 # -- shingling --------------------------------------------------------------
 
 
+def _token_windows(toks: Column, k: int, emit, empty_type: str) -> Column:
+    """``emit(i, window)`` for every k-token window of the token array
+    `toks` (i = 0-based start, window = its tokens space-joined); an
+    empty `empty_type` array when there are fewer than k tokens. The one
+    k-token window expression behind shingles, positional spans and
+    winnowing hashes."""
+    n = F.size(toks)
+    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(-1)))
+    return F.when(n < k, F.array().cast(empty_type)).otherwise(
+        F.transform(
+            idx,
+            lambda i: emit(
+                i,
+                F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(k)]),
+            ),
+        )
+    )
+
+
 def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     """Distinct k-word shingles from an already-materialized token array.
 
@@ -87,31 +106,24 @@ def shingles_from_tokens(toks: Column, k: int = 3) -> Column:
     embedding an expression here duplicates its tree into every element_at
     call (k per position), turning shingling O(tokens²). See _shingle_table.
     """
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(-1)))
-    sh = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j + 1) for j in range(k)])
-    )
-    return F.when(n < k, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(sh)
+    return F.array_distinct(
+        _token_windows(toks, k, lambda i, w: w, "array<string>")
     )
 
 
 def _shingle_table(
-    df: DataFrame, text_col: str, id_col: str, k: int, widen: bool = False
+    df: DataFrame, text_col: str, id_col: str, k: int, *carry: str
 ) -> DataFrame:
-    """(doc_id, shingle) exploded table; tokenizes once per row.
-    The source widens first when it scans narrower than the session
-    (guide §2.5 — a small parquet file is one split, and the fused
-    tokenize+shingle pass would run single-threaded on it). Callers
-    whose input is already exchange-shaped pass ``widen=False``: the
-    partition probe costs a physical planning pass, pointless there."""
-    toked = (widen_small_scan(df) if widen else df).select(
+    """(doc_id, *carry, shingle) exploded table; tokenizes once per row
+    (the token array is a concrete column of its own select)."""
+    toked = df.select(
         F.col(id_col).alias("doc_id"),
+        *carry,
         tokens(F.lower(F.col(text_col))).alias("toks"),
     )
     return toked.select(
         "doc_id",
+        *carry,
         F.explode(shingles_from_tokens(F.col("toks"), k)).alias("shingle"),
     )
 
@@ -213,6 +225,190 @@ def expand_pairs(
     return j.select(*sel)
 
 
+# -- near-dup core ----------------------------------------------------------
+# The blocks every near-dup family assembles its graph from: banded
+# candidate joins, the candidate-restricted shingle-overlap verify and the
+# rep-graph assembly. One implementation each; the families differ only in
+# what they hash, band and score.
+
+
+def _text_hash(text_col: str) -> Column:
+    return F.md5(F.col(text_col).cast("binary"))
+
+
+def _rep_docs(
+    df: DataFrame, counts: DataFrame, id_col: str, value: Column, *carry: str
+) -> DataFrame:
+    """(doc_id, value, *carry) for the rep doc of every distinct content —
+    the frame a family signs or fingerprints once per content; `carry`
+    names `counts` columns to bring along."""
+    return df.select(F.col(id_col).alias("doc_id"), value).join(
+        counts.select(F.col("rep_id").alias("doc_id"), *carry), "doc_id"
+    )
+
+
+def _self_rows(
+    reps: DataFrame, rep_col: str, *cols: Column, sides: tuple[DataFrame, ...] = ()
+) -> DataFrame:
+    """A SELF row (rep_a == rep_b, then `cols`) for every content of
+    `reps` with n_copies >= 2: its copies pair with each other in the
+    equivalent all-docs run. `sides` are per-doc frames keyed by doc_id
+    that `cols` read from (joined after the copy filter)."""
+    dup = reps.filter(F.col("n_copies") >= 2)
+    for side in sides:
+        dup = dup.join(side.withColumnRenamed("doc_id", rep_col), rep_col)
+    return dup.select(
+        F.col(rep_col).alias("rep_a"), F.col(rep_col).alias("rep_b"), *cols
+    )
+
+
+def _with_copy_counts(scored: DataFrame, counts: DataFrame, *cols: str) -> DataFrame:
+    """(rep_a, rep_b, *cols, n_copies_a, n_copies_b): scored rep pairs
+    with each side's copy count attached from `counts`."""
+    ca = counts.select(
+        F.col("rep_id").alias("rep_a"), F.col("n_copies").alias("n_copies_a")
+    )
+    cb = counts.select(
+        F.col("rep_id").alias("rep_b"), F.col("n_copies").alias("n_copies_b")
+    )
+    return (
+        scored.join(ca, "rep_a")
+        .join(cb, "rep_b")
+        .select("rep_a", "rep_b", *cols, "n_copies_a", "n_copies_b")
+    )
+
+
+def _min_id_reps(docs: DataFrame, hash_col: str, id_out: str) -> DataFrame:
+    """(hash_col, id_out, __t): one row per distinct non-NULL text of a
+    (doc_id, __t) frame, represented by its smallest doc id — min(struct)
+    keeps the rep's text without a join back."""
+    return (
+        docs.filter(F.col("__t").isNotNull())
+        .groupBy(F.md5(F.col("__t")).alias(hash_col))
+        .agg(F.min(F.struct("doc_id", "__t")).alias("__m"))
+        .select(
+            hash_col,
+            F.col("__m.doc_id").alias(id_out),
+            F.col("__m.__t").alias("__t"),
+        )
+    )
+
+
+def _band_self_join(
+    rows: DataFrame, id_col: str, key: str, out_a: str, out_b: str,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Distinct candidate pairs (out_a < out_b) of `rows` sharing any
+    (band, key): one self-join on (band, key). Each carried column comes
+    out once per side as <c>_a, <c>_b."""
+    x, y = rows.alias("x"), rows.alias("y")
+    sel = [F.col(f"x.{id_col}").alias(out_a), F.col(f"y.{id_col}").alias(out_b)]
+    for c in carry:
+        sel += [F.col(f"x.{c}").alias(f"{c}_a"), F.col(f"y.{c}").alias(f"{c}_b")]
+    return (
+        x.join(
+            y,
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col(f"x.{key}") == F.col(f"y.{key}"))
+            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
+        )
+        .select(*sel)
+        .distinct()
+    )
+
+
+def _chunk_candidates(
+    df: DataFrame, id_col: str, fp: str, per: int, bands: int,
+    out_a: str, out_b: str, carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Banded candidates over an integer fingerprint column: band b is
+    the `per`-bit chunk ``(fp >>> b*per) & (2^per - 1)``, and rows sharing
+    any (band, chunk) pair up (see _band_self_join)."""
+    chunks = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.shiftrightunsigned(F.col(fp), b * per)
+                .bitwiseAND(F.lit((1 << per) - 1))
+                .alias("chunk"),
+            )
+            for b in range(bands)
+        ]
+    )
+    rows = df.select(id_col, *carry, F.explode(chunks).alias("b")).select(
+        id_col, *carry, "b.band", "b.chunk"
+    )
+    return _band_self_join(rows, id_col, "chunk", out_a, out_b, carry)
+
+
+def _within_hamming(cand: DataFrame, a: str, b: str, max_hamming: int) -> DataFrame:
+    """Candidates with hamming = popcount(a XOR b) <= max_hamming."""
+    return cand.withColumn(
+        "hamming", F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
+    ).filter(F.col("hamming") <= max_hamming)
+
+
+def _bucket_candidates(left: DataFrame, right: DataFrame) -> DataFrame:
+    """(left_id, right_id) distinct pairs across two (doc_id, band,
+    bucket) tables sharing any band bucket — the two-table form of the
+    banded join."""
+    return (
+        left.withColumnRenamed("doc_id", "left_id")
+        .join(right.withColumnRenamed("doc_id", "right_id"), ["band", "bucket"])
+        .select("left_id", "right_id")
+        .distinct()
+    )
+
+
+def _shingle_counts(sh: DataFrame) -> DataFrame:
+    """(doc_id, n_sh) from a (doc_id, sh) shingle index."""
+    return sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+
+
+def _attach_sizes(
+    common: DataFrame, a: str, b: str, size_a: DataFrame, size_b: DataFrame,
+    n_a: str, n_b: str,
+) -> DataFrame:
+    """(a, b, n_common, n_a, n_b): each side's (doc_id, n_sh) shingle
+    count attached to a (a, b, n_common) pair table."""
+    sa = size_a.select(F.col("doc_id").alias(a), F.col("n_sh").alias(n_a))
+    sb = size_b.select(F.col("doc_id").alias(b), F.col("n_sh").alias(n_b))
+    return common.join(sa, a).join(sb, b)
+
+
+def _candidate_overlap(
+    cand: DataFrame, a: str, b: str, sh_a: DataFrame, sh_b: DataFrame,
+    size_a: DataFrame, size_b: DataFrame, n_a: str, n_b: str,
+) -> DataFrame:
+    """(a, b, n_common, n_a, n_b) for the candidate pairs (a, b): each
+    side's (doc_id, sh) index joins THROUGH the candidate list, so common
+    shingles cost O(|candidates| x avg shingles) — never the
+    all-shared-shingle-pairs blowup of a full inverted join."""
+    common = (
+        cand.join(sh_a.select(F.col("doc_id").alias(a), F.col("sh").alias("__sh_a")), a)
+        .join(
+            sh_b.select(F.col("doc_id").alias("__b"), F.col("sh").alias("__sh_b")),
+            (F.col(b) == F.col("__b")) & (F.col("__sh_a") == F.col("__sh_b")),
+        )
+        .groupBy(a, b)
+        .agg(F.count("*").alias("n_common"))
+    )
+    return _attach_sizes(common, a, b, size_a, size_b, n_a, n_b)
+
+
+def _jaccard_at_least(
+    pairs: DataFrame, threshold: float, n_a: str, n_b: str
+) -> DataFrame:
+    """`pairs` scored jaccard = n_common / (n_a + n_b - n_common) at 6 dp,
+    kept when >= threshold."""
+    jaccard = F.round(
+        F.col("n_common").cast("double")
+        / (F.col(n_a) + F.col(n_b) - F.col("n_common")).cast("double"),
+        6,
+    )
+    return pairs.withColumn("jaccard", jaccard).filter(F.col("jaccard") >= threshold)
+
+
 # -- n-gram Jaccard set-similarity join ------------------------------------
 
 
@@ -248,28 +444,8 @@ def ngram_jaccard_rep_graph(
     membership, counts, cross, selfs = _ngram_rep_common(
         df, text_col, id_col, k, stop_shingle_df
     )
-    scored = (
-        cross.unionByName(selfs)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    ca = counts.select(F.col("rep_id").alias("rep_a"), F.col("n_copies").alias("n_copies_a"))
-    cb = counts.select(F.col("rep_id").alias("rep_b"), F.col("n_copies").alias("n_copies_b"))
-    pairs = (
-        scored.join(ca, "rep_a")
-        .join(cb, "rep_b")
-        .select(
-            "rep_a", "rep_b", "n_common", "n_a", "n_b", "jaccard",
-            "n_copies_a", "n_copies_b",
-        )
-    )
+    scored = _jaccard_at_least(cross.unionByName(selfs), threshold, "n_a", "n_b")
+    pairs = _with_copy_counts(scored, counts, "n_common", "n_a", "n_b", "jaccard")
     return RepGraph(membership, counts, pairs)
 
 
@@ -286,42 +462,26 @@ def _ngram_rep_common(
     cross/selfs carry (rep_a, rep_b, n_common, n_a, n_b) — common counts
     over index-surviving shingles, sizes over ALL shingles; the scorer on
     top decides the similarity definition."""
-    membership, counts = _collapse(
-        df, F.md5(F.col(text_col).cast("binary")), id_col
+    membership, counts = _collapse(df, _text_hash(text_col), id_col)
+    rep_docs = _rep_docs(
+        df, counts, id_col, F.col(text_col).alias("__text"), "n_copies"
     )
-    rep_docs = df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")
-    ).join(counts.select(F.col("rep_id").alias("doc_id"), "n_copies"), "doc_id")
     # the shingle table CARRIES n_copies: n_copies is a pure function of
     # doc_id, so folding it into the explode costs one int column — and
     # the copy-weighted hot cutoff below becomes a plain aggregate over
     # this table instead of a SortMergeJoin of the whole shingle table
     # back against rep_docs (2 exchanges + a sort, and the hot subtree
-    # used to execute once per self-join side)
-    # UNwidened (r16): the r15 round widened this tokenize input, but the
-    # honest-methodology interleaved A/B (caches cleared between runs)
-    # reads the widen as a small consistent LOSS on every consumer leg —
-    # ddj med 4.59 -> 4.30, ctn 4.73 -> 4.39, dcf 6.80 -> 6.18, ng_rp
-    # equal — the repartition's exchange (plus its sort-before-repartition)
-    # costs more than the extra build parallelism buys at any width
-    # where the gate fires; at real scale the scan is already wide and
-    # the gate is a no-op either way.
-    toked = rep_docs.select(
-        "doc_id", "n_copies", tokens(F.lower(F.col("__text"))).alias("toks")
-    )
+    # used to execute once per self-join side). Not widened: interleaved
+    # A/B read a widen here as a loss on every consumer leg.
     sh = (
-        toked.select(
-            "doc_id",
-            "n_copies",
-            F.explode(shingles_from_tokens(F.col("toks"), k)).alias("shingle"),
-        )
+        _shingle_table(rep_docs, "__text", "doc_id", k, "n_copies")
         .select("doc_id", "n_copies", md5_int(F.col("shingle")).alias("sh"))
         # checkpointed: sizes, the hot cutoff and the index each read the
         # table through a different exchange, so exchange reuse cannot
         # share the tokenize+explode+md5 pass (the dominant per-row cost)
         .localCheckpoint(eager=False)
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    sizes = _shingle_counts(sh)
     # doc count computed IN-PLAN (1-row aggregate broadcast into the
     # filter) — no driver-side action, no extra full pass at scale
     n_docs_df = df.select(F.count("*").alias("__n_docs"))
@@ -339,21 +499,15 @@ def _ngram_rep_common(
         .groupBy(F.col("a.doc_id").alias("rep_a"), F.col("b.doc_id").alias("rep_b"))
         .agg(F.count("*").alias("n_common"))
     )
-    sa = sizes.select(F.col("doc_id").alias("rep_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("rep_b"), F.col("n_sh").alias("n_b"))
-    cross = common.join(sa, "rep_a").join(sb, "rep_b")
+    cross = _attach_sizes(common, "rep_a", "rep_b", sizes, sizes, "n_a", "n_b")
     surv = idx.groupBy("doc_id").agg(F.count("*").alias("n_idx"))
-    selfs = (
-        counts.filter(F.col("n_copies") >= 2)
-        .join(surv.withColumnRenamed("doc_id", "rep_id"), "rep_id")
-        .join(sizes.withColumnRenamed("doc_id", "rep_id"), "rep_id")
-        .select(
-            F.col("rep_id").alias("rep_a"),
-            F.col("rep_id").alias("rep_b"),
-            F.col("n_idx").alias("n_common"),
-            F.col("n_sh").alias("n_a"),
-            F.col("n_sh").alias("n_b"),
-        )
+    selfs = _self_rows(
+        counts,
+        "rep_id",
+        F.col("n_idx").alias("n_common"),
+        F.col("n_sh").alias("n_a"),
+        F.col("n_sh").alias("n_b"),
+        sides=(surv, sizes),
     )
     return membership, counts, cross, selfs
 
@@ -399,15 +553,8 @@ def ngram_containment_rep_pairs(
             | (F.col("containment_ba") >= threshold)
         )
     )
-    ca = counts.select(F.col("rep_id").alias("rep_a"), F.col("n_copies").alias("n_copies_a"))
-    cb = counts.select(F.col("rep_id").alias("rep_b"), F.col("n_copies").alias("n_copies_b"))
-    return (
-        scored.join(ca, "rep_a")
-        .join(cb, "rep_b")
-        .select(
-            "rep_a", "rep_b", "n_common", "n_a", "n_b",
-            "containment_ab", "containment_ba", "n_copies_a", "n_copies_b",
-        )
+    return _with_copy_counts(
+        scored, counts, "n_common", "n_a", "n_b", "containment_ab", "containment_ba"
     )
 
 
@@ -458,7 +605,7 @@ def content_membership(
 ) -> DataFrame:
     """(doc_id, rep_id) map for exact text duplicates — the expansion side
     of ngram_jaccard_rep_pairs."""
-    return _collapse(df, F.md5(F.col(text_col).cast("binary")), id_col)[0]
+    return _collapse(df, _text_hash(text_col), id_col)[0]
 
 
 def ngram_jaccard_pairs(
@@ -506,12 +653,8 @@ def minhash_signatures(
     One explode + one groupBy — no per-row Python. A production cluster
     would swap md5 for xxhash64 (same structure, cheaper hash).
     """
-    # widen=True: the standalone signature build is scan-rooted and
-    # measured 1.15 -> 0.65 s widened; the PAIR paths that reference the
-    # shingle subtree from several branches measured WORSE with the
-    # extra exchange per branch (mh_p 1.49 -> 2.09 interleaved) and use
-    # the default-off form
-    sh = _shingle_table(df, text_col, id_col, k, widen=True)
+    # widened: the standalone build is scan-rooted (measured 1.15 -> 0.65 s)
+    sh = _shingle_table(widen_small_scan(df), text_col, id_col, k)
     hashed = sh.select(
         "doc_id",
         md5_int(F.col("shingle"), seed="h1:", hex_digits=12).alias("h1"),
@@ -530,14 +673,12 @@ def _sig_aggs(num_perm: int) -> list[Column]:
     ]
 
 
-def _hashed_shingles(
-    df: DataFrame, text_col: str, id_col: str, k: int, widen: bool = False
-) -> DataFrame:
+def _hashed_shingles(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
     """(doc_id, sh, h1, h2) — the verify hash and both signature base
     hashes from ONE tokenize+shingle+explode pass (r15: the rep-graph /
     index paths previously shingled the same frame twice, once inside
     `minhash_signatures` and once for the verify shingle index)."""
-    return _shingle_table(df, text_col, id_col, k, widen=widen).select(
+    return _shingle_table(df, text_col, id_col, k).select(
         "doc_id",
         md5_int(F.col("shingle")).alias("sh"),
         md5_int(F.col("shingle"), seed="h1:", hex_digits=12).alias("h1"),
@@ -571,18 +712,8 @@ def minhash_lsh_candidates(
 ) -> DataFrame:
     """LSH banding: hash each band of the signature; docs sharing any band
     bucket become candidate pairs (distinct)."""
-    buckets = _band_buckets(sig, num_perm, bands)
-    x = buckets.alias("x")
-    y = buckets.alias("y")
-    return (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
+    return _band_self_join(
+        _band_buckets(sig, num_perm, bands), "doc_id", "bucket", "doc_a", "doc_b"
     )
 
 
@@ -616,12 +747,8 @@ def minhash_rep_graph(
     so common-shingle counting costs O(|candidates| x avg_shingles) —
     never the all-shared-shingle-pairs blowup of a full inverted join.
     """
-    membership, counts = _collapse(
-        df, F.md5(F.col(text_col).cast("binary")), id_col
-    )
-    rep_docs = df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")
-    ).join(counts.select(F.col("rep_id").alias("doc_id")), "doc_id")
+    membership, counts = _collapse(df, _text_hash(text_col), id_col)
+    rep_docs = _rep_docs(df, counts, id_col, F.col(text_col).alias("__text"))
     # ONE combined (sh, h1, h2) projection feeds the signature
     # aggregate, the sizes aggregate, and both sides of the candidate
     # verify. No reuse barrier on hashed or sig: interleaved A/B reads
@@ -633,55 +760,24 @@ def minhash_rep_graph(
     # shares its aggregate via exchange reuse.
     hashed = _hashed_shingles(rep_docs, "__text", "doc_id", k)
     sig = hashed.groupBy("doc_id").agg(*_sig_aggs(num_perm))
-    cand = minhash_lsh_candidates(sig, num_perm, bands)
+    cand = minhash_lsh_candidates(sig, num_perm, bands).select(
+        F.col("doc_a").alias("rep_a"), F.col("doc_b").alias("rep_b")
+    )
     sh = hashed.select("doc_id", "sh")
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    sh_a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sh_b = sh.select(F.col("doc_id").alias("__b_doc"), F.col("sh").alias("sh_b"))
-    common = (
-        cand.join(sh_a, "doc_a")
-        .join(
-            sh_b,
-            (F.col("doc_b") == F.col("__b_doc")) & (F.col("sh_a") == F.col("sh_b")),
-        )
-        .groupBy(
-            F.col("doc_a").alias("rep_a"), F.col("doc_b").alias("rep_b")
-        )
-        .agg(F.count("*").alias("n_common"))
+    sizes = _shingle_counts(sh)
+    cross = _candidate_overlap(
+        cand, "rep_a", "rep_b", sh, sh, sizes, sizes, "n_a", "n_b"
     )
-    sa = sizes.select(F.col("doc_id").alias("rep_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("rep_b"), F.col("n_sh").alias("n_b"))
-    cross = common.join(sa, "rep_a").join(sb, "rep_b")
-    selfs = (
-        counts.filter(F.col("n_copies") >= 2)
-        .join(sizes.withColumnRenamed("doc_id", "rep_id"), "rep_id")
-        .select(
-            F.col("rep_id").alias("rep_a"),
-            F.col("rep_id").alias("rep_b"),
-            F.col("n_sh").alias("n_common"),
-            F.col("n_sh").alias("n_a"),
-            F.col("n_sh").alias("n_b"),
-        )
+    selfs = _self_rows(
+        counts,
+        "rep_id",
+        F.col("n_sh").alias("n_common"),
+        F.col("n_sh").alias("n_a"),
+        F.col("n_sh").alias("n_b"),
+        sides=(sizes,),
     )
-    scored = (
-        cross.unionByName(selfs)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    ca = counts.select(F.col("rep_id").alias("rep_a"), F.col("n_copies").alias("n_copies_a"))
-    cb = counts.select(F.col("rep_id").alias("rep_b"), F.col("n_copies").alias("n_copies_b"))
-    pairs = (
-        scored.join(ca, "rep_a")
-        .join(cb, "rep_b")
-        .select("rep_a", "rep_b", "jaccard", "n_copies_a", "n_copies_b")
-    )
+    scored = _jaccard_at_least(cross.unionByName(selfs), threshold, "n_a", "n_b")
+    pairs = _with_copy_counts(scored, counts, "jaccard")
     return RepGraph(membership, counts, pairs)
 
 
@@ -758,53 +854,25 @@ def minhash_join(
     r_docs = right.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
     # ONE combined (sh, h1, h2) projection per side (the
     # minhash_rep_graph recipe) feeds that side's signature aggregate AND
-    # the verify shingle index. No reuse barrier and unwidened like
-    # minhash_rep_graph: interleaved A/B reads a barrier as a wash (med
-    # 2.48 with vs 2.29 without) and the widen as a small loss; the plain
-    # form keeps no executor-memory state at any scale.
+    # the verify shingle index. No reuse barrier: interleaved A/B reads
+    # one as a wash (med 2.48 with vs 2.29 without), and the plain form
+    # keeps no executor-memory state at any scale. Not widened: a widen
+    # here measured as a small loss.
     hashed_l = _hashed_shingles(l_docs, "__t", "doc_id", k)
     hashed_r = _hashed_shingles(r_docs, "__t", "doc_id", k)
     sig_l = hashed_l.groupBy("doc_id").agg(*_sig_aggs(num_perm))
     sig_r = hashed_r.groupBy("doc_id").agg(*_sig_aggs(num_perm))
-    bl = _band_buckets(sig_l, num_perm, bands).withColumnRenamed("doc_id", "left_id")
-    br = _band_buckets(sig_r, num_perm, bands).withColumnRenamed("doc_id", "right_id")
-    cand = (
-        bl.join(br, ["band", "bucket"])
-        .select("left_id", "right_id")
-        .distinct()
+    cand = _bucket_candidates(
+        _band_buckets(sig_l, num_perm, bands), _band_buckets(sig_r, num_perm, bands)
     )
-    sh_l = hashed_l.select(
-        F.col("doc_id").alias("left_id"), F.col("sh").alias("sh_a")
+    sh_l = hashed_l.select("doc_id", "sh")
+    sh_r = hashed_r.select("doc_id", "sh")
+    pairs = _candidate_overlap(
+        cand, "left_id", "right_id", sh_l, sh_r,
+        _shingle_counts(sh_l), _shingle_counts(sh_r), "n_left", "n_right",
     )
-    sh_r = hashed_r.select(
-        F.col("doc_id").alias("__rid"), F.col("sh").alias("sh_b")
-    )
-    common = (
-        cand.join(sh_l, "left_id")
-        .join(
-            sh_r,
-            (F.col("right_id") == F.col("__rid")) & (F.col("sh_a") == F.col("sh_b")),
-        )
-        .groupBy("left_id", "right_id")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sz_l = sh_l.groupBy("left_id").agg(F.count("*").alias("n_left"))
-    sz_r = sh_r.groupBy("__rid").agg(F.count("*").alias("n_right"))
-    return (
-        common.join(sz_l, "left_id")
-        .join(sz_r, F.col("right_id") == F.col("__rid"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common").cast("double")
-                / (F.col("n_left") + F.col("n_right") - F.col("n_common")).cast(
-                    "double"
-                ),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("left_id", "right_id", "n_common", "n_left", "n_right", "jaccard")
+    return _jaccard_at_least(pairs, threshold, "n_left", "n_right").select(
+        "left_id", "right_id", "n_common", "n_left", "n_right", "jaccard"
     )
 
 
@@ -889,16 +957,7 @@ def build_dedup_index(
     # 3.90 without, interleaved) — the barrier serializes the one-split
     # builds while the plain references run concurrently and share
     # exchanges.
-    reps = (
-        c.filter(F.col("__t").isNotNull())
-        .groupBy(F.md5(F.col("__t")).alias("content_hash"))
-        .agg(F.min(F.struct("doc_id", "__t")).alias("__m"))
-        .select(
-            "content_hash",
-            F.col("__m.doc_id").alias("rep_id"),
-            F.col("__m.__t").alias("__t"),
-        )
-    )
+    reps = _min_id_reps(c, "content_hash", "rep_id")
     hashes = reps.select("content_hash", F.col("rep_id"))
     rep_docs = reps.select(F.col("rep_id").alias("doc_id"), "__t")
     # ONE tokenize+shingle+hash plan for all three derived tables (r15):
@@ -910,7 +969,7 @@ def build_dedup_index(
     sig = hashed.groupBy("doc_id").agg(*_sig_aggs(num_perm))
     buckets = _band_buckets(sig, num_perm, bands)
     shingles = hashed.select("doc_id", "sh")
-    sizes = shingles.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    sizes = _shingle_counts(shingles)
     return CorpusDedupIndex(hashes, buckets, shingles, sizes)
 
 
@@ -972,66 +1031,20 @@ def dedup_incremental_report(
     # exact-collapse the BATCH side too (a re-crawl is as copy-heavy as
     # the corpus): sign/shingle one rep per distinct remaining content,
     # probe the index, expand the per-content verdict back to every doc
-    nreps = (
-        rest.filter(F.col("__t").isNotNull())
-        .groupBy(F.md5(F.col("__t")).alias("__nh"))
-        .agg(F.min(F.struct("doc_id", "__t")).alias("__m"))
-        .select(
-            "__nh",
-            F.col("__m.doc_id").alias("doc_id"),
-            F.col("__m.__t").alias("__t"),
-        )
-    )
+    nreps = _min_id_reps(rest, "__nh", "doc_id")
     # one combined-hash projection for the batch side too (no reuse
     # barrier — see build_dedup_index)
     hashed_n = _hashed_shingles(nreps, "__t", "doc_id", k)
     sig_n = hashed_n.groupBy("doc_id").agg(*_sig_aggs(num_perm))
-    bn = _band_buckets(sig_n, num_perm, bands).withColumnRenamed(
-        "doc_id", "left_id"
-    )
-    cand = (
-        bn.join(
-            idx.buckets.withColumnRenamed("doc_id", "right_id"),
-            ["band", "bucket"],
-        )
-        .select("left_id", "right_id")
-        .distinct()
-    )
-    sh_n = hashed_n.select(F.col("doc_id").alias("left_id"), "sh")
-    common = (
-        cand.join(sh_n, "left_id")
-        .join(
-            idx.shingles.select(
-                F.col("doc_id").alias("__rid"), F.col("sh").alias("__rsh")
-            ),
-            (F.col("right_id") == F.col("__rid"))
-            & (F.col("sh") == F.col("__rsh")),
-        )
-        .groupBy("left_id", "right_id")
-        .agg(F.count("*").alias("n_common"))
-    )
-    sz_n = sh_n.groupBy("left_id").agg(F.count("*").alias("n_left"))
-    pairs = (
-        common.join(sz_n, "left_id")
-        .join(
-            idx.sizes.select(
-                F.col("doc_id").alias("__rid"), F.col("n_sh").alias("n_right")
-            ),
-            F.col("right_id") == F.col("__rid"),
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common").cast("double")
-                / (
-                    F.col("n_left") + F.col("n_right") - F.col("n_common")
-                ).cast("double"),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("left_id", "right_id", "jaccard")
-    )
+    cand = _bucket_candidates(_band_buckets(sig_n, num_perm, bands), idx.buckets)
+    sh_n = hashed_n.select("doc_id", "sh")
+    pairs = _jaccard_at_least(
+        _candidate_overlap(
+            cand, "left_id", "right_id", sh_n, idx.shingles,
+            _shingle_counts(sh_n), idx.sizes, "n_left", "n_right",
+        ),
+        threshold, "n_left", "n_right",
+    ).select("left_id", "right_id", "jaccard")
     # order: best jaccard, then SMALLEST corpus id — negate the numeric
     # score, never the id (string corpus ids would NULL out under
     # arithmetic and silently pick the LARGEST id)
@@ -1106,11 +1119,7 @@ def simhash_table(
     duplication would cost 60× otherwise). 60-bit portable hash → bits ≤ 60.
     """
     bits = min(bits, 60)
-    # UNwidened (r16): the r15 widen measured as a loss once the bench
-    # cleared caches between runs (sh_f med 0.88 -> 0.78, sh_p 3.15 ->
-    # 2.52 interleaved) — the repartition exchange costs more than the
-    # parallel tokenize saves; the majority-vote aggregate below already
-    # widens at its own exchange.
+    # not widened: the vote aggregate's own exchange already widens it
     toked = df.select(
         F.col(id_col).alias("doc_id"),
         F.array_distinct(tokens(F.lower(F.col(text_col)))).alias("toks"),
@@ -1197,29 +1206,18 @@ def simhash_rep_graph(
     the self row carries hamming 0 unconditionally.
     """
     membership, counts = _collapse(
-        df,
-        F.coalesce(F.md5(F.col(text_col).cast("binary")), F.lit("__null__")),
-        id_col,
+        df, F.coalesce(_text_hash(text_col), F.lit("__null__")), id_col
     )
-    rep_docs = df.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")
-    ).join(counts.select(F.col("rep_id").alias("doc_id")), "doc_id")
+    rep_docs = _rep_docs(df, counts, id_col, F.col(text_col).alias("__text"))
     cross = _simhash_banded_pairs(rep_docs, "__text", max_hamming, bands).select(
         F.col("doc_a").alias("rep_a"), F.col("doc_b").alias("rep_b"), "hamming"
     )
-    selfs = counts.filter(F.col("n_copies") >= 2).select(
-        F.col("rep_id").alias("rep_a"),
-        F.col("rep_id").alias("rep_b"),
+    selfs = _self_rows(
+        counts,
+        "rep_id",
         F.lit(0).cast(cross.schema["hamming"].dataType).alias("hamming"),
     )
-    ca = counts.select(F.col("rep_id").alias("rep_a"), F.col("n_copies").alias("n_copies_a"))
-    cb = counts.select(F.col("rep_id").alias("rep_b"), F.col("n_copies").alias("n_copies_b"))
-    pairs = (
-        cross.unionByName(selfs)
-        .join(ca, "rep_a")
-        .join(cb, "rep_b")
-        .select("rep_a", "rep_b", "hamming", "n_copies_a", "n_copies_b")
-    )
+    pairs = _with_copy_counts(cross.unionByName(selfs), counts, "hamming")
     return RepGraph(membership, counts, pairs)
 
 
@@ -1271,41 +1269,13 @@ def _simhash_banded_pairs(
     which exchange reuse shares (only the per-doc merge runs twice), and
     a checkpoint measured slower for both callers (OPTIMIZATION_r17.md,
     intra-query reuse)."""
-    bits = 60
-    per = bits // bands
-    sh = simhash_table(df, text_col, "doc_id")
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftrightunsigned(F.col("sh"), b * per)
-            .bitwiseAND(F.lit((1 << per) - 1))
-            .alias("chunk"),
-        )
-        for b in range(bands)
-    ]
-    bb = sh.select("doc_id", "sh", F.explode(F.array(*band_cols)).alias("b")).select(
-        "doc_id", "sh", "b.band", "b.chunk"
+    cand = _chunk_candidates(
+        simhash_table(df, text_col, "doc_id"), "doc_id", "sh", 60 // bands, bands,
+        "doc_a", "doc_b", carry=("sh",),
     )
-    x, y = bb.alias("x"), bb.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.chunk") == F.col("y.chunk"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.sh").alias("sh_a"),
-            F.col("y.sh").alias("sh_b"),
-        )
-        .distinct()
+    return _within_hamming(cand, "sh_a", "sh_b", max_hamming).select(
+        "doc_a", "doc_b", "hamming"
     )
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return cand.withColumn("hamming", ham).filter(
-        F.col("hamming") <= max_hamming
-    ).select("doc_a", "doc_b", "hamming")
 
 
 # -- embedding near-dup -----------------------------------------------------
@@ -1466,32 +1436,10 @@ def _lsh_cosine_pairs(
     base = _sketch_norm_arrow(
         staged, [plane(p) for p in range(n_hyperplanes)]
     ).localCheckpoint(eager=False)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftrightunsigned(F.col("sk"), b * per)
-            .bitwiseAND(F.lit((1 << per) - 1))
-            .alias("chunk"),
-        )
-        for b in range(bands)
-    ]
     # candidate generation works on (id, band, chunk) ONLY — deduping
     # (id_a, id_b) before vectors are touched keeps the shuffle narrow;
     # vectors re-join by id afterwards (two hash joins on the id key)
-    bb = base.select("vid", F.explode(F.array(*band_cols)).alias("b")).select(
-        "vid", "b.band", "b.chunk"
-    )
-    x, y = bb.alias("x"), bb.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.chunk") == F.col("y.chunk"))
-            & (F.col("x.vid") < F.col("y.vid")),
-        )
-        .select(F.col("x.vid").alias("id_a"), F.col("y.vid").alias("id_b"))
-        .distinct()
-    )
+    cand = _chunk_candidates(base, "vid", "sk", per, bands, "id_a", "id_b")
     va = base.select(
         F.col("vid").alias("id_a"), F.col("v").alias("v_a"),
         F.col("nrm").alias("nrm_a"),
@@ -1548,10 +1496,11 @@ def embedding_rep_graph(
         dim = len(df.select(vec_col).first()[0])
     from platform_spark.llmdata.similarity import cosine_expr
 
-    rep_docs = df.select(
-        F.col(id_col).alias("doc_id"),
+    rep_docs = _rep_docs(
+        df, counts, id_col,
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-    ).join(counts.select(F.col("rep_id").alias("doc_id"), "n_copies"), "doc_id")
+        "n_copies",
+    )
     cross = _lsh_cosine_pairs(
         rep_docs.select(F.col("doc_id").alias("vid"), F.col("__v").alias("v")),
         threshold,
@@ -1561,23 +1510,12 @@ def embedding_rep_graph(
     ).select(
         F.col("id_a").alias("rep_a"), F.col("id_b").alias("rep_b"), "cosine"
     )
-    selfs = (
-        rep_docs.filter(F.col("n_copies") >= 2)
-        .select(
-            F.col("doc_id").alias("rep_a"),
-            F.col("doc_id").alias("rep_b"),
-            F.round(cosine_expr(F.col("__v"), F.col("__v")), 6).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-    ca = counts.select(F.col("rep_id").alias("rep_a"), F.col("n_copies").alias("n_copies_a"))
-    cb = counts.select(F.col("rep_id").alias("rep_b"), F.col("n_copies").alias("n_copies_b"))
-    pairs = (
-        cross.unionByName(selfs)
-        .join(ca, "rep_a")
-        .join(cb, "rep_b")
-        .select("rep_a", "rep_b", "cosine", "n_copies_a", "n_copies_b")
-    )
+    selfs = _self_rows(
+        rep_docs,
+        "doc_id",
+        F.round(cosine_expr(F.col("__v"), F.col("__v")), 6).alias("cosine"),
+    ).filter(F.col("cosine") >= threshold)
+    pairs = _with_copy_counts(cross.unionByName(selfs), counts, "cosine")
     return RepGraph(membership, counts, pairs)
 
 
@@ -1644,20 +1582,11 @@ def _positional_spans(
         F.col(id_col).alias("doc_id"),
         tokens(F.lower(F.col(text_col))).alias("__toks"),
     )
-    n = F.size("__toks")
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(-1)))
-    span_structs = F.when(
-        n < k, F.array().cast("array<struct<pos:int,sh:string>>")
-    ).otherwise(
-        F.transform(
-            idx,
-            lambda i: F.struct(
-                i.cast("int").alias("pos"),
-                F.concat_ws(
-                    " ", *[F.element_at(F.col("__toks"), i + j + 1) for j in range(k)]
-                ).alias("sh"),
-            ),
-        )
+    span_structs = _token_windows(
+        F.col("__toks"),
+        k,
+        lambda i, w: F.struct(i.cast("int").alias("pos"), w.alias("sh")),
+        "array<struct<pos:int,sh:string>>",
     )
     spans = toked.select("doc_id", F.explode(span_structs).alias("s")).select(
         "doc_id",
@@ -1817,7 +1746,7 @@ def dedup_keep_best(
 
         key = fingerprint(F.col(text_col))
     else:
-        key = F.md5(F.col(text_col).cast("binary"))
+        key = _text_hash(text_col)
     staged = df.select(
         key.alias("content_hash"),
         F.col(id_col).alias("__id"),
@@ -1864,22 +1793,11 @@ def winnow_fingerprints(
         F.col(id_col).alias("doc_id"),
         tokens(F.lower(F.col(text_col))).alias("__toks"),
     )
-    n = F.size("__toks")
-    sh_idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(-1)))
     staged = toked.select(
         "doc_id",
-        F.when(n < k, F.array().cast("array<bigint>"))
-        .otherwise(
-            F.transform(
-                sh_idx,
-                lambda i: md5_int(
-                    F.concat_ws(
-                        " ", *[F.element_at(F.col("__toks"), i + j + 1) for j in range(k)]
-                    )
-                ),
-            )
-        )
-        .alias("__hs"),
+        _token_windows(
+            F.col("__toks"), k, lambda i, w: md5_int(w), "array<bigint>"
+        ).alias("__hs"),
     )
     m = F.size("__hs")
     win_idx = F.sequence(F.lit(0), F.greatest(m - window, F.lit(-1)))

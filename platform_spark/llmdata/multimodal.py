@@ -491,44 +491,15 @@ def dhash_pairs(
     untouched band, so recall is exact; at larger distances keep
     ``bands > max_hamming`` (more, narrower bands) to preserve it.
     Output (media_a, media_b, hamming), a < b."""
-    from pyspark.sql import functions as F
+    from platform_spark.llmdata.dedup import _chunk_candidates, _within_hamming
 
-    per = bits // bands
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftrightunsigned(F.col(fp_col), b * per)
-            .bitwiseAND(F.lit((1 << per) - 1))
-            .alias("chunk"),
-        )
-        for b in range(bands)
-    ]
-    bb = fps.select(
-        F.col(id_col).alias("mid"), F.col(fp_col).alias("fp"),
-        F.explode(F.array(*band_cols)).alias("b"),
-    ).select("mid", "fp", "b.band", "b.chunk")
-    x, y = bb.alias("x"), bb.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.chunk") == F.col("y.chunk"))
-            & (F.col("x.mid") < F.col("y.mid")),
-        )
-        .select(
-            F.col("x.mid").alias("media_a"),
-            F.col("y.mid").alias("media_b"),
-            F.col("x.fp").alias("fp_a"),
-            F.col("y.fp").alias("fp_b"),
-        )
-        .distinct()
+    cand = _chunk_candidates(
+        fps, id_col, fp_col, bits // bands, bands, "media_a", "media_b",
+        carry=(fp_col,),
     )
-    ham = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        cand.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("media_a", "media_b", "hamming")
-    )
+    return _within_hamming(
+        cand, f"{fp_col}_a", f"{fp_col}_b", max_hamming
+    ).select("media_a", "media_b", "hamming")
 
 
 def audio_energy_bits(samples: list[int], frames: int = 57) -> int:
@@ -610,42 +581,25 @@ def dhash_rep_pairs(
     are the min id per fingerprint value."""
     from pyspark.sql import functions as F
 
+    from platform_spark.llmdata.dedup import (
+        _chunk_candidates,
+        _self_rows,
+        _within_hamming,
+    )
+
     groups = fps.groupBy(F.col(fp_col).alias("fp")).agg(
         F.min(F.col(id_col)).alias("rep"), F.count("*").alias("n_copies")
     )
-    per = bits // bands
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftrightunsigned(F.col("fp"), b * per)
-            .bitwiseAND(F.lit((1 << per) - 1))
-            .alias("chunk"),
-        )
-        for b in range(bands)
-    ]
-    bb = groups.select(
-        "rep", "fp", "n_copies", F.explode(F.array(*band_cols)).alias("b")
-    ).select("rep", "fp", "n_copies", "b.band", "b.chunk")
-    x, y = bb.alias("x"), bb.alias("y")
-    cross = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.chunk") == F.col("y.chunk"))
-            & (F.col("x.rep") < F.col("y.rep")),
-        )
-        .select(
-            F.col("x.rep").alias("rep_a"), F.col("y.rep").alias("rep_b"),
-            F.col("x.fp").alias("fp_a"), F.col("y.fp").alias("fp_b"),
-            F.col("x.n_copies").alias("n_copies_a"),
-            F.col("y.n_copies").alias("n_copies_b"),
-        )
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))))
-        .filter(F.col("hamming") <= max_hamming)
+    cross = _within_hamming(
+        _chunk_candidates(
+            groups, "rep", "fp", bits // bands, bands, "rep_a", "rep_b",
+            carry=("fp", "n_copies"),
+        ),
+        "fp_a", "fp_b", max_hamming,
     )
-    selfs = groups.filter(F.col("n_copies") >= 2).select(
-        F.col("rep").alias("rep_a"), F.col("rep").alias("rep_b"),
+    selfs = _self_rows(
+        groups,
+        "rep",
         F.lit(0).alias("hamming"),
         F.col("n_copies").alias("n_copies_a"),
         F.col("n_copies").alias("n_copies_b"),

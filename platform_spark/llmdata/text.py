@@ -19,6 +19,23 @@ EN_STOPWORDS = (
 ).split()
 
 
+def _has_shuffle(plan) -> bool:
+    """True when a physical plan (or a subquery of it) holds a shuffle
+    exchange; an adaptive plan is read through its un-executed input plan."""
+    stack = [plan]
+    while stack:
+        p = stack.pop()
+        name = p.getClass().getSimpleName()
+        if name == "ShuffleExchangeExec":
+            return True
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(p.inputPlan())
+            continue
+        for seq in (p.children(), p.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return False
+
+
 def widen_small_scan(df: DataFrame) -> DataFrame:
     """Repartition a frame whose plan parallelizes far below the session
     (guide §2.5's input-skew rule: one small/unsplittable source file →
@@ -27,14 +44,19 @@ def widen_small_scan(df: DataFrame) -> DataFrame:
     scans as a single split no matter how many cores exist — every
     narrow transformation fused onto it then runs single-threaded.
 
-    Gated on the frame's ACTUAL planned partition count: fires only when
-    it is under a quarter of the session's parallelism, so a real-scale
-    scan (thousands of splits) or an already-shuffled input is a no-op —
-    the extra exchange is paid exactly when its input is small. The
-    round-robin exchange changes physical row order only; every consumer
-    in this package is order-insensitive (aggregates, joins, windows
-    over explicit total keys)."""
+    Gated on the frame's planned partition count: fires only when it is
+    under a quarter of the session's parallelism, so a real-scale scan
+    (thousands of splits) is a no-op — the extra exchange is paid exactly
+    when its input is small. A frame whose plan already holds a shuffle
+    is returned unchanged WITHOUT probing: under adaptive execution,
+    counting its partitions (``df.rdd``) runs the upstream shuffle map
+    stages as a hidden job, and its width is set by the shuffle anyway.
+    The round-robin exchange changes physical row order only; every
+    consumer in this package is order-insensitive (aggregates, joins,
+    windows over explicit total keys)."""
     try:
+        if _has_shuffle(df._jdf.queryExecution().executedPlan()):
+            return df
         cur = df.rdd.getNumPartitions()
         dp = df.sparkSession.sparkContext.defaultParallelism
     except Exception:

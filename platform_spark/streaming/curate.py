@@ -89,16 +89,20 @@ def curate_stream(
     )
     passing = cleaned.filter(quality_passes_expr(F.col("text")))
     if bench_hashes:
-        doc_sh = F.transform(
-            shingles_from_tokens(tokens(F.lower(F.col("text"))), k),
-            lambda s: md5_int(s),
+        bench_lit = F.lit(bench_hashes).cast("array<bigint>")
+        # the token array is bound ONCE, as the lambda variable over a
+        # one-element array: shingles_from_tokens references it k+3 times,
+        # and a staged token column would not survive — the optimizer
+        # pushes this filter below the staging projection and substitutes
+        # the tokenizer back into every reference
+        hit = F.exists(
+            F.array(tokens(F.lower(F.col("text")))),
+            lambda toks: F.arrays_overlap(
+                F.transform(shingles_from_tokens(toks, k), lambda s: md5_int(s)),
+                bench_lit,
+            ),
         )
-        passing = passing.filter(
-            ~F.coalesce(
-                F.arrays_overlap(doc_sh, F.lit(bench_hashes).cast("array<bigint>")),
-                F.lit(False),
-            )
-        )
+        passing = passing.filter(~F.coalesce(hit, F.lit(False)))
     keyed = passing.withColumn("__ch", F.md5(F.col("text").cast("binary")))
     return dedup_stream(
         keyed, ["__ch"], ts_col="_ts", within_watermark=watermark

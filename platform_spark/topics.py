@@ -106,6 +106,23 @@ IMPLICIT_COLUMNS = (
     "_segment",
 )
 
+#: DESCRIBE type of each implicit column, in IMPLICIT_COLUMNS order
+_IMPLICIT_TYPES = (
+    "text", "integer", "bigint", "timestamp", "bytea", "bytea", "jsonb", "text",
+)
+
+
+def _describe_rows(configs: dict, name: str) -> list[tuple[str, str, str]]:
+    """DESCRIBE rows (column, type, source) of topic `name`: the implicit
+    columns, then its configured schema columns (server.go:813-861). Every
+    catalog flavour answers DESCRIBE through this one builder."""
+    rows = [(c, t, "implicit") for c, t in zip(IMPLICIT_COLUMNS, _IMPLICIT_TYPES)]
+    cfg = configs.get(name)
+    if cfg:
+        rows += [(c.name, c.type, c.path) for c in cfg.columns]
+    return rows
+
+
 #: per-topic rank key for the scalable offset assignment: (numeric chunk
 #: key, full ORDER BY of the envelope's ROW_NUMBER). Topics not listed
 #: order by their numeric `_key` (the passthrough envelopes' pk).
@@ -589,20 +606,7 @@ class TopicCatalog:
 
     def describe(self, name: str) -> list[tuple[str, str, str]]:
         """DESCRIBE rows: (column, type, source) — server.go:813-861."""
-        rows = [
-            ("_topic", "text", "implicit"),
-            ("_partition", "integer", "implicit"),
-            ("_offset", "bigint", "implicit"),
-            ("_ts", "timestamp", "implicit"),
-            ("_key", "bytea", "implicit"),
-            ("_value", "bytea", "implicit"),
-            ("_headers", "jsonb", "implicit"),
-            ("_segment", "text", "implicit"),
-        ]
-        cfg = self.configs.get(name)
-        if cfg:
-            rows += [(c.name, c.type, c.path) for c in cfg.columns]
-        return rows
+        return _describe_rows(self.configs, name)
 
     # -- materialization: the real at-rest layout -------------------------
     def materialize_all(self, root: str) -> None:

@@ -98,3 +98,22 @@ def test_short_names_stay_stable_for_known_keys():
     }
     for full, short in expect.items():
         assert bench._short(full) == short
+
+
+def test_steady_runs_stopping_rule():
+    """bench.steady_runs (shared by bench.py and tools/leg_trace.py) stops
+    each leg where the suite's rule says: best-of-2 on flat multi-second
+    legs, a third run for cheap legs, warm-down while a sub-2 s leg still
+    improves, heap-state resampling on a wide multi-second spread."""
+    bench = _bench()
+
+    def count(times, **kw):
+        it = iter(times)
+        return len(bench.steady_runs(lambda: next(it), **kw))
+
+    assert count([3.0, 3.0]) == 2
+    assert count([0.5, 0.5, 0.5]) == 3
+    assert count([1.5, 1.2, 1.0, 1.0, 1.0, 1.0]) == 5
+    assert count([1.5, 1.2, 1.0, 0.9, 0.8, 0.7, 0.6]) == 6
+    assert count([12.6, 10.3, 10.2, 10.2]) == 4
+    assert count([3.0, 3.0, 3.0, 3.0, 3.0], min_runs=5) == 5

@@ -126,6 +126,29 @@ def test_describe_lists_schema_columns(engine):
     assert {"_topic", "_offset", "event_type", "amount", "flag"} <= cols
 
 
+def test_describe_rows_identical_across_catalogs(engine, tmp_path):
+    """Parquet, .kfs and Iceberg catalogs answer DESCRIBE with the same
+    rows: the implicit columns in reference order, then the schema."""
+    from platform_spark.iceberg.catalog import IcebergTopicCatalog
+    from platform_spark.kfs import KfsTopicCatalog
+
+    cat = engine.catalog
+    rows = cat.describe("events")
+    assert rows[:8] == [
+        ("_topic", "text", "implicit"),
+        ("_partition", "integer", "implicit"),
+        ("_offset", "bigint", "implicit"),
+        ("_ts", "timestamp", "implicit"),
+        ("_key", "bytea", "implicit"),
+        ("_value", "bytea", "implicit"),
+        ("_headers", "jsonb", "implicit"),
+        ("_segment", "text", "implicit"),
+    ]
+    assert len(rows) > 8
+    for other in (KfsTopicCatalog, IcebergTopicCatalog):
+        assert other(cat.spark, str(tmp_path), cat.configs).describe("events") == rows
+
+
 def test_result_cache_hits(engine):
     stmt = "SELECT _offset FROM events LAST 2d LIMIT 10"
     engine.cache.hits = engine.cache.misses = 0

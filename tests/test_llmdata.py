@@ -3312,6 +3312,24 @@ def test_widen_small_scan_gate_and_identity(spark, tmp_path):
     assert widen_small_scan(empty).count() == 0
 
 
+def test_widen_small_scan_runs_no_job_on_shuffled_input(spark, tmp_path):
+    """A frame whose plan already holds a shuffle is returned as is,
+    without counting its partitions: under adaptive execution `df.rdd`
+    would run the upstream shuffle map stage as a hidden job."""
+    from platform_spark.llmdata.text import widen_small_scan
+    from tests.conftest import jobs_run
+
+    p = str(tmp_path / "docs.parquet")
+    spark.range(50).selectExpr("id AS doc_id", "concat('t ', id) AS text").coalesce(
+        1
+    ).write.parquet(p)
+    shuffled = spark.read.parquet(p).repartition(2)
+    n0 = jobs_run(spark)
+    out = widen_small_scan(shuffled)
+    assert jobs_run(spark) == n0
+    assert out is shuffled
+
+
 def test_simhash_sql_aggregates_match_reference_fold(spark):
     """The SQL-text majority vote (r15) must equal the per-row reference
     fold (dedup.simhash) on mixed inputs incl. empty and NULL text."""

@@ -842,6 +842,54 @@ def test_cleaning_ops_compose_on_streams(spark, tmp_path):
     assert "<EMAIL>" in rows[2]["text_redacted"] and rows[2]["n_email"] == 1
 
 
+def test_curate_stream_decontam_filter_tokenizes_once(spark, tmp_path):
+    """The micro-batch plan's decontamination filter holds the lowercase
+    tokenizer ONCE: shingling references the token array k+3 times, and
+    an inline tokenizer expression would be copied into each reference."""
+    from datetime import datetime
+
+    import pandas as pd
+
+    from platform_spark.streaming.curate import curate_stream
+
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": [1],
+                "_ts": [datetime(2024, 1, 1)],
+                "text": ["alpha bravo charlie delta echo foxtrot golf hotel india"],
+            }
+        )
+    ).write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    q = (
+        curate_stream(stream, bench_hashes=[1, 2, 3], k=8)
+        .writeStream.format("memory")
+        .queryName("curate_plan_probe")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    def nodes(p):
+        yield p
+        kids = p.children()
+        for i in range(kids.size()):
+            yield from nodes(kids.apply(i))
+
+    plan = q._jsq.streamingQuery().lastExecution().optimizedPlan()
+    conds = [
+        n.condition().toString()
+        for n in nodes(plan)
+        if n.getClass().getSimpleName() == "Filter"
+        and "arrays_overlap" in n.condition().toString()
+    ]
+    assert len(conds) == 1
+    assert conds[0].count("split(trim(lower(") == 1
+
+
 def test_curate_stream_end_to_end(spark, tmp_path):
     """Streaming curation: line filter + redaction + quality gate +
     inline decontamination + watermarked exact dedup, all in ONE
