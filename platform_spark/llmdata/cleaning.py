@@ -143,12 +143,7 @@ def quality_rules(
     # aggregate would otherwise DROP null-text docs at the inner join while
     # the rowwise twin emits NULL metrics — the three entry points must
     # agree row-for-row (equality pytest-pinned, incl. the NULL case)
-    words = df.select(
-        F.col(id_col),
-        F.split(
-            F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"
-        ).alias("__words"),
-    )
+    words = df.select(F.col(id_col), _quality_words(F.col(text_col)).alias("__words"))
     base = words.select(
         id_col,
         F.size("__words").alias("n_words"),
@@ -406,13 +401,19 @@ def repetition_metrics(
     return per_n.groupBy("doc_id").agg(*aggs)
 
 
-def _rowwise_metrics(text: Column) -> list[Column]:
-    """(n_words, mean_word_len, distinct_ratio, top_word_ratio) of `text`
-    as per-row expressions, rounded like quality_rules; NULL text behaves
-    as ''. The one aggregate-looking metric, top-word ratio, is the
-    longest run of equal tokens in the SORTED token array (a single
-    O(n log n) fold per row)."""
-    words = F.split(F.trim(F.coalesce(text, F.lit(""))), r"\s+")
+def _quality_words(text: Column) -> Column:
+    """The quality rules' word array of `text`; NULL text behaves as ''."""
+    return F.split(F.trim(F.coalesce(text, F.lit(""))), r"\s+")
+
+
+def _rowwise_metrics(words: Column) -> list[Column]:
+    """(n_words, mean_word_len, distinct_ratio, top_word_ratio) of the
+    `_quality_words` array `words` as per-row expressions, rounded like
+    quality_rules. Every metric references `words`, so it must be bound
+    (a column of its own select, or a lambda variable), never inlined.
+    The one aggregate-looking metric, top-word ratio, is the longest run
+    of equal tokens in the SORTED token array (a single O(n log n) fold
+    per row)."""
     n_words = F.size(words)
     mean_len = F.round(
         F.aggregate(words, F.lit(0.0), lambda acc, w: acc + F.length(w)) / n_words,
@@ -437,6 +438,24 @@ def _rowwise_metrics(text: Column) -> list[Column]:
     return [n_words, mean_len, distinct_ratio, F.round(run / n_words, 6)]
 
 
+def _quality_scored(
+    df: DataFrame, text_col: str, id_col: str, *carry: str
+) -> DataFrame:
+    """(id_col, *_METRICS, *carry, *QUALITY_RULES, passes_all): the
+    row-wise quality rules with `carry` columns of `df` passed through.
+    The word array is bound once per row, as a column of its own select
+    that every metric reads."""
+    words = df.select(
+        F.col(id_col), *carry, _quality_words(F.col(text_col)).alias("__words")
+    )
+    metrics = _rowwise_metrics(F.col("__words"))
+    return _with_rule_flags(
+        words.select(
+            id_col, *[m.alias(name) for m, name in zip(metrics, _METRICS)], *carry
+        )
+    )
+
+
 def quality_rules_rowwise(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -447,13 +466,7 @@ def quality_rules_rowwise(
     an extra exchange is unwanted; the batch version's explode+agg shape
     remains better when the plan already shuffles on doc_id.
     """
-    metrics = _rowwise_metrics(F.col(text_col))
-    return _with_rule_flags(
-        df.select(
-            F.col(id_col).alias(id_col),
-            *[m.alias(name) for m, name in zip(metrics, _METRICS)],
-        )
-    )
+    return _quality_scored(df, text_col, id_col)
 
 
 def quality_passes_expr(text: Column) -> Column:
@@ -461,8 +474,14 @@ def quality_passes_expr(text: Column) -> Column:
     quality_rules / quality_rules_rowwise — equality pytest-pinned).
     For streams and filters where a separate metrics frame is unwanted.
     NULL text behaves as '' (fails the word-count rule → false, not NULL),
-    matching both quality_rules twins."""
-    return reduce(and_, _rule_flags(*_rowwise_metrics(text)))
+    matching both quality_rules twins. The word array is bound once, as
+    the lambda variable over a one-element array: a filter is pushed
+    below the projection that would stage it, so a staged column would
+    be substituted back into every metric."""
+    return F.exists(
+        F.array(_quality_words(text)),
+        lambda words: reduce(and_, _rule_flags(*_rowwise_metrics(words))),
+    )
 
 
 # -- HTML → text extraction (C4-style) --------------------------------------

@@ -39,8 +39,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-#: at or below this many directed edges the component resolution runs as
-#: ONE driver-side union-find instead of iterative Spark rounds. The
+#: at or below this many pair rows (each undirected pair once, self rows
+#: included) the component resolution runs as ONE driver-side union-find
+#: instead of iterative Spark rounds. The
 #: rep-collapsed dup graph is tiny relative to the corpus (exact-dup
 #: collapse removes the cliques; what remains is near-dup bridges —
 #: at sf0.1 the gate graphs carry a few hundred edges), and each Spark
@@ -66,13 +67,34 @@ _DRIVER_CC_MAX_BYTES = 256 * 1024 * 1024
 _DRIVER_CC_CELL_OVERHEAD = 120
 
 
+def _fits_driver(edges: DataFrame) -> bool:
+    """Whether the (src, dst) frame `edges` collects within
+    _DRIVER_CC_MAX_EDGES rows AND _DRIVER_CC_MAX_BYTES estimated driver
+    bytes. One single-pass aggregate over an already materialized frame:
+    the row cap alone assumed ~50 B/id, which URL-/hash-keyed graphs
+    break (r14 verdict #3), so the same job sums the ids' rendered
+    lengths."""
+    stats = edges.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(
+            F.length(F.col("src").cast("string"))
+            + F.length(F.col("dst").cast("string"))
+        ).alias("chars"),
+    ).first()
+    n_edges = stats["n"]
+    est_bytes = (stats["chars"] or 0) + n_edges * _DRIVER_CC_CELL_OVERHEAD
+    return n_edges <= _DRIVER_CC_MAX_EDGES and est_bytes <= _DRIVER_CC_MAX_BYTES
+
+
 def _driver_min_labels(edges: DataFrame) -> DataFrame:
     """(node, label) by union-find on the driver — the small-graph fast
-    path. ``edges`` already holds BOTH directions, so src covers every
-    node. Min-root union keeps the label = component-min invariant the
-    distributed path produces (string ids compare identically: UTF-8
-    byte order preserves code-point order), so the two paths are
-    result-identical and the oracle gates cover whichever fires."""
+    path, one collect of the (src, dst) frame `edges`. Edges are
+    undirected and every id on either side is a node, so a self edge
+    (x, x) makes x a node of its own. Min-root union keeps the label =
+    component-min invariant the distributed path produces (string ids
+    compare identically: UTF-8 byte order preserves code-point order),
+    so the two paths are result-identical and the oracle gates cover
+    whichever fires."""
     from pyspark.sql import types as T
 
     pdf = edges.toPandas()
@@ -86,14 +108,14 @@ def _driver_min_labels(edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for s, d in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+    src, dst = pdf["src"].tolist(), pdf["dst"].tolist()
+    for s, d in zip(src, dst):
         rs, rd = find(s), find(d)
         if rs != rd:
             if rd < rs:
                 rs, rd = rd, rs
             parent[rd] = rs  # min root wins ⇒ root IS the component min
 
-    nodes = set(pdf["src"].tolist())
     node_type = edges.schema["src"].dataType
     schema = T.StructType(
         [
@@ -106,7 +128,7 @@ def _driver_min_labels(edges: DataFrame) -> DataFrame:
     # and showed up as pure wait time in the final stage's task profile
     import pandas as pd
 
-    labels = sorted((n, find(n)) for n in nodes)
+    labels = sorted((n, find(n)) for n in set(src) | set(dst))
     pdf_out = pd.DataFrame(labels, columns=["node", "label"])
     return edges.sparkSession.createDataFrame(pdf_out, schema)
 
@@ -115,53 +137,38 @@ def _propagate_min_labels(
     pairs: DataFrame, a_col: str, b_col: str, max_iterations: int
 ) -> DataFrame:
     """(node, label) for every node in `pairs`, label = min node id of its
-    connected component. Small graphs resolve as one driver union-find
-    (capped by BOTH _DRIVER_CC_MAX_EDGES and the estimated collected
-    bytes _DRIVER_CC_MAX_BYTES — long URL ids trip the byte gate well
-    before the edge gate); larger ones run iterative min-label
-    propagation and raise if not converged (a silent partial result
-    would split components)."""
+    connected component; a self pair (x, x) makes x a node. The pair list
+    is materialized once; small graphs then resolve straight from it as
+    one driver union-find (_fits_driver: capped by BOTH
+    _DRIVER_CC_MAX_EDGES and the estimated collected bytes
+    _DRIVER_CC_MAX_BYTES — long URL ids trip the byte gate well before
+    the edge gate); larger ones run iterative min-label propagation and
+    raise if not converged (a silent partial result would split
+    components)."""
+    # materialize once: the pair-generating plan (often an expensive
+    # similarity join) must not re-execute for the strategy pick, the
+    # collect or every propagation round
+    pairs = pairs.select(
+        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
+    ).localCheckpoint(eager=True)
+    if _fits_driver(pairs):
+        return _driver_min_labels(pairs)
     edges = (
-        # BOTH edge directions from ONE pass over `pairs` (r15): the old
-        # union(select(a,b), select(b,a)) shape embedded the whole
-        # pair-generating plan — often an expensive similarity join —
-        # TWICE in the logical plan, and the checkpoint job executed both
-        # copies (exchange reuse does not cover the asymmetric projections
-        # above the join). explode of a 2-struct array emits the same row
-        # multiset in a single execution of the pair plan.
+        # BOTH edge directions from ONE pass over `pairs` (r15): explode
+        # of a 2-struct array emits the row multiset of
+        # union(select(a,b), select(b,a)) in a single read
         pairs.select(
             F.explode(
                 F.array(
-                    F.struct(
-                        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-                    ),
-                    F.struct(
-                        F.col(b_col).alias("src"), F.col(a_col).alias("dst")
-                    ),
+                    F.struct(F.col("src"), F.col("dst")),
+                    F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
                 )
             ).alias("__e")
         )
         .select("__e.src", "__e.dst")
         .distinct()
-        # materialize once: the pair-generating plan must not re-execute
-        # every propagation round
         .localCheckpoint(eager=True)
     )
-    # the checkpoint materialized the blocks, so this is a cheap
-    # single-pass aggregate — it picks the resolution strategy. Count
-    # AND byte estimate ride the same job (r14 verdict #3): the edge cap
-    # alone assumed ~50 B/id, which URL-/hash-keyed graphs break.
-    stats = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(
-            F.length(F.col("src").cast("string"))
-            + F.length(F.col("dst").cast("string"))
-        ).alias("chars"),
-    ).first()
-    n_edges = stats["n"]
-    est_bytes = (stats["chars"] or 0) + n_edges * _DRIVER_CC_CELL_OVERHEAD
-    if n_edges <= _DRIVER_CC_MAX_EDGES and est_bytes <= _DRIVER_CC_MAX_BYTES:
-        return _driver_min_labels(edges)
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
@@ -236,47 +243,27 @@ def dedup_clusters(
 
 
 def _cluster_rep_graph(graph, max_iterations: int) -> DataFrame:
-    """Shared tail of the fast cluster paths: propagate min labels over the
-    rep-level pair graph (self rows become isolated self-clusters), then
-    expand back to every doc through the content membership.
+    """Shared tail of the fast cluster paths: resolve min labels over the
+    rep-level pair graph, self rows included (a self row with no other
+    pair is a self-cluster), then expand back to every doc through the
+    content membership.
 
     cluster_id over the expanded graph = min doc id of the component =
     min rep id (each rep is already the min id among its copies), which is
-    exactly the propagated label."""
-    # materialize the rep-level pair list ONCE (r15): `pairs` is consumed
-    # by the cross-edge branch AND the self-row branch, and the cross
-    # branch is consumed again inside the propagation edge build — without
-    # a barrier the expensive candidate-join plan executes 2-3x per query.
-    # Rep pairs are ~linear in distinct contents (tiny next to the
-    # corpus), so the checkpoint is bounded state, same stance as the
-    # edge checkpoint in _propagate_min_labels.
-    rep_pairs = graph.pairs.select("rep_a", "rep_b").localCheckpoint(
-        eager=True
-    )
-    cross = rep_pairs.filter(F.col("rep_a") != F.col("rep_b")).select(
-        F.col("rep_a").alias("doc_a"), F.col("rep_b").alias("doc_b")
-    )
-    selfs = rep_pairs.filter(F.col("rep_a") == F.col("rep_b")).select(
-        F.col("rep_a").alias("rep_id")
-    )
-    labels = _propagate_min_labels(cross, "doc_a", "doc_b", max_iterations)
-    all_labels = (
-        labels.unionByName(
-            selfs.select(
-                F.col("rep_id").alias("node"), F.col("rep_id").alias("label")
-            )
-        )
-        .groupBy("node")
-        .agg(F.min("label").alias("label"))
-    )
+    exactly the resolved label. Rep pairs are ~linear in distinct contents
+    (tiny next to the corpus), so the pair checkpoint in
+    _propagate_min_labels is bounded state. The expanded (doc_id,
+    cluster_id, is_keeper) frame is a lazy checkpoint, so every reader of
+    the clusters (keepers, dedup, a drop report) shares one expansion."""
+    labels = _propagate_min_labels(graph.pairs, "rep_a", "rep_b", max_iterations)
     expanded = graph.membership.join(
-        all_labels.withColumnRenamed("node", "rep_id"), "rep_id"
+        labels.withColumnRenamed("node", "rep_id"), "rep_id"
     )
     return expanded.select(
         F.col("doc_id"),
         F.col("label").alias("cluster_id"),
         (F.col("doc_id") == F.col("label")).alias("is_keeper"),
-    )
+    ).localCheckpoint(eager=False)
 
 
 def dedup_clusters_fast(

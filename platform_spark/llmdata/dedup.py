@@ -441,12 +441,14 @@ def ngram_jaccard_rep_graph(
     dropped from the index only — they generate quadratic candidates but
     barely move Jaccard; sizes keep them, so scores stay exact).
     """
-    membership, counts, cross, selfs = _ngram_rep_common(
+    membership, counts, pairs = _ngram_rep_common(
         df, text_col, id_col, k, stop_shingle_df
     )
-    scored = _jaccard_at_least(cross.unionByName(selfs), threshold, "n_a", "n_b")
-    pairs = _with_copy_counts(scored, counts, "n_common", "n_a", "n_b", "jaccard")
-    return RepGraph(membership, counts, pairs)
+    scored = _jaccard_at_least(pairs, threshold, "n_a", "n_b").select(
+        "rep_a", "rep_b", "n_common", "n_a", "n_b", "jaccard",
+        "n_copies_a", "n_copies_b",
+    )
+    return RepGraph(membership, counts, scored)
 
 
 def _ngram_rep_common(
@@ -455,36 +457,51 @@ def _ngram_rep_common(
     id_col: str,
     k: int,
     stop_shingle_df: float,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared core of the shingle-overlap family (Jaccard AND containment):
     exact-collapse, inverted-index join on distinct contents, copy-weighted
-    hot-shingle cutoff. Returns (membership, counts, cross, selfs) where
-    cross/selfs carry (rep_a, rep_b, n_common, n_a, n_b) — common counts
-    over index-surviving shingles, sizes over ALL shingles; the scorer on
-    top decides the similarity definition."""
-    membership, counts = _collapse(df, _text_hash(text_col), id_col)
-    rep_docs = _rep_docs(
-        df, counts, id_col, F.col(text_col).alias("__text"), "n_copies"
-    )
-    # the shingle table CARRIES n_copies: n_copies is a pure function of
-    # doc_id, so folding it into the explode costs one int column — and
-    # the copy-weighted hot cutoff below becomes a plain aggregate over
-    # this table instead of a SortMergeJoin of the whole shingle table
-    # back against rep_docs (2 exchanges + a sort, and the hot subtree
-    # used to execute once per self-join side). Not widened: interleaved
-    # A/B read a widen here as a loss on every consumer leg.
-    sh = (
-        _shingle_table(rep_docs, "__text", "doc_id", k, "n_copies")
-        .select("doc_id", "n_copies", md5_int(F.col("shingle")).alias("sh"))
-        # checkpointed: sizes, the hot cutoff and the index each read the
-        # table through a different exchange, so exchange reuse cannot
-        # share the tokenize+explode+md5 pass (the dominant per-row cost)
+    hot-shingle cutoff. Returns (membership, counts, pairs) where pairs
+    carry rep_a, rep_b, n_common, n_a, n_b, n_copies_a and n_copies_b —
+    common counts over index-surviving shingles, sizes over ALL shingles;
+    the scorer on top decides the similarity definition."""
+    membership = content_membership(df, text_col, id_col)
+    # ONE rep relation (rep_id, n_copies, n_sh, sh): one aggregate per
+    # distinct content picks the rep (min id) and its text, then a single
+    # row-wise tokenize -> shingle -> md5_int pass hashes it. n_sh is the
+    # array's size, so sizes need no aggregate, and n_sh / n_copies ride
+    # the explode into the index and through the candidate self-join's
+    # grouping key instead of joining back per side. Each select binds
+    # the previous step as a concrete column (see shingles_from_tokens).
+    # Checkpointed: the hot cutoff, the index and the doc count each read
+    # it through a different exchange, so exchange reuse cannot share the
+    # pass.
+    reps = (
+        df.groupBy(_text_hash(text_col).alias("__ch"))
+        .agg(
+            F.min(id_col).alias("rep_id"),
+            F.count("*").alias("n_copies"),
+            F.min_by(text_col, id_col).alias("__text"),
+        )
+        .select("rep_id", "n_copies", tokens(F.lower(F.col("__text"))).alias("__toks"))
+        .select(
+            "rep_id",
+            "n_copies",
+            F.transform(
+                shingles_from_tokens(F.col("__toks"), k), lambda s: md5_int(s)
+            ).alias("sh"),
+        )
+        .select("rep_id", "n_copies", F.size("sh").cast("bigint").alias("n_sh"), "sh")
         .localCheckpoint(eager=False)
     )
-    sizes = _shingle_counts(sh)
+    counts = reps.select("rep_id", "n_copies")
+    # a content whose every copy has a NULL id has no rep doc: its copies
+    # count towards the doc count but shingle nothing
+    sh = reps.filter(F.col("rep_id").isNotNull()).select(
+        "rep_id", "n_copies", "n_sh", F.explode("sh").alias("sh")
+    )
     # doc count computed IN-PLAN (1-row aggregate broadcast into the
     # filter) — no driver-side action, no extra full pass at scale
-    n_docs_df = df.select(F.count("*").alias("__n_docs"))
+    n_docs_df = reps.select(F.sum("n_copies").alias("__n_docs"))
     hot = (
         sh.groupBy("sh")
         .agg(F.sum("n_copies").alias("df_"))
@@ -492,24 +509,32 @@ def _ngram_rep_common(
         .filter(F.col("df_") > F.col("__n_docs") * stop_shingle_df)
         .select("sh")
     )
-    idx = sh.select("doc_id", "sh").join(F.broadcast(hot), "sh", "left_anti")
+    idx = sh.join(F.broadcast(hot), "sh", "left_anti")
+    # one self-join and one aggregate emit the cross pairs AND the self
+    # rows: a content with copies also matches its own index rows, and
+    # that (rep, rep) count is the index-common count its copies share in
+    # the all-docs run
     a, b = idx.alias("a"), idx.alias("b")
-    common = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("rep_a"), F.col("b.doc_id").alias("rep_b"))
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.sh") == F.col("b.sh"))
+            & (
+                (F.col("a.rep_id") < F.col("b.rep_id"))
+                | ((F.col("a.rep_id") == F.col("b.rep_id")) & (F.col("a.n_copies") >= 2))
+            ),
+        )
+        .groupBy(
+            F.col("a.rep_id").alias("rep_a"),
+            F.col("b.rep_id").alias("rep_b"),
+            F.col("a.n_sh").alias("n_a"),
+            F.col("b.n_sh").alias("n_b"),
+            F.col("a.n_copies").alias("n_copies_a"),
+            F.col("b.n_copies").alias("n_copies_b"),
+        )
         .agg(F.count("*").alias("n_common"))
     )
-    cross = _attach_sizes(common, "rep_a", "rep_b", sizes, sizes, "n_a", "n_b")
-    surv = idx.groupBy("doc_id").agg(F.count("*").alias("n_idx"))
-    selfs = _self_rows(
-        counts,
-        "rep_id",
-        F.col("n_idx").alias("n_common"),
-        F.col("n_sh").alias("n_a"),
-        F.col("n_sh").alias("n_b"),
-        sides=(surv, sizes),
-    )
-    return membership, counts, cross, selfs
+    return membership, counts, pairs
 
 
 def ngram_containment_rep_pairs(
@@ -535,26 +560,18 @@ def ngram_containment_rep_pairs(
     cutoff — output ~linear in distinct contents; expand with
     `expand_containment_pairs` only when the doc-level list is needed.
     """
-    membership, counts, cross, selfs = _ngram_rep_common(
-        df, text_col, id_col, k, stop_shingle_df
-    )
-    scored = (
-        cross.unionByName(selfs)
-        .withColumn(
-            "containment_ab",
-            F.round(F.col("n_common").cast("double") / F.col("n_a").cast("double"), 6),
-        )
-        .withColumn(
-            "containment_ba",
-            F.round(F.col("n_common").cast("double") / F.col("n_b").cast("double"), 6),
-        )
-        .filter(
-            (F.col("containment_ab") >= threshold)
-            | (F.col("containment_ba") >= threshold)
-        )
-    )
-    return _with_copy_counts(
-        scored, counts, "n_common", "n_a", "n_b", "containment_ab", "containment_ba"
+    _, _, pairs = _ngram_rep_common(df, text_col, id_col, k, stop_shingle_df)
+
+    def ratio(n: str) -> Column:
+        return F.round(F.col("n_common").cast("double") / F.col(n).cast("double"), 6)
+
+    return pairs.select(
+        "rep_a", "rep_b", "n_common", "n_a", "n_b",
+        ratio("n_a").alias("containment_ab"),
+        ratio("n_b").alias("containment_ba"),
+        "n_copies_a", "n_copies_b",
+    ).filter(
+        (F.col("containment_ab") >= threshold) | (F.col("containment_ba") >= threshold)
     )
 
 

@@ -3,10 +3,11 @@
 Chains the individually-gated operators — clean → redact → quality-gate →
 dedup (exact-collapse fast path) → decontaminate → split → pack — so a
 user gets the whole curation flow with one call. The outputs are lazy
-frames, but building them is not free of jobs: the quality-passing
-documents are materialized once (an eager local checkpoint), and the
-near-dup cluster step checkpoints its pair graph and runs its component
-resolution while the frames are built (clusters.py).
+frames, but building them runs jobs: the quality-scored documents are
+materialized once (an eager local checkpoint), the near-dup cluster step
+materializes its pair graph and resolves its components, and the lazy
+boundaries whose plans hold a shuffle run their map stages (the
+`curate_corpus` docstring lists them).
 
 Every stage is the already-oracle-verified operator; this module only
 wires contracts together (doc_id/text in, curated table + per-stage
@@ -41,29 +42,36 @@ def curate_corpus(
     - ``curated``      deduped minus contaminated, with split assignment
     - ``packed``       (doc_id, bin) sequence-packing of the train split
 
-    The quality gate is row-wise (`quality_rules_rowwise`: the rows of
-    `quality_rules` without its doc-keyed shuffles), and the passing set
-    is ``cleaned`` filtered by `quality_passes_expr`.
+    The quality rules are scored row-wise once per document, over a bound
+    word array (`quality_rules_rowwise` rows without its doc-keyed
+    shuffles), into one ``scored`` boundary of (doc_id, metrics, rule
+    flags, passes_all, text); ``cleaned`` and ``quality`` are projections
+    of it and the passing set is its ``passes_all`` filter, so nothing
+    downstream re-runs scan → clean → quality.
 
     The stage boundaries are local checkpoints, each read by several
     downstream branches that would otherwise re-run the whole upstream
-    chain. The passing set, which the near-dup graph alone reads about
-    nine times, is checkpointed eagerly during this call, so the cluster,
-    dedup, curation and drop-report plans read a small truncated relation
-    instead of re-running scan → clean → quality; cleaned / deduped /
-    curated are checkpointed lazily, filled by the first action that
-    reads them (a boundary whose plan holds a shuffle runs its map stages
-    while it is built). Every checkpoint is released with the last frame
-    that reads it, so repeated calls in one session pin no blocks. Scale
-    trade-off, the stance of the checkpoints in clusters.py: a local
-    checkpoint has no lineage to recompute a lost block from, so losing
-    an executor fails the job; at 100 TB a real pipeline writes these
-    boundaries to tables instead.
+    chain. Jobs this call runs (16 on the benchmark's curation pass):
+    the ``scored`` checkpoint, eager (its count, plus the map stage of
+    the widening exchange on a single-split source); the near-dup graph
+    (clusters.py: the rep relation's per-content aggregate, the rep-pair
+    checkpoint with its doc-count, hot-shingle and candidate-join stages,
+    then one stats aggregate and one collect to resolve the labels); and
+    the map stages of the lazy boundaries built here — the cluster
+    labels, ``deduped`` and ``curated`` (filled by the first action that
+    reads them). Forcing the outputs then reads those boundaries. Every
+    checkpoint is released with the last frame that reads it, so
+    repeated calls in one session pin no blocks. Scale trade-off, the
+    stance of the checkpoints in clusters.py: a local checkpoint has no
+    lineage to recompute a lost block from, so losing an executor fails
+    the job; at 100 TB a real pipeline writes these boundaries to tables
+    instead.
     """
     from platform_spark.llmdata.cleaning import (
+        _METRICS,
+        QUALITY_RULES,
+        _quality_scored,
         filter_boilerplate_lines,
-        quality_passes_expr,
-        quality_rules_rowwise,
         redact_pii,
     )
     from platform_spark.llmdata.clusters import dedup_clusters_fast
@@ -74,17 +82,18 @@ def curate_corpus(
 
     base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
 
-    cleaned = (
+    cleaned_text = (
         filter_boilerplate_lines(base)
         .select("doc_id", F.col("clean_text").alias("text"))
         .transform(lambda d: redact_pii(d))
         .select("doc_id", F.col("text_redacted").alias("text"))
-        .localCheckpoint(eager=False)
     )
-    quality = quality_rules_rowwise(cleaned)
-    passing = cleaned.filter(quality_passes_expr(F.col("text"))).localCheckpoint(
+    scored = _quality_scored(cleaned_text, "text", "doc_id", "text").localCheckpoint(
         eager=True
     )
+    cleaned = scored.select("doc_id", "text")
+    quality = scored.select("doc_id", *_METRICS, *QUALITY_RULES, "passes_all")
+    passing = scored.filter("passes_all").select("doc_id", "text")
 
     clusters = dedup_clusters_fast(passing, threshold=ngram_threshold)
     keepers = clusters.filter("is_keeper").select("doc_id")
@@ -105,9 +114,7 @@ def curate_corpus(
         )
         curated_docs = deduped
 
-    curated = curated_docs.join(
-        assign_splits(curated_docs.select("doc_id")), "doc_id"
-    ).localCheckpoint(eager=False)
+    curated = assign_splits(curated_docs).localCheckpoint(eager=False)
     train = curated.filter(F.col("split") == "train").select(
         "doc_id", "text", token_count(F.col("text")).alias("n_tokens")
     )

@@ -24,7 +24,7 @@ every production curation system makes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -87,22 +87,29 @@ def curate_stream(
     cleaned = redact_pii(cleaned).select(
         "doc_id", "_ts", F.col("text_redacted").alias("text")
     )
-    passing = cleaned.filter(quality_passes_expr(F.col("text")))
-    if bench_hashes:
+
+    def keep(text: Column) -> Column:
+        ok = quality_passes_expr(text)
+        if not bench_hashes:
+            return ok
         bench_lit = F.lit(bench_hashes).cast("array<bigint>")
-        # the token array is bound ONCE, as the lambda variable over a
-        # one-element array: shingles_from_tokens references it k+3 times,
-        # and a staged token column would not survive — the optimizer
-        # pushes this filter below the staging projection and substitutes
-        # the tokenizer back into every reference
+        # the token array is bound ONCE too: shingles_from_tokens
+        # references it k+3 times
         hit = F.exists(
-            F.array(tokens(F.lower(F.col("text")))),
+            F.array(tokens(F.lower(text))),
             lambda toks: F.arrays_overlap(
                 F.transform(shingles_from_tokens(toks, k), lambda s: md5_int(s)),
                 bench_lit,
             ),
         )
-        passing = passing.filter(~F.coalesce(hit, F.lit(False)))
+        return ok & ~F.coalesce(hit, F.lit(False))
+
+    # the cleaned text is bound ONCE, as the lambda variable over a
+    # one-element array: a staged column would not survive — the
+    # optimizer pushes this filter below the projection that defines
+    # `text` and substitutes the whole line-filter + redaction expression
+    # into every reference
+    passing = cleaned.filter(F.exists(F.array(F.col("text")), keep))
     keyed = passing.withColumn("__ch", F.md5(F.col("text").cast("binary")))
     return dedup_stream(
         keyed, ["__ch"], ts_col="_ts", within_watermark=watermark

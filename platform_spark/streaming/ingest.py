@@ -35,6 +35,11 @@ RECORD_SCHEMA = T.StructType(
 )
 
 
+def _sql_str(s: str) -> str:
+    """`s` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 class TopicWriter:
     """Append-only writer for one topic directory.
 
@@ -77,65 +82,43 @@ class TopicWriter:
         by key hash like the reference's default partitioner when absent)
         with contiguous per-partition offsets. Returns new high-water marks.
         """
-        df = records
-        if "_partition" not in df.columns or df.schema["_partition"].nullable:
-            part = F.when(
-                F.col("_partition").isNotNull() if "_partition" in df.columns else F.lit(False),
-                F.col("_partition") if "_partition" in df.columns else F.lit(None),
-            ).otherwise(
-                F.pmod(F.xxhash64(F.col("_key")), F.lit(self.n_partitions)).cast("int")
-            )
-            df = df.withColumn("_partition", part)
+        n = self.n_partitions
+        if "_partition" not in records.columns:
+            raw = f"CAST(pmod(xxhash64(_key), {n}) AS INT)"
+        elif records.schema["_partition"].nullable:
+            raw = f"coalesce(_partition, CAST(pmod(xxhash64(_key), {n}) AS INT))"
+        else:
+            raw = "_partition"
         # a partition id outside [0, n_partitions) has no entry in the HWM
         # base map and would silently produce NULL offsets — reject it the
         # way the broker rejects a produce to a nonexistent partition
-        in_range = (F.col("_partition") >= 0) & (
-            F.col("_partition") < self.n_partitions
+        oor = _sql_str(
+            f"partition out of range for topic {self.topic!r} (n_partitions={n}): "
         )
-        df = df.withColumn(
-            "_partition",
-            F.when(in_range, F.col("_partition")).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            f"partition out of range for topic {self.topic!r} "
-                            f"(n_partitions={self.n_partitions}): "
-                        ),
-                        F.col("_partition").cast("string"),
-                    )
-                ).cast("int")
-            ),
+        part = (
+            f"CASE WHEN {raw} >= 0 AND {raw} < {n} THEN {raw} "
+            f"ELSE CAST(raise_error(concat({oor}, CAST({raw} AS STRING))) AS INT) END"
         )
         hwm = self.high_water_marks()
-        base = F.create_map(
-            *[x for p in range(self.n_partitions) for x in (F.lit(p), F.lit(hwm.get(p, 0)))]
-        )
-        w = Window.partitionBy("_partition").orderBy(F.col("_ts"), F.col("_key"))
-        df = df.withColumn(
-            "_offset",
-            (F.row_number().over(w) - 1 + base[F.col("_partition")]).cast("bigint"),
-        )
-        df = df.select(
-            F.lit(self.topic).alias("_topic"),
-            "_partition",
-            "_offset",
+        base = ", ".join(f"{p}, {hwm.get(p, 0)}L" for p in range(n))
+        # ONE projection, so the plan is built and analyzed once. The
+        # window's exchange hash-partitions the rows by partition id, which
+        # is the layout the partitioned write needs: no repartition on top
+        df = records.selectExpr(
+            f"{_sql_str(self.topic)} AS _topic",
+            f"{part} AS _partition",
+            f"row_number() OVER (PARTITION BY {part} ORDER BY _ts, _key) - 1"
+            f" + map({base})[{part}] AS _offset",
             "_ts",
             "_key",
             "_value",
-            F.coalesce(F.col("_headers"), F.lit("{}")).alias("_headers"),
-            F.lit("").alias("_segment"),
-        )
-        df = df.withColumn(
-            "_segment",
-            F.concat(
-                F.lit(f"{self.path}/_partition="),
-                F.col("_partition").cast("string"),
-            ),
+            "coalesce(_headers, '{}') AS _headers",
+            f"concat({_sql_str(self.path + '/_partition=')}, CAST({part} AS STRING))"
+            " AS _segment",
         )
         before = self._data_files()
         (
-            df.repartition("_partition")
-            .sortWithinPartitions("_partition", "_offset")
+            df.sortWithinPartitions("_partition", "_offset")
             .write.mode("append")
             .partitionBy("_partition")
             .parquet(self.path)

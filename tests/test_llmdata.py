@@ -496,6 +496,10 @@ def test_min_labels_driver_and_distributed_paths_agree(spark, monkeypatch):
             [("zz", "ab"), ("ab", "Z9"), ("m", "n")],
             "doc_a: string, doc_b: string",
         ),
+        # rep-graph shape: self rows, one of them on an id that also pairs
+        spark.createDataFrame(
+            [(5, 5), (3, 4), (4, 9), (4, 4), (7, 2)], "doc_a: long, doc_b: long"
+        ),
     ]
     for pairs in cases:
         fast = sorted(
@@ -507,6 +511,20 @@ def test_min_labels_driver_and_distributed_paths_agree(spark, monkeypatch):
         )
         monkeypatch.undo()
         assert fast == dist and len(fast) > 0
+
+
+def test_driver_min_labels_takes_self_rows_and_one_direction(spark):
+    """The shared union-find reads undirected pairs as they come from a
+    rep graph: each pair once, self rows (x, x) included. A self row
+    makes its id a node of its own component; a self row on an id that
+    also pairs elsewhere changes nothing."""
+    from platform_spark.llmdata.clusters import _driver_min_labels
+
+    pairs = spark.createDataFrame(
+        [(5, 5), (3, 4), (4, 9), (4, 4), (7, 2)], "src: long, dst: long"
+    )
+    got = sorted(map(tuple, _driver_min_labels(pairs).collect()))
+    assert got == [(2, 2), (3, 3), (4, 3), (5, 5), (7, 2), (9, 3)]
 
 
 def test_long_ids_trip_byte_gate_before_edge_gate(spark, monkeypatch):
@@ -715,9 +733,10 @@ def test_curate_corpus_stages_read_the_passing_checkpoint(spark, docs):
 
 
 def test_curate_corpus_build_runs_the_passing_checkpoint(spark, docs, monkeypatch):
-    """Building the outputs materializes the passing set: with the cluster
-    step (which resolves its components eagerly) stubbed out, the build
-    still runs a Spark job."""
+    """Building the outputs materializes the passing set (the eager
+    scored boundary it filters): with the cluster step (which resolves
+    its components eagerly) stubbed out, the build still runs a Spark
+    job."""
     from platform_spark.llmdata import clusters
     from platform_spark.llmdata.pipeline import curate_corpus
     from tests.conftest import jobs_run
@@ -733,6 +752,39 @@ def test_curate_corpus_build_runs_the_passing_checkpoint(spark, docs, monkeypatc
     j0 = jobs_run(spark)
     curate_corpus(_pipeline_corpus(spark, docs), bench=None)
     assert jobs_run(spark) > j0
+
+
+def test_curate_corpus_job_counts(spark, docs):
+    """The build runs at most 20 Spark jobs (the scored boundary, the
+    rep graph, the label resolution and the map stages of the cluster
+    and dedup boundaries), and forcing the
+    six outputs a curation pass writes runs at most 8: quality, the
+    clusters output and the drop report read the scored and cluster-label
+    checkpoints instead of recomputing cleaning, quality or the label
+    expansion."""
+    from platform_spark.llmdata.pipeline import curate_corpus, drop_report
+    from tests.conftest import jobs_run
+
+    corpus = _pipeline_corpus(spark, docs)
+    j0 = jobs_run(spark)
+    out = curate_corpus(corpus, bench=None)
+    out["drop_report"] = drop_report(out)
+    j1 = jobs_run(spark)
+    for name in ("cleaned", "quality", "clusters", "curated", "packed", "drop_report"):
+        out[name].write.format("noop").mode("overwrite").save()
+    j2 = jobs_run(spark)
+    assert j1 - j0 <= 20, j1 - j0
+    assert j2 - j1 <= 8, j2 - j1
+
+
+def _held_rdd_sites(sc) -> list[str]:
+    """Each persisted RDD still registered, with the call site that
+    created it."""
+    rdds = sc._jsc.sc().getPersistentRDDs().values().toList()
+    return [
+        f"{r.toString()} @ {r.getCreationSite()}"
+        for r in (rdds.apply(i) for i in range(rdds.size()))
+    ]
 
 
 def test_curate_corpus_passes_pin_no_blocks(spark, docs):
@@ -772,7 +824,7 @@ def test_curate_corpus_passes_pin_no_blocks(spark, docs):
             if held <= before or time.monotonic() > deadline:
                 break
             time.sleep(0.5)
-        assert held <= before
+        assert held <= before, _held_rdd_sites(sc)
 
 
 def test_repetition_metrics_known_values(spark):
@@ -904,6 +956,132 @@ def test_rep_pairs_match_expanded_pairs(spark):
     }
     # the triple contributes C(3,2)=3 intra pairs + 3 cross pairs to doc 2
     assert full.count() == 6
+
+
+def _per_side_join_rep_pairs(df, k=3, stop_shingle_df=0.2):
+    """The n-gram rep-pair join assembled the per-side way: an exploded
+    shingle table, a sizes aggregate, and size and copy-count joins onto
+    each side — (rep_a, rep_b, n_common, n_a, n_b, n_copies_a, n_copies_b),
+    the reference the one-relation build must reproduce."""
+    _, counts = D._collapse(df, D._text_hash("text"), "doc_id")
+    rep_docs = D._rep_docs(
+        df, counts, "doc_id", F.col("text").alias("__text"), "n_copies"
+    )
+    sh = D._shingle_table(rep_docs, "__text", "doc_id", k, "n_copies").select(
+        "doc_id", "n_copies", D.md5_int(F.col("shingle")).alias("sh")
+    )
+    sizes = D._shingle_counts(sh)
+    hot = (
+        sh.groupBy("sh")
+        .agg(F.sum("n_copies").alias("df_"))
+        .crossJoin(df.select(F.count("*").alias("__n")))
+        .filter(F.col("df_") > F.col("__n") * stop_shingle_df)
+        .select("sh")
+    )
+    idx = sh.select("doc_id", "sh").join(hot, "sh", "left_anti")
+    a, b = idx.alias("a"), idx.alias("b")
+    common = (
+        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("rep_a"), F.col("b.doc_id").alias("rep_b"))
+        .agg(F.count("*").alias("n_common"))
+    )
+    cross = D._attach_sizes(common, "rep_a", "rep_b", sizes, sizes, "n_a", "n_b")
+    surv = idx.groupBy("doc_id").agg(F.count("*").alias("n_idx"))
+    selfs = D._self_rows(
+        counts,
+        "rep_id",
+        F.col("n_idx").alias("n_common"),
+        F.col("n_sh").alias("n_a"),
+        F.col("n_sh").alias("n_b"),
+        sides=(surv, sizes),
+    )
+    return D._with_copy_counts(
+        cross.unionByName(selfs), counts, "n_common", "n_a", "n_b"
+    )
+
+
+def test_ngram_rep_pairs_equal_the_per_side_join(spark):
+    """The one-relation n-gram build (sizes from the shingle array, copy
+    counts carried through the self-join key, self rows from one index
+    aggregate) returns the per-side join's rows at threshold 0, for
+    Jaccard and containment alike: near-dups, an exact triple, exact
+    copies whose every shingle is hot (no self row), a doc with no
+    shingles, and a NULL-text pair."""
+    hot = "alpha beta gamma"
+    rows = (
+        [(1, f"{hot} one two three four five six seven"),
+         (2, f"{hot} one two three four five six eight"),
+         (3, f"{hot} one two nine ten")]
+        + [(i, f"{hot} unique nine ten eleven twelve") for i in (10, 11, 12)]
+        + [(i, hot) for i in range(20, 29)]          # all-hot exact copies
+        + [(30, "tiny doc")]                         # no shingles
+        + [(40, None), (41, None)]
+    )
+    df = spark.createDataFrame(rows, "doc_id: long, text: string")
+    ref = _per_side_join_rep_pairs(df)
+    assert ref.filter("rep_a = 20").count() == 0     # the all-hot case bites
+
+    def ratio(n):
+        return F.round(F.col("n_common").cast("double") / F.col(n).cast("double"), 6)
+
+    jac_ref = ref.select(
+        "rep_a", "rep_b", "n_common", "n_a", "n_b",
+        F.round(
+            F.col("n_common").cast("double")
+            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
+            6,
+        ).alias("jaccard"),
+        "n_copies_a", "n_copies_b",
+    )
+    ctn_ref = ref.select(
+        "rep_a", "rep_b", "n_common", "n_a", "n_b",
+        ratio("n_a").alias("containment_ab"), ratio("n_b").alias("containment_ba"),
+        "n_copies_a", "n_copies_b",
+    )
+    for got, want in (
+        (D.ngram_jaccard_rep_pairs(df, threshold=0.0), jac_ref),
+        (D.ngram_containment_rep_pairs(df, threshold=0.0), ctn_ref),
+    ):
+        assert got.columns == want.columns
+        got_rows = sorted(map(tuple, got.collect()))
+        assert got_rows == sorted(map(tuple, want.collect()))
+        # the triple: 6 shingles, 5 outside the hot one
+        assert (10, 10, 5, 6, 6) in {r[:5] for r in got_rows}
+
+
+def test_fast_clusters_distributed_path_matches_driver_path(spark, monkeypatch):
+    """With both driver caps at 0, the rep-graph cluster step resolves
+    through the distributed propagation (cross pairs, self rows joined
+    after) and returns the driver union-find's clusters."""
+    import platform_spark.llmdata.clusters as cl
+
+    hot = "alpha beta gamma"
+    text = spark.createDataFrame(
+        [(1, f"{hot} one two three four five six seven"),
+         (2, f"{hot} one two three four five six eight"),
+         (3, "completely different words about nothing shared here")]
+        + [(i, f"{hot} unique nine ten eleven twelve") for i in (10, 11, 12)],
+        "doc_id: long, text: string",
+    )
+    base = [0.5, -0.25, 1.0, 0.0, 0.75, -0.5, 0.25, 1.5]
+    vecs = spark.createDataFrame(
+        [(1, base), (2, list(base)), (3, [x * 1.01 + 0.001 for x in base]),
+         (30, [float(i) for i in range(8)])],
+        "vec_id: long, embedding: array<float>",
+    )
+    runs = (
+        # 6 docs: the default hot cutoff would blacklist every shared shingle
+        lambda: cl.dedup_clusters_fast(text, threshold=0.2, stop_shingle_df=0.9),
+        lambda: cl.embedding_clusters_fast(vecs, threshold=0.9),
+    )
+    for run in runs:
+        driver = sorted(map(tuple, run().collect()))
+        with monkeypatch.context() as m:
+            m.setattr(cl, "_DRIVER_CC_MAX_EDGES", 0)
+            m.setattr(cl, "_DRIVER_CC_MAX_BYTES", 0)
+            m.setattr(cl, "_driver_min_labels", None)  # a call would fail
+            dist = sorted(map(tuple, run().collect()))
+        assert dist == driver and any(not keep for _, _, keep in driver)
 
 
 def test_embedding_clusters_fast_equals_pairwise(spark):

@@ -488,6 +488,62 @@ def test_sessionize_stream_watermark_flush(spark, tmp_path):
     assert all(k != "u2" for k, _, _ in got)
 
 
+def test_topic_writer_append_builds_one_projection(spark, tmp_path, monkeypatch):
+    """An append builds its write plan from one projection: a 100-record
+    append makes at most 100 py4j round trips in all (the column-by-column
+    build made 560+ before the write was even called), the plan holds one
+    exchange, and a topic name and path that need SQL escaping land as
+    written, in the offsets' and the out-of-range error's text alike."""
+    import threading
+
+    import py4j.clientserver
+    import pyspark.sql.readwriter as rw
+
+    from platform_spark.streaming.ingest import _sql_str
+
+    for s in ("it's", "a\\b", "\\'", "{}"):
+        assert spark.range(1).selectExpr(f"{_sql_str(s)} AS v").first().v == s
+    topic = "it's q"
+    w = TopicWriter(spark, str(tmp_path / "r'oot"), topic)
+    recs = _records(spark, 100)
+    written = []
+    real_parquet = rw.DataFrameWriter.parquet
+
+    def capture(self, path, *a, **k):
+        written.append(self._df)
+        return real_parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(rw.DataFrameWriter, "parquet", capture)
+    calls = []
+    real_send = py4j.clientserver.ClientServerConnection.send_command
+    me = threading.get_ident()
+
+    def counting(self, command):
+        # this thread only: py4j's finalizer thread releases garbage
+        # JVM references concurrently
+        if threading.get_ident() == me:
+            calls.append(1)
+        return real_send(self, command)
+
+    monkeypatch.setattr(
+        py4j.clientserver.ClientServerConnection, "send_command", counting
+    )
+    hwm = w.append(recs)
+    n_calls = len(calls)
+    monkeypatch.undo()
+    assert n_calls <= 100, n_calls
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1
+    assert sum(hwm.values()) == 100
+    df = w.read()
+    assert {r["_topic"] for r in df.select("_topic").collect()} == {topic}
+    seg = {r["_segment"] for r in df.filter("_partition = 1").select("_segment").collect()}
+    assert seg == {f"{w.path}/_partition=1"}
+    w2 = TopicWriter(spark, str(tmp_path / "r2"), topic, n_partitions=2)
+    with pytest.raises(Exception, match="out of range for topic \"it's"):
+        w2.append(_records(spark, 10))
+
+
 def test_topic_writer_rejects_out_of_range_partition(spark, tmp_path):
     # records carry _partition 0..3; a 2-partition topic must refuse them
     # loudly, never write NULL offsets
@@ -888,6 +944,60 @@ def test_curate_stream_decontam_filter_tokenizes_once(spark, tmp_path):
     ]
     assert len(conds) == 1
     assert conds[0].count("split(trim(lower(") == 1
+
+
+def test_curate_stream_filter_binds_cleaned_text_once(spark, tmp_path):
+    """The micro-batch filter holds the cleaned-text expression (line
+    filter plus the PII rewrites) and the quality word array ONCE each:
+    both are lambda-bound, so pushing the filter below the projection
+    that defines `text` substitutes one copy, not one per reference."""
+    from datetime import datetime
+
+    import pandas as pd
+
+    from platform_spark.llmdata.cleaning import PII_PATTERNS
+    from platform_spark.streaming.curate import curate_stream
+
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": [1],
+                "_ts": [datetime(2024, 1, 1)],
+                "text": ["alpha bravo charlie delta echo foxtrot golf hotel india"],
+            }
+        )
+    ).write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    q = (
+        curate_stream(stream, bench_hashes=[1, 2, 3], k=8)
+        .writeStream.format("memory")
+        .queryName("curate_bind_probe")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    def nodes(p):
+        yield p
+        kids = p.children()
+        for i in range(kids.size()):
+            yield from nodes(kids.apply(i))
+
+    plan = q._jsq.streamingQuery().lastExecution().optimizedPlan()
+    conds = [
+        n.condition().toString()
+        for n in nodes(plan)
+        if n.getClass().getSimpleName() == "Filter"
+    ]
+    assert len(conds) == 1
+    cond = conds[0]
+    assert cond.count("split(trim(coalesce(") == 1  # quality word array
+    # one line split; one regexp_replace per PII pattern plus the line
+    # rule's symbol count
+    assert cond.count("split(text") == 1
+    assert cond.count("regexp_replace(") == len(PII_PATTERNS) + 1
 
 
 def test_curate_stream_end_to_end(spark, tmp_path):
