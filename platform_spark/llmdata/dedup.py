@@ -146,34 +146,37 @@ class RepGraph(NamedTuple):
 
     membership: (doc_id, rep_id) — every doc mapped to the min doc id of
       its exact-duplicate group.
-    counts: (rep_id, n_copies).
     pairs: scored rep-level pairs (rep_a, rep_b, ..., n_copies_a,
       n_copies_b); a SELF row (rep_a == rep_b) means the content's copies
       pair with each other in the equivalent all-docs run.
     """
 
     membership: DataFrame
-    counts: DataFrame
     pairs: DataFrame
 
 
-def _collapse(df: DataFrame, content_hash: Column, id_col: str) -> tuple[DataFrame, DataFrame]:
-    """(membership, counts) for exact-duplicate groups under content_hash.
+def _reps(df: DataFrame, key: Column, id_col: str, *values: str) -> DataFrame:
+    """The rep relation (key, rep_id, n_copies, *values): one row per
+    distinct `key` with its smallest id, its copy count and the rep's
+    `values`, from ONE aggregate — so a family signs, fingerprints or
+    shingles each content once without joining the input back, and
+    carries n_copies on from there. A NULL key is a group of its own;
+    callers that must drop NULL contents filter first."""
+    return df.groupBy(key).agg(
+        F.min(id_col).alias("rep_id"),
+        F.count("*").alias("n_copies"),
+        *[F.min_by(v, id_col).alias(v) for v in values],
+    )
 
-    Deliberately no reuse barrier: the outputs have 2-4 plan references,
-    but materializing them costs more than the repeated references save
-    (interleaved A/B with caches cleared between runs: mh_p med 4.33 s
-    with a barrier vs 3.77 s without, ddj/dcf/ctn equal or slightly
-    better). The references stay cheap because the collapse aggregate is
-    one exchange that Spark's exchange reuse dedups within the plan."""
-    hashes = df.select(F.col(id_col).alias("doc_id"), content_hash.alias("__ch"))
-    reps = hashes.groupBy("__ch").agg(
-        F.min("doc_id").alias("rep_id"), F.count("*").alias("n_copies")
-    )
-    membership = hashes.join(reps.select("__ch", "rep_id"), "__ch").select(
-        "doc_id", "rep_id"
-    )
-    return membership, reps.select("rep_id", "n_copies")
+
+def _collapse(df: DataFrame, key: Column, id_col: str) -> DataFrame:
+    """(doc_id, rep_id) membership of the exact-duplicate groups under
+    `key` (the rep relation's min id joined back to every doc). No reuse
+    barrier: the aggregate is one exchange that exchange reuse shares
+    with the other references in the plan."""
+    hashes = df.select(F.col(id_col).alias("doc_id"), key.alias("__ch"))
+    reps = _reps(hashes, F.col("__ch"), "doc_id").select("__ch", "rep_id")
+    return hashes.join(reps, "__ch").select("doc_id", "rep_id")
 
 
 def expand_pairs(
@@ -236,61 +239,17 @@ def _text_hash(text_col: str) -> Column:
     return F.md5(F.col(text_col).cast("binary"))
 
 
-def _rep_docs(
-    df: DataFrame, counts: DataFrame, id_col: str, value: Column, *carry: str
-) -> DataFrame:
-    """(doc_id, value, *carry) for the rep doc of every distinct content —
-    the frame a family signs or fingerprints once per content; `carry`
-    names `counts` columns to bring along."""
-    return df.select(F.col(id_col).alias("doc_id"), value).join(
-        counts.select(F.col("rep_id").alias("doc_id"), *carry), "doc_id"
-    )
-
-
-def _self_rows(
-    reps: DataFrame, rep_col: str, *cols: Column, sides: tuple[DataFrame, ...] = ()
-) -> DataFrame:
-    """A SELF row (rep_a == rep_b, then `cols`) for every content of
-    `reps` with n_copies >= 2: its copies pair with each other in the
-    equivalent all-docs run. `sides` are per-doc frames keyed by doc_id
-    that `cols` read from (joined after the copy filter)."""
-    dup = reps.filter(F.col("n_copies") >= 2)
-    for side in sides:
-        dup = dup.join(side.withColumnRenamed("doc_id", rep_col), rep_col)
-    return dup.select(
-        F.col(rep_col).alias("rep_a"), F.col(rep_col).alias("rep_b"), *cols
-    )
-
-
-def _with_copy_counts(scored: DataFrame, counts: DataFrame, *cols: str) -> DataFrame:
-    """(rep_a, rep_b, *cols, n_copies_a, n_copies_b): scored rep pairs
-    with each side's copy count attached from `counts`."""
-    ca = counts.select(
-        F.col("rep_id").alias("rep_a"), F.col("n_copies").alias("n_copies_a")
-    )
-    cb = counts.select(
-        F.col("rep_id").alias("rep_b"), F.col("n_copies").alias("n_copies_b")
-    )
-    return (
-        scored.join(ca, "rep_a")
-        .join(cb, "rep_b")
-        .select("rep_a", "rep_b", *cols, "n_copies_a", "n_copies_b")
-    )
-
-
-def _min_id_reps(docs: DataFrame, hash_col: str, id_out: str) -> DataFrame:
-    """(hash_col, id_out, __t): one row per distinct non-NULL text of a
-    (doc_id, __t) frame, represented by its smallest doc id — min(struct)
-    keeps the rep's text without a join back."""
-    return (
-        docs.filter(F.col("__t").isNotNull())
-        .groupBy(F.md5(F.col("__t")).alias(hash_col))
-        .agg(F.min(F.struct("doc_id", "__t")).alias("__m"))
-        .select(
-            hash_col,
-            F.col("__m.doc_id").alias(id_out),
-            F.col("__m.__t").alias("__t"),
-        )
+def _self_rows(reps: DataFrame, rep_col: str, *cols: Column) -> DataFrame:
+    """A SELF row (rep_a == rep_b, `cols`, n_copies_a, n_copies_b) for
+    every content of the rep relation `reps` with n_copies >= 2: its
+    copies pair with each other in the equivalent all-docs run. A content
+    whose every copy has a NULL id has no rep, so no self row either."""
+    return reps.filter((F.col("n_copies") >= 2) & F.col(rep_col).isNotNull()).select(
+        F.col(rep_col).alias("rep_a"),
+        F.col(rep_col).alias("rep_b"),
+        *cols,
+        F.col("n_copies").alias("n_copies_a"),
+        F.col("n_copies").alias("n_copies_b"),
     )
 
 
@@ -349,51 +308,36 @@ def _within_hamming(cand: DataFrame, a: str, b: str, max_hamming: int) -> DataFr
 
 
 def _bucket_candidates(left: DataFrame, right: DataFrame) -> DataFrame:
-    """(left_id, right_id) distinct pairs across two (doc_id, band,
-    bucket) tables sharing any band bucket — the two-table form of the
-    banded join."""
+    """(left_id, *left carried, right_id, *right carried) distinct pairs
+    across two (doc_id, band, bucket, *carried) tables sharing any band
+    bucket — the two-table form of the banded join; each side's other
+    columns (its shingle count) ride along."""
     return (
         left.withColumnRenamed("doc_id", "left_id")
         .join(right.withColumnRenamed("doc_id", "right_id"), ["band", "bucket"])
-        .select("left_id", "right_id")
+        .drop("band", "bucket")
         .distinct()
     )
 
 
-def _shingle_counts(sh: DataFrame) -> DataFrame:
-    """(doc_id, n_sh) from a (doc_id, sh) shingle index."""
-    return sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-
-
-def _attach_sizes(
-    common: DataFrame, a: str, b: str, size_a: DataFrame, size_b: DataFrame,
-    n_a: str, n_b: str,
-) -> DataFrame:
-    """(a, b, n_common, n_a, n_b): each side's (doc_id, n_sh) shingle
-    count attached to a (a, b, n_common) pair table."""
-    sa = size_a.select(F.col("doc_id").alias(a), F.col("n_sh").alias(n_a))
-    sb = size_b.select(F.col("doc_id").alias(b), F.col("n_sh").alias(n_b))
-    return common.join(sa, a).join(sb, b)
-
-
 def _candidate_overlap(
-    cand: DataFrame, a: str, b: str, sh_a: DataFrame, sh_b: DataFrame,
-    size_a: DataFrame, size_b: DataFrame, n_a: str, n_b: str,
+    cand: DataFrame, a: str, b: str, sh_a: DataFrame, sh_b: DataFrame
 ) -> DataFrame:
-    """(a, b, n_common, n_a, n_b) for the candidate pairs (a, b): each
+    """(*cand columns, n_common) for the candidate pairs (a, b): each
     side's (doc_id, sh) index joins THROUGH the candidate list, so common
     shingles cost O(|candidates| x avg shingles) — never the
-    all-shared-shingle-pairs blowup of a full inverted join."""
-    common = (
+    all-shared-shingle-pairs blowup of a full inverted join. The
+    candidates' carried columns (sizes, copy counts) ride the grouping
+    key."""
+    return (
         cand.join(sh_a.select(F.col("doc_id").alias(a), F.col("sh").alias("__sh_a")), a)
         .join(
             sh_b.select(F.col("doc_id").alias("__b"), F.col("sh").alias("__sh_b")),
             (F.col(b) == F.col("__b")) & (F.col("__sh_a") == F.col("__sh_b")),
         )
-        .groupBy(a, b)
+        .groupBy(*cand.columns)
         .agg(F.count("*").alias("n_common"))
     )
-    return _attach_sizes(common, a, b, size_a, size_b, n_a, n_b)
 
 
 def _jaccard_at_least(
@@ -441,14 +385,12 @@ def ngram_jaccard_rep_graph(
     dropped from the index only — they generate quadratic candidates but
     barely move Jaccard; sizes keep them, so scores stay exact).
     """
-    membership, counts, pairs = _ngram_rep_common(
-        df, text_col, id_col, k, stop_shingle_df
-    )
+    membership, pairs = _ngram_rep_common(df, text_col, id_col, k, stop_shingle_df)
     scored = _jaccard_at_least(pairs, threshold, "n_a", "n_b").select(
         "rep_a", "rep_b", "n_common", "n_a", "n_b", "jaccard",
         "n_copies_a", "n_copies_b",
     )
-    return RepGraph(membership, counts, scored)
+    return RepGraph(membership, scored)
 
 
 def _ngram_rep_common(
@@ -457,17 +399,17 @@ def _ngram_rep_common(
     id_col: str,
     k: int,
     stop_shingle_df: float,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame]:
     """Shared core of the shingle-overlap family (Jaccard AND containment):
     exact-collapse, inverted-index join on distinct contents, copy-weighted
-    hot-shingle cutoff. Returns (membership, counts, pairs) where pairs
+    hot-shingle cutoff. Returns (membership, pairs) where pairs
     carry rep_a, rep_b, n_common, n_a, n_b, n_copies_a and n_copies_b —
     common counts over index-surviving shingles, sizes over ALL shingles;
     the scorer on top decides the similarity definition."""
     membership = content_membership(df, text_col, id_col)
-    # ONE rep relation (rep_id, n_copies, n_sh, sh): one aggregate per
-    # distinct content picks the rep (min id) and its text, then a single
-    # row-wise tokenize -> shingle -> md5_int pass hashes it. n_sh is the
+    # ONE rep relation (rep_id, n_copies, n_sh, sh): the _reps aggregate
+    # picks the rep (min id) and its text, then a single row-wise
+    # tokenize -> shingle -> md5_int pass hashes it. n_sh is the
     # array's size, so sizes need no aggregate, and n_sh / n_copies ride
     # the explode into the index and through the candidate self-join's
     # grouping key instead of joining back per side. Each select binds
@@ -476,13 +418,8 @@ def _ngram_rep_common(
     # it through a different exchange, so exchange reuse cannot share the
     # pass.
     reps = (
-        df.groupBy(_text_hash(text_col).alias("__ch"))
-        .agg(
-            F.min(id_col).alias("rep_id"),
-            F.count("*").alias("n_copies"),
-            F.min_by(text_col, id_col).alias("__text"),
-        )
-        .select("rep_id", "n_copies", tokens(F.lower(F.col("__text"))).alias("__toks"))
+        _reps(df, _text_hash(text_col).alias("__ch"), id_col, text_col)
+        .select("rep_id", "n_copies", tokens(F.lower(F.col(text_col))).alias("__toks"))
         .select(
             "rep_id",
             "n_copies",
@@ -493,7 +430,6 @@ def _ngram_rep_common(
         .select("rep_id", "n_copies", F.size("sh").cast("bigint").alias("n_sh"), "sh")
         .localCheckpoint(eager=False)
     )
-    counts = reps.select("rep_id", "n_copies")
     # a content whose every copy has a NULL id has no rep doc: its copies
     # count towards the doc count but shingle nothing
     sh = reps.filter(F.col("rep_id").isNotNull()).select(
@@ -534,7 +470,7 @@ def _ngram_rep_common(
         )
         .agg(F.count("*").alias("n_common"))
     )
-    return membership, counts, pairs
+    return membership, pairs
 
 
 def ngram_containment_rep_pairs(
@@ -560,7 +496,7 @@ def ngram_containment_rep_pairs(
     cutoff — output ~linear in distinct contents; expand with
     `expand_containment_pairs` only when the doc-level list is needed.
     """
-    _, _, pairs = _ngram_rep_common(df, text_col, id_col, k, stop_shingle_df)
+    _, pairs = _ngram_rep_common(df, text_col, id_col, k, stop_shingle_df)
 
     def ratio(n: str) -> Column:
         return F.round(F.col("n_common").cast("double") / F.col(n).cast("double"), 6)
@@ -622,7 +558,7 @@ def content_membership(
 ) -> DataFrame:
     """(doc_id, rep_id) map for exact text duplicates — the expansion side
     of ngram_jaccard_rep_pairs."""
-    return _collapse(df, _text_hash(text_col), id_col)[0]
+    return _collapse(df, _text_hash(text_col), id_col)
 
 
 def ngram_jaccard_pairs(
@@ -690,22 +626,34 @@ def _sig_aggs(num_perm: int) -> list[Column]:
     ]
 
 
-def _hashed_shingles(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
-    """(doc_id, sh, h1, h2) — the verify hash and both signature base
-    hashes from ONE tokenize+shingle+explode pass (r15: the rep-graph /
-    index paths previously shingled the same frame twice, once inside
-    `minhash_signatures` and once for the verify shingle index)."""
-    return _shingle_table(df, text_col, id_col, k).select(
+def _hashed_shingles(
+    df: DataFrame, text_col: str, id_col: str, k: int, *carry: str
+) -> DataFrame:
+    """(doc_id, *carry, sh, h1, h2) — the verify hash and both signature
+    base hashes from ONE tokenize+shingle+explode pass, which feeds the
+    signature aggregate and the verify shingle index alike."""
+    return _shingle_table(df, text_col, id_col, k, *carry).select(
         "doc_id",
+        *carry,
         md5_int(F.col("shingle")).alias("sh"),
         md5_int(F.col("shingle"), seed="h1:", hex_digits=12).alias("h1"),
         md5_int(F.col("shingle"), seed="h2:", hex_digits=12).alias("h2"),
     )
 
 
-def _band_buckets(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
-    """(doc_id, band, bucket) rows from a signature table: each band of the
-    signature hashed to one bucket string."""
+def _signatures(hashed: DataFrame, num_perm: int, *carry: str) -> DataFrame:
+    """(doc_id, *carry, mh_0.., n_sh): the signature aggregate over a
+    `_hashed_shingles` table, with each doc's shingle count (the Jaccard
+    verify's size) taken in the same aggregate. A doc with no shingles
+    has no row."""
+    return hashed.groupBy("doc_id", *carry).agg(
+        *_sig_aggs(num_perm), F.count("*").alias("n_sh")
+    )
+
+
+def _band_buckets(sig: DataFrame, num_perm: int, bands: int, *carry: str) -> DataFrame:
+    """(doc_id, *carry, band, bucket) rows from a signature table: each
+    band of the signature hashed to one bucket string."""
     rows_per_band = num_perm // bands
     # SQL-text struct array (r15, same rationale as simhash_table): one
     # parsed expression instead of ~bands×(struct+md5+concat) py4j calls
@@ -719,8 +667,8 @@ def _band_buckets(sig: DataFrame, num_perm: int, bands: int) -> DataFrame:
             f"md5(CAST(concat_ws('_', {cols}) AS BINARY)))"
         )
     bb = "explode(array(" + ",".join(band_structs) + "))"
-    return sig.select("doc_id", F.expr(bb).alias("bb")).select(
-        "doc_id", "bb.band", "bb.bucket"
+    return sig.select("doc_id", *carry, F.expr(bb).alias("bb")).select(
+        "doc_id", *carry, "bb.band", "bb.bucket"
     )
 
 
@@ -764,38 +712,34 @@ def minhash_rep_graph(
     so common-shingle counting costs O(|candidates| x avg_shingles) —
     never the all-shared-shingle-pairs blowup of a full inverted join.
     """
-    membership, counts = _collapse(df, _text_hash(text_col), id_col)
-    rep_docs = _rep_docs(df, counts, id_col, F.col(text_col).alias("__text"))
-    # ONE combined (sh, h1, h2) projection feeds the signature
-    # aggregate, the sizes aggregate, and both sides of the candidate
-    # verify. No reuse barrier on hashed or sig: interleaved A/B reads
-    # mh_p med 3.84 with both materialized vs 3.30 without, mh_rp 4.20 vs
-    # 3.61. The docs source scans as one split at bench scale, so a
-    # barrier serializes the whole tokenize+hash pass into one task and
-    # every consumer waits on it; without one, the consumers' independent
-    # 1-task map stages run CONCURRENTLY and the band self-join still
+    key = _text_hash(text_col)
+    # ONE combined (sh, h1, h2) projection of the rep relation feeds the
+    # signature aggregate (which also counts each rep's shingles) and both
+    # sides of the candidate verify; n_sh and n_copies ride the band
+    # self-join and the verify's grouping key instead of joining back.
+    # No reuse barrier on hashed or sig: the docs source scans as one
+    # split at bench scale, so a barrier serializes the whole
+    # tokenize+hash pass into one task, while without one the consumers'
+    # independent map stages run concurrently and the band self-join
     # shares its aggregate via exchange reuse.
-    hashed = _hashed_shingles(rep_docs, "__text", "doc_id", k)
-    sig = hashed.groupBy("doc_id").agg(*_sig_aggs(num_perm))
-    cand = minhash_lsh_candidates(sig, num_perm, bands).select(
-        F.col("doc_a").alias("rep_a"), F.col("doc_b").alias("rep_b")
+    hashed = _hashed_shingles(
+        _reps(df, key.alias("__ch"), id_col, text_col), text_col, "rep_id", k, "n_copies"
+    )
+    sig = _signatures(hashed, num_perm, "n_copies")
+    cand = _band_self_join(
+        _band_buckets(sig, num_perm, bands, "n_sh", "n_copies"),
+        "doc_id", "bucket", "rep_a", "rep_b", carry=("n_sh", "n_copies"),
     )
     sh = hashed.select("doc_id", "sh")
-    sizes = _shingle_counts(sh)
-    cross = _candidate_overlap(
-        cand, "rep_a", "rep_b", sh, sh, sizes, sizes, "n_a", "n_b"
-    )
+    # self rows: contents with copies AND a signature (n_sh >= 1)
     selfs = _self_rows(
-        counts,
-        "rep_id",
-        F.col("n_sh").alias("n_common"),
-        F.col("n_sh").alias("n_a"),
-        F.col("n_sh").alias("n_b"),
-        sides=(sizes,),
+        sig, "doc_id", *[F.col("n_sh").alias(c) for c in ("n_common", "n_sh_a", "n_sh_b")]
     )
-    scored = _jaccard_at_least(cross.unionByName(selfs), threshold, "n_a", "n_b")
-    pairs = _with_copy_counts(scored, counts, "jaccard")
-    return RepGraph(membership, counts, pairs)
+    pairs = _jaccard_at_least(
+        _candidate_overlap(cand, "rep_a", "rep_b", sh, sh).unionByName(selfs),
+        threshold, "n_sh_a", "n_sh_b",
+    ).select("rep_a", "rep_b", "jaccard", "n_copies_a", "n_copies_b")
+    return RepGraph(_collapse(df, key, id_col), pairs)
 
 
 def minhash_dedup_rep_pairs(
@@ -867,26 +811,20 @@ def minhash_join(
 
     Output: (left_id, right_id, n_common, n_left, n_right, jaccard).
     """
-    l_docs = left.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
-    r_docs = right.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t"))
     # ONE combined (sh, h1, h2) projection per side (the
-    # minhash_rep_graph recipe) feeds that side's signature aggregate AND
-    # the verify shingle index. No reuse barrier: interleaved A/B reads
-    # one as a wash (med 2.48 with vs 2.29 without), and the plain form
-    # keeps no executor-memory state at any scale. Not widened: a widen
-    # here measured as a small loss.
-    hashed_l = _hashed_shingles(l_docs, "__t", "doc_id", k)
-    hashed_r = _hashed_shingles(r_docs, "__t", "doc_id", k)
-    sig_l = hashed_l.groupBy("doc_id").agg(*_sig_aggs(num_perm))
-    sig_r = hashed_r.groupBy("doc_id").agg(*_sig_aggs(num_perm))
-    cand = _bucket_candidates(
-        _band_buckets(sig_l, num_perm, bands), _band_buckets(sig_r, num_perm, bands)
-    )
-    sh_l = hashed_l.select("doc_id", "sh")
-    sh_r = hashed_r.select("doc_id", "sh")
+    # minhash_rep_graph recipe) feeds that side's signature aggregate,
+    # whose shingle count rides the bucket join as the side's size, AND
+    # the verify shingle index. No reuse barrier: the plain form keeps no
+    # executor-memory state at any scale. Not widened: a widen here
+    # measured as a small loss.
+    hashed, buckets = [], []
+    for side, n in ((left, "n_left"), (right, "n_right")):
+        h = _hashed_shingles(side, text_col, id_col, k)
+        sig = _signatures(h, num_perm).withColumnRenamed("n_sh", n)
+        hashed.append(h.select("doc_id", "sh"))
+        buckets.append(_band_buckets(sig, num_perm, bands, n))
     pairs = _candidate_overlap(
-        cand, "left_id", "right_id", sh_l, sh_r,
-        _shingle_counts(sh_l), _shingle_counts(sh_r), "n_left", "n_right",
+        _bucket_candidates(*buckets), "left_id", "right_id", *hashed
     )
     return _jaccard_at_least(pairs, threshold, "n_left", "n_right").select(
         "left_id", "right_id", "n_common", "n_left", "n_right", "jaccard"
@@ -965,29 +903,25 @@ def build_dedup_index(
     materialized once via ``.save`` for the per-batch incremental path.
     The (k, num_perm, bands) parameters are baked into the tables; probe
     with the same values."""
-    c = corpus.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("__t")
+    # exact-collapse: one rep (smallest id) per distinct non-NULL content.
+    # No reuse barrier on reps/hashed (or the batch side's): the
+    # one-split builds' plain references run concurrently and share
+    # exchanges, where a barrier would serialize them.
+    reps = _reps(
+        corpus.filter(F.col(text_col).isNotNull()),
+        F.md5(F.col(text_col)).alias("content_hash"), id_col, text_col,
     )
-    # exact-collapse: one rep (smallest id) per distinct content.
-    # Deliberately no reuse barrier on reps/hashed (or the batch-side
-    # nreps/hashed_n): one measured as a 22% LOSS (ddi med 5.01 with vs
-    # 3.90 without, interleaved) — the barrier serializes the one-split
-    # builds while the plain references run concurrently and share
-    # exchanges.
-    reps = _min_id_reps(c, "content_hash", "rep_id")
-    hashes = reps.select("content_hash", F.col("rep_id"))
-    rep_docs = reps.select(F.col("rep_id").alias("doc_id"), "__t")
-    # ONE tokenize+shingle+hash plan for all three derived tables (r15):
-    # signatures, the verify shingle index, and the sizes aggregate all
-    # derive from the combined (sh, h1, h2) frame instead of shingling
-    # rep_docs separately. The frame has no reuse barrier (see above), so
-    # each consumer re-evaluates it unless Spark reuses the exchange
-    hashed = _hashed_shingles(rep_docs, "__t", "doc_id", k)
-    sig = hashed.groupBy("doc_id").agg(*_sig_aggs(num_perm))
-    buckets = _band_buckets(sig, num_perm, bands)
-    shingles = hashed.select("doc_id", "sh")
-    sizes = _shingle_counts(shingles)
-    return CorpusDedupIndex(hashes, buckets, shingles, sizes)
+    # ONE tokenize+shingle+hash plan for all three derived tables: the
+    # signature aggregate (which also counts the sizes) and the verify
+    # shingle index derive from the combined (sh, h1, h2) frame
+    hashed = _hashed_shingles(reps, text_col, "rep_id", k)
+    sig = _signatures(hashed, num_perm)
+    return CorpusDedupIndex(
+        reps.select("content_hash", "rep_id"),
+        _band_buckets(sig, num_perm, bands),
+        hashed.select("doc_id", "sh"),
+        sig.select("doc_id", "n_sh"),
+    )
 
 
 def dedup_incremental_report(
@@ -1048,18 +982,26 @@ def dedup_incremental_report(
     # exact-collapse the BATCH side too (a re-crawl is as copy-heavy as
     # the corpus): sign/shingle one rep per distinct remaining content,
     # probe the index, expand the per-content verdict back to every doc
-    nreps = _min_id_reps(rest, "__nh", "doc_id")
+    nreps = _reps(
+        rest.filter(F.col("__t").isNotNull()),
+        F.md5(F.col("__t")).alias("__nh"), "doc_id", "__t",
+    )
     # one combined-hash projection for the batch side too (no reuse
-    # barrier — see build_dedup_index)
-    hashed_n = _hashed_shingles(nreps, "__t", "doc_id", k)
-    sig_n = hashed_n.groupBy("doc_id").agg(*_sig_aggs(num_perm))
-    cand = _bucket_candidates(_band_buckets(sig_n, num_perm, bands), idx.buckets)
-    sh_n = hashed_n.select("doc_id", "sh")
+    # barrier — see build_dedup_index); its shingle count rides the
+    # bucket join, the corpus side's comes from the persisted sizes
+    hashed_n = _hashed_shingles(nreps, "__t", "rep_id", k)
+    sig_n = _signatures(hashed_n, num_perm).withColumnRenamed("n_sh", "n_left")
+    cand = _bucket_candidates(
+        _band_buckets(sig_n, num_perm, bands, "n_left"),
+        idx.buckets.select("doc_id", "band", "bucket"),
+    )
+    sizes = idx.sizes.select(
+        F.col("doc_id").alias("right_id"), F.col("n_sh").alias("n_right")
+    )
     pairs = _jaccard_at_least(
         _candidate_overlap(
-            cand, "left_id", "right_id", sh_n, idx.shingles,
-            _shingle_counts(sh_n), idx.sizes, "n_left", "n_right",
-        ),
+            cand, "left_id", "right_id", hashed_n.select("doc_id", "sh"), idx.shingles
+        ).join(sizes, "right_id"),
         threshold, "n_left", "n_right",
     ).select("left_id", "right_id", "jaccard")
     # order: best jaccard, then SMALLEST corpus id — negate the numeric
@@ -1077,7 +1019,7 @@ def dedup_incremental_report(
     memb = rest.select("doc_id", F.md5(F.col("__t")).alias("__nh"))
     near = (
         near_rep.join(
-            nreps.select("__nh", F.col("doc_id").alias("left_id")), "left_id"
+            nreps.select("__nh", F.col("rep_id").alias("left_id")), "left_id"
         )
         .join(memb, "__nh")
         .select(
@@ -1135,14 +1077,23 @@ def simhash_table(
     per-bit folds reuse it instead of re-hashing (expression-tree
     duplication would cost 60× otherwise). 60-bit portable hash → bits ≤ 60.
     """
+    return _simhash_fps(df, text_col, id_col, bits)
+
+
+def _simhash_fps(
+    df: DataFrame, text_col: str, id_col: str, bits: int, *carry: str
+) -> DataFrame:
+    """(doc_id, *carry, sh): simhash_table with `carry` columns riding
+    the vote aggregate's grouping key."""
     bits = min(bits, 60)
     # not widened: the vote aggregate's own exchange already widens it
     toked = df.select(
         F.col(id_col).alias("doc_id"),
+        *carry,
         F.array_distinct(tokens(F.lower(F.col(text_col)))).alias("toks"),
     )
     hashed = toked.select(
-        "doc_id", F.transform(F.col("toks"), lambda t: md5_int(t)).alias("hs")
+        "doc_id", *carry, F.transform(F.col("toks"), lambda t: md5_int(t)).alias("hs")
     )
     # explode + 60 codegen'd SUM aggregates instead of 60 interpreted
     # array folds (the r13 shape re-walked the hs array once per bit
@@ -1162,8 +1113,8 @@ def simhash_table(
     # latency per query, cProfile-measured); one F.expr per column parses
     # to the same CASE WHEN / sum trees and identical values (the DuckDB
     # oracle pins them)
-    exploded = hashed.select("doc_id", F.explode_outer("hs").alias("h"))
-    sums = exploded.groupBy("doc_id").agg(
+    exploded = hashed.select("doc_id", *carry, F.explode_outer("hs").alias("h"))
+    sums = exploded.groupBy("doc_id", *carry).agg(
         *[
             F.expr(
                 f"sum(CASE WHEN (h & {1 << b}) != 0 THEN 1 ELSE -1 END)"
@@ -1176,7 +1127,7 @@ def simhash_table(
         "ELSE CAST(0 AS BIGINT) END"
         for b in range(bits)
     )
-    return sums.select("doc_id", F.expr(sh_sql).alias("sh"))
+    return sums.select("doc_id", *carry, F.expr(sh_sql).alias("sh"))
 
 
 def simhash(col: Column, bits: int = 64) -> Column:
@@ -1222,20 +1173,25 @@ def simhash_rep_graph(
     fingerprints) so they are always candidates at hamming 0 <= max_hamming;
     the self row carries hamming 0 unconditionally.
     """
-    membership, counts = _collapse(
-        df, F.coalesce(_text_hash(text_col), F.lit("__null__")), id_col
+    key = F.coalesce(_text_hash(text_col), F.lit("__null__"))
+    reps = _reps(df, key.alias("__ch"), id_col, text_col)
+    # banded Hamming join over the reps, copy counts carried through the
+    # fingerprint aggregate and the band self-join. No reuse barrier on
+    # the fingerprints: both aliases of the self-join read the per-bit
+    # partial sums through the same exchange, which exchange reuse shares
+    # (only the per-doc merge runs twice), and a checkpoint measured
+    # slower (OPTIMIZATION_r17.md, intra-query reuse)
+    cand = _chunk_candidates(
+        _simhash_fps(reps, text_col, "rep_id", 60, "n_copies"), "doc_id", "sh",
+        60 // bands, bands, "rep_a", "rep_b", carry=("sh", "n_copies"),
     )
-    rep_docs = _rep_docs(df, counts, id_col, F.col(text_col).alias("__text"))
-    cross = _simhash_banded_pairs(rep_docs, "__text", max_hamming, bands).select(
-        F.col("doc_a").alias("rep_a"), F.col("doc_b").alias("rep_b"), "hamming"
+    cross = _within_hamming(cand, "sh_a", "sh_b", max_hamming).select(
+        "rep_a", "rep_b", "hamming", "n_copies_a", "n_copies_b"
     )
     selfs = _self_rows(
-        counts,
-        "rep_id",
-        F.lit(0).cast(cross.schema["hamming"].dataType).alias("hamming"),
+        reps, "rep_id", F.lit(0).cast(cross.schema["hamming"].dataType).alias("hamming")
     )
-    pairs = _with_copy_counts(cross.unionByName(selfs), counts, "hamming")
-    return RepGraph(membership, counts, pairs)
+    return RepGraph(_collapse(df, key, id_col), cross.unionByName(selfs))
 
 
 def simhash_rep_pairs(
@@ -1273,28 +1229,6 @@ def simhash_dedup_pairs(
     ).select("doc_a", "doc_b", "hamming")
 
 
-def _simhash_banded_pairs(
-    df: DataFrame,
-    text_col: str,
-    max_hamming: int,
-    bands: int,
-) -> DataFrame:
-    """Banded Hamming join over one row per doc (callers pre-collapse).
-
-    No reuse barrier on the fingerprint table: both aliases of the band
-    self-join read the per-bit partial sums through the same exchange,
-    which exchange reuse shares (only the per-doc merge runs twice), and
-    a checkpoint measured slower for both callers (OPTIMIZATION_r17.md,
-    intra-query reuse)."""
-    cand = _chunk_candidates(
-        simhash_table(df, text_col, "doc_id"), "doc_id", "sh", 60 // bands, bands,
-        "doc_a", "doc_b", carry=("sh",),
-    )
-    return _within_hamming(cand, "sh_a", "sh_b", max_hamming).select(
-        "doc_a", "doc_b", "hamming"
-    )
-
-
 # -- embedding near-dup -----------------------------------------------------
 
 
@@ -1328,7 +1262,8 @@ def _sketch_norm_expr(staged: DataFrame, planes: list[list[float]]) -> DataFrame
 
 
 def _sketch_norm_arrow(staged: DataFrame, planes: list[list[float]]) -> DataFrame:
-    """(vid, v, sk, nrm) through one `mapInArrow` batch kernel (r15,
+    """(vid, v, *rest, sk, nrm) of a (vid, v, *rest) frame through one
+    `mapInArrow` batch kernel (r15,
     guide §4.2): the list column's values buffer reshapes to an (n, dim)
     float64 matrix with zero per-row conversion, and both reductions run
     as per-DIMENSION accumulation loops — ``acc[:, p] += v[:, j] *
@@ -1379,9 +1314,8 @@ def _sketch_norm_arrow(staged: DataFrame, planes: list[list[float]]) -> DataFram
                 nrm2 = nrm2 + col * col
             sk = ((acc >= 0).astype(np.int64) << shifts).sum(axis=1)
             yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0),
-                    batch.column(1),
+                batch.columns
+                + [
                     pa.array(sk, type=pa.int64()),
                     pa.array(np.sqrt(nrm2), type=pa.float64()),
                 ],
@@ -1391,15 +1325,33 @@ def _sketch_norm_arrow(staged: DataFrame, planes: list[list[float]]) -> DataFram
     return staged.mapInArrow(run, out_schema)
 
 
+def _hyperplanes(n: int, dim: int) -> list[list[float]]:
+    """n deterministic (md5-seeded) random hyperplanes in [-1, 1)^dim."""
+    import hashlib
+    import struct
+
+    def plane(p: int) -> list[float]:
+        vals = []
+        for i in range(dim):
+            h = hashlib.md5(f"plane-{p}-{i}".encode()).digest()
+            (u,) = struct.unpack(">Q", h[:8])
+            vals.append((u / float(1 << 64)) * 2.0 - 1.0)
+        return vals
+
+    return [plane(p) for p in range(n)]
+
+
 def _lsh_cosine_pairs(
-    staged: DataFrame,  # (vid, v) — v already array<double>
+    staged: DataFrame,  # (vid, v, n_copies) — v already array<double>
     threshold: float,
     n_hyperplanes: int,
     bands: int,
     dim: int,
 ) -> DataFrame:
     """Banded hyperplane-LSH candidate join + exact cosine verify over a
-    staged (vid, v) frame; returns (id_a, id_b, cosine), a < b.
+    staged rep relation (vid, v, n_copies); returns (rep_a, rep_b,
+    cosine, n_copies_a, n_copies_b), a < b, plus a self row for every
+    vector with copies whose self-cosine clears the threshold.
 
     Random-hyperplane LSH (sign sketch) BANDED like MinHash-LSH:
     the n_hyperplanes sign bits split into `bands` bands; vectors sharing ANY
@@ -1414,23 +1366,7 @@ def _lsh_cosine_pairs(
     hold occupancy (and candidate-pair count) roughly constant — the sf1
     rehearsal (COVERAGE.md) shows cost is linear in candidate pairs.
     """
-    from platform_spark.llmdata.similarity import (
-        cosine_prenorm,
-        dot_expr,
-        double_matrix_lit,
-        norm_expr,
-    )
-
-    import hashlib
-    import struct
-
-    def plane(p: int) -> list[float]:
-        vals = []
-        for i in range(dim):
-            h = hashlib.md5(f"plane-{p}-{i}".encode()).digest()
-            (u,) = struct.unpack(">Q", h[:8])
-            vals.append((u / float(1 << 64)) * 2.0 - 1.0)
-        return vals
+    from platform_spark.llmdata.similarity import cosine_prenorm
 
     per = max(1, n_hyperplanes // bands)
     # the norm is hoisted to the per-VECTOR stage: the exact verify
@@ -1441,9 +1377,9 @@ def _lsh_cosine_pairs(
     # O(candidate pairs). Same expression tree on the same doubles ⇒
     # bit-identical cosines (the 6-dp rounding the oracles hash is
     # untouched); measured 1.9x on the ecf verify stage.
-    # checkpointed: `base` feeds both aliases of the band self-join AND
-    # both per-side vector re-joins of the verify — four references, each
-    # of which would otherwise re-run the Python sketch kernel (the
+    # checkpointed: `base` feeds both aliases of the band self-join, both
+    # per-side vector re-joins of the verify and the self rows — each
+    # reference would otherwise re-run the Python sketch kernel (the
     # dominant per-vector cost) plus the norm.
     # Arrow-vectorized staging (guide §4.2): the interpreted
     # transform/aggregate sketch fold cost ~1 ms per VECTOR (16×64
@@ -1451,27 +1387,39 @@ def _lsh_cosine_pairs(
     # per-dimension IEEE left folds batch-wide in numpy — bit-identical
     # sketches and norms (pinned by pytest against the expression form).
     base = _sketch_norm_arrow(
-        staged, [plane(p) for p in range(n_hyperplanes)]
+        staged, _hyperplanes(n_hyperplanes, dim)
     ).localCheckpoint(eager=False)
     # candidate generation works on (id, band, chunk) ONLY — deduping
-    # (id_a, id_b) before vectors are touched keeps the shuffle narrow;
-    # vectors re-join by id afterwards (two hash joins on the id key)
-    cand = _chunk_candidates(base, "vid", "sk", per, bands, "id_a", "id_b")
-    va = base.select(
-        F.col("vid").alias("id_a"), F.col("v").alias("v_a"),
-        F.col("nrm").alias("nrm_a"),
+    # (rep_a, rep_b) before vectors are touched keeps the shuffle narrow;
+    # vectors, norms and copy counts re-join by id afterwards (two hash
+    # joins on the id key)
+    cand = _chunk_candidates(base, "vid", "sk", per, bands, "rep_a", "rep_b")
+    for side in ("a", "b"):
+        cand = cand.join(
+            base.select(
+                *[F.col(c).alias(f"{c}_{side}") for c in ("v", "nrm", "n_copies")],
+                F.col("vid").alias(f"rep_{side}"),
+            ),
+            f"rep_{side}",
+        )
+
+    def cosine(a: str, b: str) -> Column:
+        return F.round(
+            cosine_prenorm(F.col(f"v{a}"), F.col(f"v{b}"), F.col(f"nrm{a}"), F.col(f"nrm{b}")),
+            6,
+        ).alias("cosine")
+
+    # self rows score cosine(v, v) with the same expression: nonzero
+    # copies score ~1.0; a zero-norm vector's self-cosine is NULL and the
+    # threshold filter drops it, as the all-docs run drops its copy pairs
+    selfs = _self_rows(base, "vid", cosine("", ""))
+    return (
+        cand.select(
+            "rep_a", "rep_b", cosine("_a", "_b"), "n_copies_a", "n_copies_b"
+        )
+        .unionByName(selfs)
+        .filter(F.col("cosine") >= threshold)
     )
-    vb = base.select(
-        F.col("vid").alias("id_b"), F.col("v").alias("v_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    cand = cand.join(va, "id_a").join(vb, "id_b")
-    cos = cosine_prenorm(
-        F.col("v_a"), F.col("v_b"), F.col("nrm_a"), F.col("nrm_b")
-    )
-    return cand.select(
-        "id_a", "id_b", F.round(cos, 6).alias("cosine")
-    ).filter(F.col("cosine") >= threshold)
 
 
 def _vector_hash(vec_col: str) -> Column:
@@ -1483,7 +1431,7 @@ def vector_membership(
 ) -> DataFrame:
     """(doc_id, rep_id) map for exact vector duplicates — the expansion
     side of embedding_neardup_rep_pairs."""
-    return _collapse(df, _vector_hash(vec_col), id_col)[0]
+    return _collapse(df, _vector_hash(vec_col), id_col)
 
 
 def embedding_rep_graph(
@@ -1508,32 +1456,16 @@ def embedding_rep_graph(
     self-cosine is NULL and the filter drops it, exactly as the all-docs
     run drops its copy pairs.
     """
-    membership, counts = _collapse(df, _vector_hash(vec_col), id_col)
     if dim is None:  # 1-row probe; pass dim explicitly to save the job
         dim = len(df.select(vec_col).first()[0])
-    from platform_spark.llmdata.similarity import cosine_expr
-
-    rep_docs = _rep_docs(
-        df, counts, id_col,
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
+    key = _vector_hash(vec_col)
+    staged = _reps(df, key.alias("__ch"), id_col, vec_col).select(
+        F.col("rep_id").alias("vid"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
         "n_copies",
     )
-    cross = _lsh_cosine_pairs(
-        rep_docs.select(F.col("doc_id").alias("vid"), F.col("__v").alias("v")),
-        threshold,
-        n_hyperplanes,
-        bands,
-        dim,
-    ).select(
-        F.col("id_a").alias("rep_a"), F.col("id_b").alias("rep_b"), "cosine"
-    )
-    selfs = _self_rows(
-        rep_docs,
-        "doc_id",
-        F.round(cosine_expr(F.col("__v"), F.col("__v")), 6).alias("cosine"),
-    ).filter(F.col("cosine") >= threshold)
-    pairs = _with_copy_counts(cross.unionByName(selfs), counts, "cosine")
-    return RepGraph(membership, counts, pairs)
+    pairs = _lsh_cosine_pairs(staged, threshold, n_hyperplanes, bands, dim)
+    return RepGraph(_collapse(df, key, id_col), pairs)
 
 
 def embedding_neardup_rep_pairs(

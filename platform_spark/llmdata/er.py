@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from platform_spark.llmdata.dedup import _reps
+
 
 def _seg_base(lp: Column, d: int) -> Column:
     return F.floor(lp / F.lit(d + 1)).cast("int")
@@ -65,25 +67,31 @@ def edit_distance_rep_pairs(
     if not 1 <= max_dist <= 5:
         raise ValueError("max_dist must be in 1..5")
     d = max_dist
-    # checkpointed (guide §5 bounded intra-query reuse): the rep table is
-    # referenced from FOUR plan branches (segment index, probe
-    # enumeration, and both per-side copy-count joins). One row per
-    # distinct value, the module's usual bounded-intermediate budget.
+    # the rep relation (one row per distinct value, the value its own
+    # id), checkpointed (guide §5 bounded intra-query reuse): the segment
+    # index and the probe enumeration both read it, and each carries the
+    # copy count on through the candidate join
     reps = (
-        df.filter(F.col(value_col).isNotNull())
-        .filter(F.length(value_col) > d)
-        .groupBy(F.col(value_col).alias("v"))
-        .agg(F.count("*").alias("n_copies"))
+        _reps(
+            df.filter(F.col(value_col).isNotNull()).filter(F.length(value_col) > d),
+            F.col(value_col).alias("v"),
+            value_col,
+        )
+        .select("v", "n_copies")
         .localCheckpoint(eager=False)
     )
 
     # Index side: the d+1 segments of each value, keyed by (own length,
     # segment index, segment text).
     seg_i = F.explode(F.sequence(F.lit(0), F.lit(d))).alias("i")
-    idx = reps.select(F.col("v").alias("va"), F.length("v").alias("la"), seg_i)
+    idx = reps.select(
+        F.col("v").alias("va"), F.length("v").alias("la"),
+        F.col("n_copies").alias("nca"), seg_i,
+    )
     idx = idx.select(
         "va",
         "la",
+        "nca",
         "i",
         F.col("va")
         .substr(_seg_start(F.col("la"), F.col("i"), d) + 1,
@@ -104,10 +112,12 @@ def edit_distance_rep_pairs(
         ]
     )
     probe = reps.select(
-        F.col("v").alias("vb"), F.length("v").alias("lb"), F.explode(combos).alias("c")
+        F.col("v").alias("vb"), F.length("v").alias("lb"),
+        F.col("n_copies").alias("ncb"), F.explode(combos).alias("c"),
     ).select(
         "vb",
         "lb",
+        "ncb",
         (F.col("lb") + F.col("c.dl")).alias("lp"),
         F.col("c.i").alias("i"),
         (_seg_start(F.col("lb") + F.col("c.dl"), F.col("c.i"), d) + F.col("c.o")).alias("p"),
@@ -119,36 +129,32 @@ def edit_distance_rep_pairs(
         & (F.col("p") + F.col("sl") <= F.col("lb"))
     ).select(
         "vb",
+        "ncb",
         F.col("lp").alias("la"),
         "i",
         F.col("vb").substr(F.col("p") + 1, F.col("sl")).alias("seg"),
     )
 
+    # each side's copy count follows its value through the orientation
+    a_first = F.col("va") < F.col("vb")
     cand = (
         idx.join(probe, ["la", "i", "seg"])
         .filter(F.col("va") != F.col("vb"))
         .select(
             F.least("va", "vb").alias("val_a"),
             F.greatest("va", "vb").alias("val_b"),
+            F.when(a_first, F.col("nca")).otherwise(F.col("ncb")).alias("n_copies_a"),
+            F.when(a_first, F.col("ncb")).otherwise(F.col("nca")).alias("n_copies_b"),
         )
         .distinct()
     )
-    verified = cand.select(
+    return cand.select(
         "val_a",
         "val_b",
         F.levenshtein("val_a", "val_b").alias("dist"),
+        "n_copies_a",
+        "n_copies_b",
     ).filter(F.col("dist") <= d)
-    return (
-        verified.join(
-            reps.select(F.col("v").alias("val_a"), F.col("n_copies").alias("n_copies_a")),
-            "val_a",
-        )
-        .join(
-            reps.select(F.col("v").alias("val_b"), F.col("n_copies").alias("n_copies_b")),
-            "val_b",
-        )
-        .select("val_a", "val_b", "dist", "n_copies_a", "n_copies_b")
-    )
 
 
 def expand_value_pairs(

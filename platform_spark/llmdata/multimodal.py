@@ -583,27 +583,20 @@ def dhash_rep_pairs(
 
     from platform_spark.llmdata.dedup import (
         _chunk_candidates,
+        _reps,
         _self_rows,
         _within_hamming,
     )
 
-    groups = fps.groupBy(F.col(fp_col).alias("fp")).agg(
-        F.min(F.col(id_col)).alias("rep"), F.count("*").alias("n_copies")
-    )
+    groups = _reps(fps, F.col(fp_col).alias("fp"), id_col)
     cross = _within_hamming(
         _chunk_candidates(
-            groups, "rep", "fp", bits // bands, bands, "rep_a", "rep_b",
+            groups, "rep_id", "fp", bits // bands, bands, "rep_a", "rep_b",
             carry=("fp", "n_copies"),
         ),
         "fp_a", "fp_b", max_hamming,
     )
-    selfs = _self_rows(
-        groups,
-        "rep",
-        F.lit(0).alias("hamming"),
-        F.col("n_copies").alias("n_copies_a"),
-        F.col("n_copies").alias("n_copies_b"),
-    )
+    selfs = _self_rows(groups, "rep_id", F.lit(0).alias("hamming"))
     return cross.select(
         "rep_a", "rep_b", "hamming", "n_copies_a", "n_copies_b"
     ).unionByName(selfs)
@@ -617,12 +610,9 @@ def dhash_membership(
     b_col="rep_b", to recover the doc-level pair list lazily)."""
     from pyspark.sql import functions as F
 
-    reps = fps.groupBy(F.col(fp_col).alias("fp")).agg(
-        F.min(F.col(id_col)).alias("rep_id")
-    )
-    return fps.join(
-        reps, fps[fp_col] == reps["fp"]
-    ).select(F.col(id_col).alias("doc_id"), "rep_id")
+    from platform_spark.llmdata.dedup import _collapse
+
+    return _collapse(fps, F.col(fp_col), id_col)
 
 
 def fake_resize(content: bytes, width: int, height: int) -> dict:

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -157,7 +158,10 @@ class TopicWriter:
         return counts
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        # the reader takes its path as a Hadoop glob: escape the pattern
+        # characters, or a topic named `c*?` also reads its sibling `cab`
+        # and one named `a[1]` reads nothing
+        return self.spark.read.parquet(re.sub(r"([\\\[\]{}*?])", r"\\\1", self.path))
 
     def compact(self, target_file_bytes: int = 128 * 1024 * 1024) -> int:
         """Segment compaction: rewrite each partition's accumulation of

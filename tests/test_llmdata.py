@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import Column, DataFrame
 
 from platform_spark.llmdata import dedup as D
 from platform_spark.llmdata import multimodal as M
@@ -958,19 +959,97 @@ def test_rep_pairs_match_expanded_pairs(spark):
     assert full.count() == 6
 
 
+# -- the per-side rep-graph assembly ----------------------------------------
+# Each near-dup family used to pick its reps with a collapse aggregate
+# joined back to the input, and attach shingle counts and copy counts by
+# joining them onto each side. The rep-pair tests below rebuild every
+# family that way, with these helpers, as the reference the one-relation
+# build (`dedup._reps`, carried counts) must reproduce.
+
+
+def _collapse(df: DataFrame, content_hash: Column, id_col: str) -> tuple[DataFrame, DataFrame]:
+    """(membership, counts) for exact-duplicate groups under content_hash."""
+    hashes = df.select(F.col(id_col).alias("doc_id"), content_hash.alias("__ch"))
+    reps = hashes.groupBy("__ch").agg(
+        F.min("doc_id").alias("rep_id"), F.count("*").alias("n_copies")
+    )
+    membership = hashes.join(reps.select("__ch", "rep_id"), "__ch").select(
+        "doc_id", "rep_id"
+    )
+    return membership, reps.select("rep_id", "n_copies")
+
+
+def _rep_docs(
+    df: DataFrame, counts: DataFrame, id_col: str, value: Column, *carry: str
+) -> DataFrame:
+    """(doc_id, value, *carry) for the rep doc of every distinct content —
+    the frame a family signs or fingerprints once per content; `carry`
+    names `counts` columns to bring along."""
+    return df.select(F.col(id_col).alias("doc_id"), value).join(
+        counts.select(F.col("rep_id").alias("doc_id"), *carry), "doc_id"
+    )
+
+
+def _self_rows(
+    reps: DataFrame, rep_col: str, *cols: Column, sides: tuple[DataFrame, ...] = ()
+) -> DataFrame:
+    """A SELF row (rep_a == rep_b, then `cols`) for every content of
+    `reps` with n_copies >= 2: its copies pair with each other in the
+    equivalent all-docs run. `sides` are per-doc frames keyed by doc_id
+    that `cols` read from (joined after the copy filter)."""
+    dup = reps.filter(F.col("n_copies") >= 2)
+    for side in sides:
+        dup = dup.join(side.withColumnRenamed("doc_id", rep_col), rep_col)
+    return dup.select(
+        F.col(rep_col).alias("rep_a"), F.col(rep_col).alias("rep_b"), *cols
+    )
+
+
+def _with_copy_counts(scored: DataFrame, counts: DataFrame, *cols: str) -> DataFrame:
+    """(rep_a, rep_b, *cols, n_copies_a, n_copies_b): scored rep pairs
+    with each side's copy count attached from `counts`."""
+    ca = counts.select(
+        F.col("rep_id").alias("rep_a"), F.col("n_copies").alias("n_copies_a")
+    )
+    cb = counts.select(
+        F.col("rep_id").alias("rep_b"), F.col("n_copies").alias("n_copies_b")
+    )
+    return (
+        scored.join(ca, "rep_a")
+        .join(cb, "rep_b")
+        .select("rep_a", "rep_b", *cols, "n_copies_a", "n_copies_b")
+    )
+
+
+def _shingle_counts(sh: DataFrame) -> DataFrame:
+    """(doc_id, n_sh) from a (doc_id, sh) shingle index."""
+    return sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+
+
+def _attach_sizes(
+    common: DataFrame, a: str, b: str, size_a: DataFrame, size_b: DataFrame,
+    n_a: str, n_b: str,
+) -> DataFrame:
+    """(a, b, n_common, n_a, n_b): each side's (doc_id, n_sh) shingle
+    count attached to a (a, b, n_common) pair table."""
+    sa = size_a.select(F.col("doc_id").alias(a), F.col("n_sh").alias(n_a))
+    sb = size_b.select(F.col("doc_id").alias(b), F.col("n_sh").alias(n_b))
+    return common.join(sa, a).join(sb, b)
+
+
 def _per_side_join_rep_pairs(df, k=3, stop_shingle_df=0.2):
     """The n-gram rep-pair join assembled the per-side way: an exploded
     shingle table, a sizes aggregate, and size and copy-count joins onto
     each side — (rep_a, rep_b, n_common, n_a, n_b, n_copies_a, n_copies_b),
     the reference the one-relation build must reproduce."""
-    _, counts = D._collapse(df, D._text_hash("text"), "doc_id")
-    rep_docs = D._rep_docs(
+    _, counts = _collapse(df, D._text_hash("text"), "doc_id")
+    rep_docs = _rep_docs(
         df, counts, "doc_id", F.col("text").alias("__text"), "n_copies"
     )
     sh = D._shingle_table(rep_docs, "__text", "doc_id", k, "n_copies").select(
         "doc_id", "n_copies", D.md5_int(F.col("shingle")).alias("sh")
     )
-    sizes = D._shingle_counts(sh)
+    sizes = _shingle_counts(sh)
     hot = (
         sh.groupBy("sh")
         .agg(F.sum("n_copies").alias("df_"))
@@ -985,9 +1064,9 @@ def _per_side_join_rep_pairs(df, k=3, stop_shingle_df=0.2):
         .groupBy(F.col("a.doc_id").alias("rep_a"), F.col("b.doc_id").alias("rep_b"))
         .agg(F.count("*").alias("n_common"))
     )
-    cross = D._attach_sizes(common, "rep_a", "rep_b", sizes, sizes, "n_a", "n_b")
+    cross = _attach_sizes(common, "rep_a", "rep_b", sizes, sizes, "n_a", "n_b")
     surv = idx.groupBy("doc_id").agg(F.count("*").alias("n_idx"))
-    selfs = D._self_rows(
+    selfs = _self_rows(
         counts,
         "rep_id",
         F.col("n_idx").alias("n_common"),
@@ -995,7 +1074,7 @@ def _per_side_join_rep_pairs(df, k=3, stop_shingle_df=0.2):
         F.col("n_sh").alias("n_b"),
         sides=(surv, sizes),
     )
-    return D._with_copy_counts(
+    return _with_copy_counts(
         cross.unionByName(selfs), counts, "n_common", "n_a", "n_b"
     )
 
@@ -2023,10 +2102,66 @@ def test_chunking_and_collapse_match_python_spec(spark):
         assert got_c[doc_id] == (" ".join(kept), len(w) - len(kept))
 
 
+def _per_side_minhash_rep_pairs(df, k=3, num_perm=32, bands=8):
+    """The MinHash rep graph at threshold 0, assembled per side: rep docs
+    joined back from the collapse counts, a sizes aggregate joined onto
+    each side, self rows joined to the sizes, copy counts joined last."""
+    _, counts = _collapse(df, D._text_hash("text"), "doc_id")
+    rep_docs = _rep_docs(df, counts, "doc_id", F.col("text").alias("__text"))
+    hashed = D._hashed_shingles(rep_docs, "__text", "doc_id", k)
+    sig = hashed.groupBy("doc_id").agg(*D._sig_aggs(num_perm))
+    cand = D.minhash_lsh_candidates(sig, num_perm, bands).toDF("rep_a", "rep_b")
+    sh = hashed.select("doc_id", "sh")
+    sizes = _shingle_counts(sh)
+    cross = _attach_sizes(
+        D._candidate_overlap(cand, "rep_a", "rep_b", sh, sh),
+        "rep_a", "rep_b", sizes, sizes, "n_a", "n_b",
+    )
+    selfs = _self_rows(
+        counts, "rep_id",
+        *[F.col("n_sh").alias(c) for c in ("n_common", "n_a", "n_b")],
+        sides=(sizes,),
+    )
+    scored = D._jaccard_at_least(cross.unionByName(selfs), 0.0, "n_a", "n_b")
+    return _with_copy_counts(scored, counts, "jaccard")
+
+
+def _per_side_simhash_rep_pairs(df, bands=4):
+    """The SimHash rep graph at the widest max_hamming, assembled per
+    side (NULL text is a content of its own)."""
+    key = F.coalesce(D._text_hash("text"), F.lit("__null__"))
+    _, counts = _collapse(df, key, "doc_id")
+    rep_docs = _rep_docs(df, counts, "doc_id", F.col("text").alias("__text"))
+    cand = D._chunk_candidates(
+        D.simhash_table(rep_docs, "__text", "doc_id"), "doc_id", "sh",
+        60 // bands, bands, "rep_a", "rep_b", carry=("sh",),
+    )
+    cross = D._within_hamming(cand, "sh_a", "sh_b", 60).select("rep_a", "rep_b", "hamming")
+    selfs = _self_rows(counts, "rep_id", F.lit(0).alias("hamming"))
+    return _with_copy_counts(cross.unionByName(selfs), counts, "hamming")
+
+
+def _rep_pair_corpus(spark):
+    base = "one two three four five six seven eight nine ten"
+    alt = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+    rows = (
+        [(1, base), (4, base), (7, base)]                 # exact triple
+        + [(2, base.replace("ten", "eleven")), (12, base.replace("ten", "eleven"))]
+        + [(3, alt)]                                      # 1 copy, its near-dup 2
+        + [(5, alt.replace("juliet", "kilo")), (6, alt.replace("juliet", "kilo"))]
+        + [(40, None), (41, None)]                        # NULL text
+        + [(30, "tiny doc"), (31, "tiny doc"), (32, "")]  # no shingles
+        + [(50, "totally different words with no overlap at all here")]
+    )
+    return spark.createDataFrame(rows, "doc_id: long, text: string")
+
+
 def test_minhash_and_simhash_rep_pairs_self_rows(spark):
     """MinHash and SimHash rep graphs: duplicated contents produce a self
-    row (jaccard 1.0 / hamming 0) with correct copy counts, and the
-    expanded full APIs emit every intra-group pair."""
+    row (jaccard 1.0 / hamming 0) with correct copy counts, cross rows
+    carry each side's copy count in either orientation, the rows equal the
+    per-side assembly (MinHash at threshold 0, SimHash at the widest
+    max_hamming), and the expanded full APIs emit every intra-group pair."""
     from platform_spark.llmdata.dedup import (
         minhash_dedup_pairs,
         minhash_dedup_rep_pairs,
@@ -2034,18 +2169,22 @@ def test_minhash_and_simhash_rep_pairs_self_rows(spark):
         simhash_rep_pairs,
     )
 
-    base = "one two three four five six seven eight nine ten"
-    rows = (
-        [(1, base), (4, base), (7, base)]                 # exact triple
-        + [(3, "totally different words with no overlap at all")]
-    )
-    df = spark.createDataFrame(rows, "doc_id: long, text: string")
+    df = _rep_pair_corpus(spark)
+    for got, want in (
+        (minhash_dedup_rep_pairs(df, threshold=0.0), _per_side_minhash_rep_pairs(df)),
+        (simhash_rep_pairs(df, max_hamming=60), _per_side_simhash_rep_pairs(df)),
+    ):
+        assert got.columns == want.columns
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
     mh = {
         (r["rep_a"], r["rep_b"]): (r["jaccard"], r["n_copies_a"], r["n_copies_b"])
         for r in minhash_dedup_rep_pairs(df, threshold=0.1).collect()
     }
     assert mh[(1, 1)] == (1.0, 3, 3)
+    assert mh[(1, 2)][1:] == (3, 2) and mh[(3, 5)][1:] == (1, 2)
+    # no signature, no self row: NULL text and the no-shingle copies
+    assert not {(30, 30), (40, 40)} & set(mh)
     mh_full = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
         for r in minhash_dedup_pairs(df, threshold=0.1).collect()
@@ -2058,12 +2197,71 @@ def test_minhash_and_simhash_rep_pairs_self_rows(spark):
         for r in simhash_rep_pairs(df, max_hamming=12).collect()
     }
     assert sh[(1, 1)] == (0, 3, 3)
+    # every duplicated content pairs, shingles or not: NULL text folds to 0
+    assert sh[(30, 30)] == (0, 2, 2) and sh[(40, 40)] == (0, 2, 2)
     sh_full = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
         for r in simhash_dedup_pairs(df, max_hamming=12).collect()
     }
     assert {(1, 4), (1, 7), (4, 7)} <= set(sh_full)
     assert all(sh_full[p] == 0 for p in [(1, 4), (1, 7), (4, 7)])
+
+
+def _per_side_embedding_rep_pairs(df, threshold, n_hyperplanes=16, bands=4):
+    """The embedding rep graph assembled per side, with the interpreted
+    sketch and cosine expressions: rep vectors joined back from the
+    collapse counts, copy counts joined onto each side."""
+    from platform_spark.llmdata.similarity import cosine_expr
+
+    _, counts = _collapse(df, D._vector_hash("embedding"), "vec_id")
+    rep_docs = _rep_docs(
+        df, counts, "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("v"), "n_copies",
+    )
+    planes = D._hyperplanes(n_hyperplanes, len(df.first()["embedding"]))
+    base = D._sketch_norm_expr(rep_docs.select(F.col("doc_id").alias("vid"), "v"), planes)
+    cand = D._chunk_candidates(
+        base, "vid", "sk", n_hyperplanes // bands, bands, "rep_a", "rep_b"
+    )
+    vecs = rep_docs.select("doc_id", "v")
+    cross = (
+        cand.join(vecs.toDF("rep_a", "v_a"), "rep_a")
+        .join(vecs.toDF("rep_b", "v_b"), "rep_b")
+        .select("rep_a", "rep_b", F.round(cosine_expr(F.col("v_a"), F.col("v_b")), 6).alias("cosine"))
+    )
+    selfs = _self_rows(
+        rep_docs, "doc_id", F.round(cosine_expr(F.col("v"), F.col("v")), 6).alias("cosine")
+    )
+    return _with_copy_counts(
+        cross.unionByName(selfs).filter(F.col("cosine") >= threshold), counts, "cosine"
+    )
+
+
+def test_embedding_rep_pairs_equal_the_per_side_join(spark):
+    """Embedding rep pairs (reps from one aggregate, copy counts carried
+    through the vector re-join, self rows from the sketch checkpoint)
+    equal the per-side assembly: a duplicated triple, a near-dup pair
+    with copies, duplicated zero-norm vectors (NULL self-cosine, no self
+    row even at threshold -1) and an isolated vector."""
+    base = [0.5, -0.25, 1.0, 0.0, 0.75, -0.5, 0.25, 1.5]
+    near = [x * 1.01 + 0.001 for x in base]
+    rows = (
+        [(1, base), (2, list(base)), (3, list(base))]
+        + [(4, near), (8, list(near)), (0, [x * 1.02 for x in base])]
+        + [(5, [0.0] * 8), (6, [0.0] * 8)]
+        + [(7, [float(i) for i in range(8)])]
+    )
+    df = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
+    for thr in (0.9, -1.0):
+        got = D.embedding_neardup_rep_pairs(df, threshold=thr)
+        want = _per_side_embedding_rep_pairs(df, thr)
+        assert got.columns == want.columns
+        got_rows = sorted(map(tuple, got.collect()))
+        assert got_rows == sorted(map(tuple, want.collect()))
+        by_pair = {(r[0], r[1]): r for r in got_rows}
+        assert by_pair[(1, 1)][3:] == (3, 3) and by_pair[(1, 4)][3:] == (3, 2)
+        assert by_pair[(0, 1)][3:] == (1, 3)
+        assert (5, 5) not in by_pair
 
 
 # -- BPE training (llmdata/bpe.py) ------------------------------------------
@@ -2230,6 +2428,60 @@ def test_dhash_rep_pairs_collapse_equality(spark):
                 for y in members[fp_of_rep[b]]:
                     expanded.add((min(x, y), max(x, y)))
     assert expanded == doc
+
+    # fingerprints direct: an exact triple, copy counts in both
+    # orientations (3 -> 2 and 1 -> 2) and NULL fingerprints. The rep
+    # pairs equal the per-side assembly at the widest max_hamming; a NULL
+    # fingerprint's copies keep their self row but have no membership, so
+    # expansion reproduces the doc-level pairs.
+    x, y = 0x00F0F0F0F0F0F0, 0x0F0F0F0F0F0F0F
+    fps = spark.createDataFrame(
+        [(1, x), (2, x), (3, x), (4, x ^ 1), (5, x ^ 1), (6, None), (7, None),
+         (8, y), (9, y ^ 2), (10, y ^ 2), (11, 0x123456789ABCD)],
+        "media_id long, dhash bigint",
+    )
+    for kw in (dict(max_hamming=56, bands=8), {}):
+        got = M.dhash_rep_pairs(fps, **kw)
+        want = _per_side_dhash_rep_pairs(fps, kw.get("max_hamming", 3), kw.get("bands", 4))
+        assert got.columns == want.columns
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    rep = {(r.rep_a, r.rep_b): r for r in M.dhash_rep_pairs(fps).collect()}
+    assert (rep[(1, 1)].n_copies_a, rep[(6, 6)].n_copies_b) == (3, 2)
+    assert (rep[(1, 4)].n_copies_a, rep[(1, 4)].n_copies_b) == (3, 2)
+    assert (rep[(8, 9)].n_copies_a, rep[(8, 9)].n_copies_b) == (1, 2)
+    members = M.dhash_membership(fps)
+    assert sorted(map(tuple, members.collect())) == sorted(
+        map(tuple, _collapse(fps, F.col("dhash"), "media_id")[0].collect())
+    )
+    expanded = D.expand_pairs(
+        M.dhash_rep_pairs(fps).drop("n_copies_a", "n_copies_b"), members
+    ).select("doc_a", "doc_b", "hamming")
+    assert sorted(map(tuple, expanded.collect())) == sorted(
+        map(tuple, M.dhash_pairs(fps).collect())
+    )
+
+
+def _per_side_dhash_rep_pairs(fps, max_hamming, bands, bits=56):
+    """The fingerprint rep pairs as assembled before the shared rep
+    relation: the module's own groups aggregate, self rows selected from
+    it with the copy counts spelled out."""
+    groups = fps.groupBy(F.col("dhash").alias("fp")).agg(
+        F.min(F.col("media_id")).alias("rep"), F.count("*").alias("n_copies")
+    )
+    cross = D._within_hamming(
+        D._chunk_candidates(
+            groups, "rep", "fp", bits // bands, bands, "rep_a", "rep_b",
+            carry=("fp", "n_copies"),
+        ),
+        "fp_a", "fp_b", max_hamming,
+    )
+    selfs = _self_rows(
+        groups, "rep", F.lit(0).alias("hamming"),
+        F.col("n_copies").alias("n_copies_a"), F.col("n_copies").alias("n_copies_b"),
+    )
+    return cross.select(
+        "rep_a", "rep_b", "hamming", "n_copies_a", "n_copies_b"
+    ).unionByName(selfs)
 
 
 def test_audio_fingerprint_near_dup(spark):
@@ -2932,8 +3184,10 @@ def test_edit_distance_rep_pairs_exact_vs_brute(spark):
         "labrador", "labradoor", "lapbrador", "poodle", "noodle",
         "poodles", "terrier", "terriers", "spaniel",
     ]
-    # include copies to exercise n_copies, and a too-short string
-    vals = base + base[:4] + ["ab"]
+    # include copies to exercise n_copies (a triple, and copy counts in
+    # both orientations: 2 -> 3 and 3 -> 2), a too-short string, an empty
+    # string and NULLs
+    vals = base + base[:4] + base[:1] + ["ab", "", None, None]
     df = spark.createDataFrame([(v,) for v in vals], "name string")
     out = edit_distance_rep_pairs(df, "name", max_dist=2).collect()
     got = {(r.val_a, r.val_b): (r.dist, r.n_copies_a, r.n_copies_b) for r in out}
@@ -2951,14 +3205,15 @@ def test_edit_distance_rep_pairs_exact_vs_brute(spark):
                 )
         return dp[len(b)]
 
-    reps = {v: vals.count(v) for v in set(vals) if len(v) > 2}
+    reps = {v: vals.count(v) for v in set(vals) if v is not None and len(v) > 2}
     expect = {}
     for a, b in itertools.combinations(sorted(reps), 2):
         d = lev(a, b)
         if d <= 2:
             expect[(a, b)] = (d, reps[a], reps[b])
     assert got == expect
-    assert ("golden retriefer", "golden retriever") in got
+    assert got[("golden retriefer", "golden retriever")] == (1, 2, 3)
+    assert got[("golden retriever", "golden retrievers")] == (1, 3, 2)
     assert all(a < b for a, b in got)
     with pytest.raises(ValueError):
         edit_distance_rep_pairs(df, "name", max_dist=0)

@@ -544,6 +544,31 @@ def test_topic_writer_append_builds_one_projection(spark, tmp_path, monkeypatch)
         w2.append(_records(spark, 10))
 
 
+def test_topic_writer_round_trip_with_glob_characters(spark, tmp_path):
+    """Topic names holding the reader's glob characters append, read and
+    compact their own rows only: `c*?` must not pick up its sibling
+    `cab`, and `a[1]`, `b{x,y}` and a backslash must resolve at all."""
+    root = str(tmp_path)
+    TopicWriter(spark, root, "cab").append(_records(spark, 5, start=100))
+    for n, topic in enumerate(("it's \\ q", "a[1]", "b{x,y}", "c*?"), start=3):
+        w = TopicWriter(spark, root, topic)
+        w.append(_records(spark, n))
+        w.append(_records(spark, 2, start=n))
+        want = sorted((topic, i) for i in range(n + 2))
+        got = sorted(
+            (r["_topic"], json.loads(r["_value"])["i"])
+            for r in w.read().select("_topic", "_value").collect()
+        )
+        assert got == want, topic
+        w.compact()
+        got = sorted(
+            (r["_topic"], json.loads(r["_value"])["i"])
+            for r in w.read().select("_topic", "_value").collect()
+        )
+        assert got == want, topic
+    assert TopicWriter(spark, root, "cab").read().count() == 5
+
+
 def test_topic_writer_rejects_out_of_range_partition(spark, tmp_path):
     # records carry _partition 0..3; a 2-partition topic must refuse them
     # loudly, never write NULL offsets
